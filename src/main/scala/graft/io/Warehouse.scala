@@ -1,7 +1,10 @@
 package graft.io
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Named-table catalog over a directory of parquet tables — the engine's
   * analog of the reference's BigQuery datasets (every stage materializes its
@@ -21,6 +24,24 @@ class Warehouse(val spark: SparkSession, val root: String) {
 
   private def fs(p: Path) = p.getFileSystem(spark.sessionState.newHadoopConf())
 
+  // schema of each table as [[write]] last swapped it in: a read that passes
+  // it skips the parquet footer-inference job a schema-less read launches.
+  // Every other writer drops the table's entry.
+  private val schemas = new ConcurrentHashMap[String, StructType]()
+
+  private lazy val rootPath = {
+    val p = new Path(root)
+    fs(p).makeQualified(p).toUri.getPath.stripSuffix("/") + "/"
+  }
+
+  /** The table a file or directory under the root belongs to (an `__old`
+    * snapshot belongs to its table); None outside the root. */
+  def tableOf(file: String): Option[String] = {
+    val p = new Path(file).toUri.getPath
+    if (!p.startsWith(rootPath)) None
+    else Some(p.substring(rootPath.length).takeWhile(_ != '/').stripSuffix("__old")).filter(_.nonEmpty)
+  }
+
   /** Reads fall back to the `__old` snapshot if a crash mid-[[write]] left the
     * destination missing — so a Runner retry of a self-overwrite stage (S8)
     * can still read its input instead of failing permanently. */
@@ -29,7 +50,7 @@ class Warehouse(val spark: SparkSession, val root: String) {
     val old = new Path(path(table + "__old"))
     val f = fs(dest)
     if (!f.exists(dest) && f.exists(old)) spark.read.parquet(old.toString)
-    else spark.read.parquet(dest.toString)
+    else Option(schemas.get(table)).fold(spark.read)(spark.read.schema).parquet(dest.toString)
   }
 
   def exists(table: String): Boolean = {
@@ -51,6 +72,7 @@ class Warehouse(val spark: SparkSession, val root: String) {
     val tmp = new Path(path(table + "__tmp"))
     val old = new Path(path(table + "__old"))
     val f = fs(dest)
+    schemas.remove(table)
     df.write.mode("overwrite").parquet(tmp.toString)
     f.delete(old, true) // leftover from a previous crashed swap
     val hadDest = f.exists(dest)
@@ -61,6 +83,7 @@ class Warehouse(val spark: SparkSession, val root: String) {
       throw new java.io.IOException(s"Warehouse swap failed for $table")
     }
     if (hadDest) f.delete(old, true)
+    schemas.put(table, df.schema)
   }
 
   /** MERGE / upsert (the BigQuery MERGE analog the reference never needed
@@ -85,8 +108,10 @@ class Warehouse(val spark: SparkSession, val root: String) {
   }
 
   /** Append (streaming metadata sink, S7). */
-  def append(table: String, df: DataFrame): Unit =
+  def append(table: String, df: DataFrame): Unit = {
+    schemas.remove(table)
     df.write.mode("append").parquet(path(table))
+  }
 
   def rowCount(table: String): Long = read(table).count()
   def columnCount(table: String): Int = read(table).schema.length
@@ -99,11 +124,13 @@ class Warehouse(val spark: SparkSession, val root: String) {
     * O(history) to O(delta). Reads with a partition predicate scan only the
     * matching directories (partition pruning — asserted in tests).
     */
-  def writePartitioned(table: String, df: DataFrame, partitionCols: Seq[String]): Unit =
+  def writePartitioned(table: String, df: DataFrame, partitionCols: Seq[String]): Unit = {
+    schemas.remove(table)
     df.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .parquet(path(table))
+  }
 
   /** Bucketed catalog table: co-locates future joins/aggregations on
     * `bucketCols` — two tables bucketed the same way join with NO shuffle
@@ -121,7 +148,8 @@ class Warehouse(val spark: SparkSession, val root: String) {
     * responsibility — which the pre-repartition here guarantees; asserted
     * in ScaleOpsSpec).
     */
-  def writeBucketed(table: String, df: DataFrame, buckets: Int, bucketCols: Seq[String]): Unit =
+  def writeBucketed(table: String, df: DataFrame, buckets: Int, bucketCols: Seq[String]): Unit = {
+    schemas.remove(table)
     // repartition on the bucket key first so each bucket lands as ONE file:
     // the scan only advertises the buckets' sort order (outputOrdering) when
     // a bucket is a single file, and only then can a downstream merge join
@@ -133,6 +161,7 @@ class Warehouse(val spark: SparkSession, val root: String) {
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .option("path", path(table))
       .saveAsTable(table)
+  }
 
   def readTable(table: String): DataFrame = spark.table(table)
 
@@ -157,6 +186,7 @@ class Warehouse(val spark: SparkSession, val root: String) {
     * ScaleOpsSpec (disjoint ranges + internal order).
     */
   def writeSorted(table: String, df: DataFrame, sortCols: Seq[String], files: Int): Unit = {
+    schemas.remove(table)
     val cols = sortCols.map(df.col)
     df.repartitionByRange(files, cols: _*)
       .sortWithinPartitions(cols: _*)

@@ -16,12 +16,13 @@ object CovidPipeline {
     stages = Seq(
 
       // covid_transforms.py:41-54 — SELECT DISTINCT * over staging
-      Stage("deduplicate_COVID", "covid_deduplicate", (_, wh) =>
+      Stage("deduplicate_COVID", "covid_deduplicate", reads = Seq("covid_staging"), run = (_, wh) =>
         RelOps.dedupAll(wh.read("covid_staging"))),
 
       // covid_transforms.py:56-74 — INNER join MFL dim on cast key, 26-col
       // projection incl. the source typo `Facilty_Name` aliased clean (:60)
-      Stage("org_enrichment", "covid_org_enrichment", (_, wh) => {
+      Stage("org_enrichment", "covid_org_enrichment",
+        reads = Seq("covid_deduplicate", "MFL_Codes"), run = (_, wh) => {
         val staging = wh.read("covid_deduplicate")
         val mfl = wh.read("MFL_Codes")
         RelOps.enrichJoin(staging, mfl,
@@ -42,7 +43,8 @@ object CovidPipeline {
       }),
 
       // covid_transforms.py:76-91 — booster-status merge
-      Stage("vaccine_status_cleaning", "covid_vaccine_status_cleaning", (_, wh) =>
+      Stage("vaccine_status_cleaning", "covid_vaccine_status_cleaning",
+        reads = Seq("covid_org_enrichment"), run = (_, wh) =>
         wh.read("covid_org_enrichment").withColumn("Vaccination_Final_Status",
           when(col("Final_Vaccination_Status") === "Fully Vaccinated" &&
                col("Ever_recieved_Booster") === "Yes", "Booster Shot")
@@ -50,7 +52,8 @@ object CovidPipeline {
 
       // covid_transforms.py:93-118 — 3 nested null→"Unknown" imputations,
       // self-overwrite (S8; Warehouse.write handles the swap)
-      Stage("vaccine_status_cleaning_2", "covid_vaccine_status_cleaning", (_, wh) =>
+      Stage("vaccine_status_cleaning_2", "covid_vaccine_status_cleaning",
+        reads = Seq("covid_vaccine_status_cleaning"), run = (_, wh) =>
         wh.read("covid_vaccine_status_cleaning")
           .withColumn("First_Vaccine_Type",
             when(col("First_Vaccine").isNull, "Unknown").otherwise(col("First_Vaccine")))
@@ -60,7 +63,8 @@ object CovidPipeline {
             when(col("Booster_Vaccine").isNull, "Unknown").otherwise(col("Booster_Vaccine")))),
 
       // covid_transforms.py:120-131 — verbatim copy to the warehouse table
-      Stage("covid_warehouse", "covid", (_, wh) =>
+      Stage("covid_warehouse", "covid",
+        reads = Seq("covid_vaccine_status_cleaning"), run = (_, wh) =>
         wh.read("covid_vaccine_status_cleaning"))
     ))
 }

@@ -26,11 +26,12 @@ object HtsPipeline {
     stages = Seq(
 
       // hts_transforms.py:42-55
-      Stage("deduplicate_HTS", "hts_deduplicate", (_, wh) =>
+      Stage("deduplicate_HTS", "hts_deduplicate", reads = Seq("hts_staging"), run = (_, wh) =>
         RelOps.dedupAll(wh.read("hts_staging"))),
 
       // hts_transforms.py:57-78 — MFL inner join + 23-col rename projection
-      Stage("HTS_joining_MFL_Codes", "hts_org_enrichment", (_, wh) => {
+      Stage("HTS_joining_MFL_Codes", "hts_org_enrichment",
+        reads = Seq("hts_deduplicate", "MFL_Codes"), run = (_, wh) => {
         val staging = wh.read("hts_deduplicate")
         val mfl = wh.read("MFL_Codes")
         RelOps.enrichJoin(staging, mfl,
@@ -61,7 +62,8 @@ object HtsPipeline {
       }),
 
       // hts_transforms.py:80-99 — LinkageDays + Y/Q/M parts for both dates
-      Stage("HTS_enriching_joined_table", "hts_dates_enrichment", (_, wh) => {
+      Stage("HTS_enriching_joined_table", "hts_dates_enrichment",
+        reads = Seq("hts_org_enrichment"), run = (_, wh) => {
         val dTested = col("date_tested").cast("date")
         val dArt = col("art_start_date").cast("date")
         wh.read("hts_org_enrichment")
@@ -76,30 +78,34 @@ object HtsPipeline {
 
       // hts_transforms.py:101-126 — 10-arm entrypoint normalization (CASE
       // with null passthrough: null arm maps null -> null, else passthrough)
-      Stage("HTS_enriching_entrypoint", "hts_entrypoints", (_, wh) =>
+      Stage("HTS_enriching_entrypoint", "hts_entrypoints",
+        reads = Seq("hts_dates_enrichment"), run = (_, wh) =>
         wh.read("hts_dates_enrichment").withColumn("entrypointclean",
           RelOps.caseNormalize(col("entrypoint"), entrypointNormalize, default = None))),
 
       // hts_transforms.py:128-153 — known values -> "0" sentinel flag,
       // self-overwrite of entrypoints (S8)
-      Stage("HTS_enriching_entrypoint_2", "hts_entrypoints", (_, wh) =>
+      Stage("HTS_enriching_entrypoint_2", "hts_entrypoints",
+        reads = Seq("hts_entrypoints"), run = (_, wh) =>
         wh.read("hts_entrypoints").withColumn("entrypointclean2",
           RelOps.caseNormalize(col("entrypoint"),
             entrypointNormalize.map { case (from, _) => from -> "0" }, default = None))),
 
       // hts_transforms.py:155-171 — "0" -> clean value, else "Other" bucket
-      Stage("HTS_enriching_entrypoint_3", "hts_entrypoints", (_, wh) =>
+      Stage("HTS_enriching_entrypoint_3", "hts_entrypoints",
+        reads = Seq("hts_entrypoints"), run = (_, wh) =>
         wh.read("hts_entrypoints").withColumn("entrypointclean3",
           when(col("entrypointclean2") === "0", col("entrypointclean"))
             .when(col("entrypointclean2").isNull, lit(null))
             .otherwise("Other"))),
 
       // hts_transforms.py:173-184
-      Stage("HTS_data_warehouse", "hts", (_, wh) => wh.read("hts_entrypoints")),
+      Stage("HTS_data_warehouse", "hts",
+        reads = Seq("hts_entrypoints"), run = (_, wh) => wh.read("hts_entrypoints")),
 
       // hts_transforms.py:186-212 — cascade banding of LinkageDays for
       // positives (CASE with no ELSE -> null), then filter non-null
-      Stage("HTS_summary", "hts_summary", (_, wh) => {
+      Stage("HTS_summary", "hts_summary", reads = Seq("hts"), run = (_, wh) => {
         val pos = col("final_test_result") === "Positive"
         wh.read("hts").withColumn("hts_cascade",
             when(col("LinkageDays") === 0 && pos, "Same Day")
@@ -113,7 +119,8 @@ object HtsPipeline {
       // hts_transforms.py:214-232 — one-row conditional-count pivot.
       // (totalPositive counts non-null cascade = all rows, the source is
       // already filtered — reference quirk preserved.)
-      Stage("HTS_warehouse_summary", "hts_summary_counts", (_, wh) => {
+      Stage("HTS_warehouse_summary", "hts_summary_counts",
+        reads = Seq("hts_summary"), run = (_, wh) => {
         val c = col("hts_cascade")
         wh.read("hts_summary").agg(
           sum(when(c.isNotNull, 1L).otherwise(0L)).as("totalPositive"),

@@ -25,26 +25,27 @@ object VlsPipeline {
     stages = Seq(
 
       // vls_transforms.py:40-52 (task id says COVID — reference copy-paste)
-      Stage("deduplicate_COVID", "vls_deduplicate", (_, wh) =>
+      Stage("deduplicate_COVID", "vls_deduplicate", reads = Seq("vls_staging"), run = (_, wh) =>
         RelOps.dedupAll(wh.read("vls_staging"))),
 
       // vls_transforms.py:54-68 — double null filter (inner redundant)
-      Stage("denullification_VLS", "vls_NULLS", (_, wh) =>
+      Stage("denullification_VLS", "vls_NULLS", reads = Seq("vls_deduplicate"), run = (_, wh) =>
         RelOps.filterNotNull(wh.read("vls_deduplicate"), Seq("ccc_number", "Mfl_code"))),
 
       // vls_transforms.py:70-82
-      Stage("viral_load_only", "vls_viral_load", (_, wh) =>
+      Stage("viral_load_only", "vls_viral_load", reads = Seq("vls_NULLS"), run = (_, wh) =>
         wh.read("vls_NULLS").filter(col("lab_test") === "VIRAL LOAD")),
 
       // vls_transforms.py:84-97 — A2 greatest date per (Mfl_code, ccc_number)
-      Stage("latest_vl_result", "vls_recent_dates", (_, wh) =>
+      Stage("latest_vl_result", "vls_recent_dates", reads = Seq("vls_viral_load"), run = (_, wh) =>
         wh.read("vls_viral_load")
           .groupBy(col("Mfl_code"), col("ccc_number"))
           .agg(max(col("date_test_result_received").cast("date")).as("results_date"))),
 
       // vls_transforms.py:99-117 — J3: LEFT JOIN on ccc_number + WHERE date
       // equality (effective INNER; the string side is cast for the compare)
-      Stage("single_patient_records", "vls_patient_single_records", (_, wh) => {
+      Stage("single_patient_records", "vls_patient_single_records",
+        reads = Seq("vls_recent_dates", "vls_viral_load"), run = (_, wh) => {
         val rd = wh.read("vls_recent_dates").as("RD")
         val vl = wh.read("vls_viral_load").as("Staging")
         rd.join(vl, rd("ccc_number") === vl("ccc_number"), "left")
@@ -62,11 +63,12 @@ object VlsPipeline {
       }),
 
       // vls_transforms.py:119-130
-      Stage("VLS_Warehouse", "vls", (_, wh) => wh.read("vls_patient_single_records")),
+      Stage("VLS_Warehouse", "vls",
+        reads = Seq("vls_patient_single_records"), run = (_, wh) => wh.read("vls_patient_single_records")),
 
       // vls_transforms.py:132-155 — ART ⟕ VLS on PatientID = ccc_number,
       // 57-col projection (ART.* minus weight/height — reference drops them)
-      Stage("merge_art_vls", "vls_merge_art_vls", (_, wh) => {
+      Stage("merge_art_vls", "vls_merge_art_vls", reads = Seq("art_mmd", "vls"), run = (_, wh) => {
         val art = wh.read("art_mmd").as("ART")
         val vls = wh.read("vls").as("VLS")
         val artCols = Seq(
@@ -91,7 +93,7 @@ object VlsPipeline {
       }),
 
       // vls_transforms.py:157-176 — days since test vs as-of date, validity
-      Stage("valid_results", "vls_valid_results", (_, wh) =>
+      Stage("valid_results", "vls_valid_results", reads = Seq("vls_merge_art_vls"), run = (_, wh) =>
         wh.read("vls_merge_art_vls")
           .withColumn("vl_days_since_test", RelOps.boundaryDiffDays(asOf, col("vl_results_date")))
           .withColumn("vl_valid",
@@ -101,7 +103,8 @@ object VlsPipeline {
 
       // vls_transforms.py:178-199 — F8 sentinel decode then suppression CASE
       // (no ELSE — the Valid+>=1000 branch stays NULL, quirk #1 preserved)
-      Stage("viral_load_suppression", "vls_viral_load_suppression", (_, wh) =>
+      Stage("viral_load_suppression", "vls_viral_load_suppression",
+        reads = Seq("vls_valid_results"), run = (_, wh) =>
         wh.read("vls_valid_results")
           .withColumn("load_numbers",
             when(col("vl_test_result") === "LDL", lit(0).cast(DecimalType(38, 9)))
@@ -112,7 +115,8 @@ object VlsPipeline {
               .when(col("load_numbers").isNull, "Unknown"))),
 
       // vls_transforms.py:201-218
-      Stage("eligible_for_VL", "vls_eligible_for_VL", (_, wh) =>
+      Stage("eligible_for_VL", "vls_eligible_for_VL",
+        reads = Seq("vls_viral_load_suppression"), run = (_, wh) =>
         wh.read("vls_viral_load_suppression")
           .withColumn("vl_eligible",
             when(col("vl_valid") === "Unknown", "Unknown")
@@ -121,7 +125,7 @@ object VlsPipeline {
               .otherwise("Ineligible"))),
 
       // vls_transforms.py:220-231
-      Stage("art_vls_warehouse", "art_mmd_vls", (_, wh) =>
+      Stage("art_vls_warehouse", "art_mmd_vls", reads = Seq("vls_eligible_for_VL"), run = (_, wh) =>
         wh.read("vls_eligible_for_VL"))
     ))
 }

@@ -48,15 +48,16 @@ class LoadPipelineSpec extends SparkSpec {
   test("runAllParallel executes independent pipelines concurrently after their dep") {
     val wh = new Warehouse(spark, java.nio.file.Files.createTempDirectory("graft_wh3_").toString)
     val order = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
-    def stage(pipe: String) = Stage(s"s_$pipe", s"t_$pipe", (s, _) => {
+    // under dataflow a stage waits for the writers of the tables it reads
+    def stage(pipe: String, reads: String*) = Stage(s"s_$pipe", s"t_$pipe", (s, w) => {
       order.add(pipe)
       import s.implicits._
-      Seq(pipe).toDF("v")
-    })
+      reads.map(w.read(_).select(lit(pipe).as("v"))).foldLeft(Seq(pipe).toDF("v"))(_ union _).distinct()
+    }, reads = reads)
     val base = Pipeline("base", Seq(stage("base")))
-    val a = Pipeline("a", Seq(stage("a")), dependsOn = Seq("base"))
-    val b = Pipeline("b", Seq(stage("b")), dependsOn = Seq("base"))
-    val tail = Pipeline("tail", Seq(stage("tail")), dependsOn = Seq("a", "b"))
+    val a = Pipeline("a", Seq(stage("a", "t_base")), dependsOn = Seq("base"))
+    val b = Pipeline("b", Seq(stage("b", "t_base")), dependsOn = Seq("base"))
+    val tail = Pipeline("tail", Seq(stage("tail", "t_a", "t_b")), dependsOn = Seq("a", "b"))
     new Runner(spark, wh).runAllParallel(Seq(tail, a, b, base))
     val seq = order.toArray.map(_.toString).toSeq
     assert(seq.head === "base")

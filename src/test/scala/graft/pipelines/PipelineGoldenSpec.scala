@@ -22,7 +22,18 @@ class PipelineGoldenSpec extends SparkSpec {
     Row(schema.fieldNames.toSeq.map(f => m.getOrElse(f, null)): _*)
   }
 
+  private val asOf = lit("2024-06-01").cast("date")
+  private val chains = Seq(CovidPipeline.pipeline, HtsPipeline.pipeline,
+    MmdPipeline.pipeline(asOf), VlsPipeline.pipeline(asOf))
+
   private lazy val wh: Warehouse = {
+    val w = staged()
+    new Runner(spark, w).runAll(chains)
+    w
+  }
+
+  /** A fresh warehouse holding the dims and the four staging tables. */
+  private def staged(): Warehouse = {
     val root = java.nio.file.Files.createTempDirectory("graft_wh_").toString
     val w = new Warehouse(spark, root)
 
@@ -92,11 +103,6 @@ class PipelineGoldenSpec extends SparkSpec {
       vls("1", "P1", "2024-02-01", "300", "CD4"), // not viral load -> filtered
       vls("2", "P1", "2024-03-15", "1200"),       // same ccc, other facility (quirk)
       vls("1", "P4", "2024-05-10", "5000"))))     // Valid + >=1000 -> NULL quirk
-
-    new Runner(spark, w).runAll(Seq(
-      CovidPipeline.pipeline, HtsPipeline.pipeline,
-      MmdPipeline.pipeline(asOf = lit("2024-06-01").cast("date")),
-      VlsPipeline.pipeline(asOf = lit("2024-06-01").cast("date"))))
     w
   }
 
@@ -184,6 +190,18 @@ class PipelineGoldenSpec extends SparkSpec {
     val a = Pipeline("a", Nil, dependsOn = Seq("b"))
     val b = Pipeline("b", Nil, dependsOn = Seq("a"))
     intercept[IllegalArgumentException](new Runner(spark, wh).runAll(Seq(a, b)))
+    intercept[IllegalArgumentException](new Runner(spark, wh).runAllParallel(Seq(a, b)))
+  }
+
+  test("runAllParallel writes every warehouse table row for row as runAll does") {
+    val par = staged()
+    new Runner(spark, par).runAllParallel(chains)
+    for (t <- Seq("covid", "hts", "hts_summary_counts", "art_mmd", "vls", "art_mmd_vls")) {
+      val (a, b) = (wh.read(t), par.read(t))
+      assert(a.columns.toSeq === b.columns.toSeq, t)
+      assert(a.count() === b.count(), t)
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, t)
+    }
   }
 
   test("runner: observe-based stage metrics report rows/cols + QA during the write pass") {
