@@ -53,33 +53,13 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet).filter(_.nonEmpty)
     val rounds = sys.env.get("SPARK_GRAFT_BENCH_ROUNDS").map(_.toInt).getOrElse(3)
     val selected = SparkEntry.headlineQueries.filter(n => only.forall(_.contains(n)))
-    // Board-context experiment knobs (r11 verdict #2 — three rounds of
-    // "isolated says fine, board says +40%" is a measurement bug, not a
-    // plan bug; these make the mechanism measurable and killable):
-    //   SPARK_GRAFT_BENCH_SHUFFLE=<seed> — deterministic per-round query
-    //     order shuffle, so a query's samples never share fixed neighbors
-    //     (kills neighbor-bleed: a hot predecessor's checkpoint/GC debt
-    //     always taxing the same successor).
-    //   SPARK_GRAFT_BENCH_ISOLATE=1 — between timed queries, clear the SQL
-    //     cache and run a full GC. The GC matters more than the cache:
-    //     ContextCleaner frees cached/localCheckpoint BLOCKS only after the
-    //     driver GC collects the RDD objects, and with a 100+ GiB heap the
-    //     JVM may not GC for hundreds of queries — blocks from every prior
-    //     query pile up in the block manager and the unified memory pool.
-    // Every run logs per-query gc-ms / heap / persisted-RDD deltas on
-    // stderr so the mechanism is visible without a special build.
-    // Shuffle is ON by default (seed 1) since the r12 experiment: a
-    // family-randomized order measured −4% on the common-query total and
-    // gives each query's interleaved samples three DIFFERENT neighborhoods
-    // (kills any fixed neighbor-bleed); isolate mode measured +31% (it
-    // destroys legitimate cross-round cache reuse) and stays opt-in.
-    // SPARK_GRAFT_BENCH_SHUFFLE=off restores declaration order.
-    val shuffleSeed = sys.env.get("SPARK_GRAFT_BENCH_SHUFFLE") match {
-      case Some("off") => None
-      case Some(s) => Some(s.toLong)
-      case None => Some(1L)
-    }
-    val isolate = sys.env.get("SPARK_GRAFT_BENCH_ISOLATE").contains("1")
+    // Each round runs the queries in a deterministic shuffled order (seed
+    // 1 + round), so a query's interleaved samples see three DIFFERENT
+    // neighborhoods and no hot predecessor's checkpoint/GC debt always
+    // taxes the same successor (r11 verdict #2; the r12 experiment measured
+    // −4% on the common-query total against declaration order). Every run
+    // logs per-query gc-ms / heap / persisted-RDD deltas on stderr so
+    // neighbor-bleed stays visible without a special build.
     val gcBeans = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala.toSeq
@@ -109,16 +89,9 @@ object Bench {
         rowCounts(name) = n
       } else failCounts(name) = failCounts.getOrElse(name, 0) + 1
       System.err.println(f"[bench] round $r $name%-28s $sec%8.2fs  rows=$n  gc=${gcMs}ms heap=$heapGb%.1fG rdds=$nRdds")
-      if (isolate) {
-        spark.catalog.clearCache()
-        System.gc() // drive ContextCleaner: release dead cached/checkpoint blocks NOW
-      }
     }
-    def roundOrder(r: Int): Seq[String] = shuffleSeed match {
-      case Some(seed) => new scala.util.Random(seed + r).shuffle(selected)
-      case None => selected
-    }
-    for (r <- 1 to rounds; name <- roundOrder(r)) timeOne(r.toString, name)
+    for (r <- 1 to rounds; name <- new scala.util.Random(1L + r).shuffle(selected))
+      timeOne(r.toString, name)
     def median(xs: List[Double]): Double = {
       val s = xs.sorted; s(s.size / 2)
     }

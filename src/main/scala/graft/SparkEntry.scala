@@ -4605,7 +4605,7 @@ object SparkEntry {
     * line every 13th doc, a JS-warning line every 17th, a brace line
     * every 19th, and a short punctuated line every 7th — so every C4 rule
     * fires on a deterministic, oracle-reproducible subset. */
-  private[graft] def c4PageFixture(docs: DataFrame): DataFrame = docs
+  private def c4PageFixture(docs: DataFrame): DataFrame = docs
     .select(col("doc_id"), TextOps.tokens(col("text")).as("__toks"),
       (pmod(col("doc_id"), lit(8L)) + 3L).as("__k"))
     .withColumn("__nl", expr("(size(__toks) + __k - 1) div __k"))
@@ -4730,27 +4730,17 @@ object SparkEntry {
     * KN train chain are INDEPENDENT until the `kept` join, and they load
     * opposite sides of the machine: the c4 page battery is executor-bound
     * HOF compute while the KN trainer's lazy checkpoints spend their time
-    * in single-threaded driver planning — so running both from a 2-thread
-    * pool (guide §2.6, the q273 pattern) overlaps almost perfectly instead
-    * of paying the two latencies in sequence (r14; measured phases: c4
+    * in single-threaded driver planning — so running both as
+    * [[graft.ops.Overlap]] arms overlaps almost perfectly instead of
+    * paying the two latencies in sequence (r14; measured phases: c4
     * ≈1.9 s executor vs KN build+train+0.16 ≈1.3 s driver at sf0.1).
     * Rows are unchanged: the c4 side just materializes behind a checkpoint
-    * before the same left-semi join. Failure path cancels the sibling's
-    * in-flight jobs via the job group (the r13-advisor q273 finding,
-    * applied here from the start). */
+    * before the same left-semi join. A failed arm cancels its sibling's
+    * in-flight jobs. */
   private def finewebKept(s: SparkSession, docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val gid = s"fineweb_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    def inGroup[T](desc: String)(body: => T): Future[T] = Future {
-      s.sparkContext.setJobGroup(gid, desc, interruptOnCancel = true)
-      try body finally s.sparkContext.clearJobGroup()
-    }
-    try {
-      val fC4 = inGroup("fineweb: c4 gate") {
+    val (c4pass, lm) = graft.ops.Overlap.both(s, "fineweb")(
+      "fineweb: c4 gate" -> { () =>
         // SELECT-then-checkpoint-then-FILTER, not filter-then-checkpoint:
         // a filter on the derived c4_pass collapses into the battery and
         // re-inlines the page-fixture expression per predicate reference
@@ -4762,35 +4752,26 @@ object SparkEntry {
           .localCheckpoint(false)
         c4.count()
         c4.filter(col("c4_pass")).select("doc_id")
-      }
-      val fLm = inGroup("fineweb: KN train") {
+      },
+      "fineweb: KN train" -> { () =>
         val lm = graft.text.LangModel.trainKneserNey(
           docs.filter(RelOps.hashSampleFilter(col("doc_id"), 0.8)),
           "doc_id", "text", minCount = 100L)
         lm.pairs.count() // materialize the sufficient statistic's checkpoint
         lm
-      }
-      val (c4pass, lm) =
-        try (Await.result(fC4, Duration.Inf), Await.result(fLm, Duration.Inf))
-        catch { case t: Throwable =>
-          // a failed sibling must not leak its in-flight job chain
-          s.sparkContext.cancelJobGroup(gid)
-          Seq(fC4, fLm).foreach(f => scala.util.Try(Await.ready(f, Duration.Inf)))
-          throw t
-        }
-      val isTrain = RelOps.hashSampleFilter(col("doc_id"), 0.8)
-      val scored = graft.text.LangModel
-        .scoreKnQ16(docs.filter(!isTrain), "doc_id", "text", lm)
-      val w = Window.partitionBy("lang").orderBy(col("mean_nlg2_q16"), col("doc_id"))
-      scored
-        .join(c4pass, Seq("doc_id"), "left_semi")
-        .join(docs.select("doc_id", "lang", "source"), "doc_id")
-        .withColumn("rn", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(Window.partitionBy("lang")))
-        .filter(col("rn") * 3 <= col("n") * 2)
-        .select("doc_id", "lang", "source")
-        .localCheckpoint(false)
-    } finally pool.shutdown()
+      })
+    val isTrain = RelOps.hashSampleFilter(col("doc_id"), 0.8)
+    val scored = graft.text.LangModel
+      .scoreKnQ16(docs.filter(!isTrain), "doc_id", "text", lm)
+    val w = Window.partitionBy("lang").orderBy(col("mean_nlg2_q16"), col("doc_id"))
+    scored
+      .join(c4pass, Seq("doc_id"), "left_semi")
+      .join(docs.select("doc_id", "lang", "source"), "doc_id")
+      .withColumn("rn", row_number().over(w))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy("lang")))
+      .filter(col("rn") * 3 <= col("n") * 2)
+      .select("doc_id", "lang", "source")
+      .localCheckpoint(false)
   }
 
   private def q272_fineweb_prep(s: SparkSession, dir: String): DataFrame = {
@@ -5485,71 +5466,43 @@ object SparkEntry {
     import s.implicits._
     val docs = par(s, Tables.documents(s, dir))
 
-    // r13 (guide §2.6 "overlap independent jobs"): the three tokenizer
-    // sub-chains (train → corpus-wide segment-count) and the word count
-    // are INDEPENDENT — running them from a small thread pool lets each
-    // chain's tail back-fill the executors the others leave idle, instead
-    // of paying four sequential job latencies. Each future's result is a
-    // deterministic scalar; the assembled row set is order-fixed below, so
-    // the output is unchanged.
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    // every future runs under one job group so the failure path can CANCEL
-    // the siblings' in-flight Spark jobs (r13 advisor: pool.shutdown()
-    // neither cancels nor awaits queued closures' job chains)
-    val gid = s"q273_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    def inGroup[T](desc: String)(body: => T): Future[T] = Future {
-      s.sparkContext.setJobGroup(gid, desc, interruptOnCancel = true)
-      try body finally s.sparkContext.clearJobGroup()
-    }
-    try {
-      val fWords = inGroup("fertility: word count")(
-        docs.agg(sum(TextOps.tokenCount(col("text")))).as[Long].head())
-
-      val fBpe = inGroup("fertility: bpe") {
+    // r13: the three tokenizer sub-chains (train → corpus-wide
+    // segment-count) and the word count are INDEPENDENT — overlapping them
+    // lets each chain's tail back-fill the executors the others leave
+    // idle, instead of paying four sequential job latencies. Each arm's
+    // result is a deterministic scalar; the assembled row set is
+    // order-fixed below, so the output is unchanged.
+    val Seq(nWords, bpeNp, uniNp, wpNp) = graft.ops.Overlap.all(s, "q273")(
+      "fertility: word count" -> { () =>
+        val n = docs.agg(sum(TextOps.tokenCount(col("text")))).as[Long].head()
+        require(n > 0L, "tokenizer_fertility: empty corpus (no tokens)")
+        n
+      },
+      "fertility: bpe" -> { () =>
         val bpeMerges = graft.text.Bpe.learnMerges(docs, "text", nMerges = 64)
           .orderBy("rank").collect().map(r => (r.getString(1), r.getString(2))).toSeq
         docs.select(explode(TextOps.tokens(col("text"))).as("w"))
           .agg(sum(size(graft.text.Bpe.applyMerges(col("w"), bpeMerges)).cast("long")))
           .as[Long].head()
-      }
-
-      val fUni = inGroup("fertility: unigram") {
+      },
+      "fertility: unigram" -> { () =>
         val uni = graft.text.Unigram.train(docs, "text",
           maxPieceLen = 5, maxVocab = 128, emRounds = 3)
         docs.agg(sum(graft.functions.UnigramExprs.unigram_segment(col("text"), uni)
           .getField("n_pieces"))).as[Long].head()
-      }
-
-      val fWp = inGroup("fertility: wordpiece") {
+      },
+      "fertility: wordpiece" -> { () =>
         val words = graft.text.WordPiece.wordWeights(docs, "text")
         val wpVocab = graft.text.WordPiece.vocabOf(words,
           graft.text.WordPiece.trainFromWords(words, nMerges = 64))
         docs.agg(sum(graft.functions.WordPieceExprs.wordpiece_segment(col("text"), wpVocab.toSeq)
           .getField("n_pieces"))).as[Long].head()
-      }
+      })
 
-      val all = Seq(fWords, fBpe, fUni, fWp)
-      val (nWords, bpeNp, uniNp, wpNp) =
-        try {
-          val nw = Await.result(fWords, Duration.Inf)
-          require(nw > 0L, "tokenizer_fertility: empty corpus (no tokens)")
-          (nw, Await.result(fBpe, Duration.Inf),
-            Await.result(fUni, Duration.Inf), Await.result(fWp, Duration.Inf))
-        } catch { case t: Throwable =>
-          // cancel the siblings' in-flight job chains, then drain fail-soft
-          s.sparkContext.cancelJobGroup(gid)
-          all.foreach(f => scala.util.Try(Await.ready(f, Duration.Inf)))
-          throw t
-        }
-
-      Seq(("bpe64", bpeNp), ("unigram", uniNp), ("wordpiece64", wpNp))
+    Seq(("bpe64", bpeNp), ("unigram", uniNp), ("wordpiece64", wpNp))
       .toDF("tokenizer", "n_pieces")
       .select(col("tokenizer"), lit(nWords).as("n_words"), col("n_pieces"),
         expr("n_pieces * 100 div n_words").as("pieces_per_100w"))
-    } finally pool.shutdown()
   }
 
   /** DEPTH-8 SUFFIX RANKS BY PREFIX DOUBLING

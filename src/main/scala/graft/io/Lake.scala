@@ -23,10 +23,6 @@ object Lake {
   def readParquet(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir)
 
-  /** S2 — explicit prefix ("folder") listing, when the caller needs paths. */
-  def readParquetPrefix(spark: SparkSession, root: String, prefix: String): DataFrame =
-    spark.read.parquet(s"$root/$prefix*")
-
   /** S1 variant with a declared schema (schema-on-read contract pinned in
     * code rather than inferred — FIXTURES.md). */
   def readParquet(spark: SparkSession, dir: String, schema: StructType): DataFrame =
@@ -40,13 +36,5 @@ object Lake {
   def readAllAsString(spark: SparkSession, dirs: Seq[String]): DataFrame = {
     val dfs = dirs.map(d => RelOps.stringifyAll(spark.read.parquet(d)))
     RelOps.dedupAll(dfs.reduce(_.unionByName(_)))
-  }
-
-  /** S5 — load a prepared DataFrame into a warehouse table, reporting shape
-    * (parquet_solution.py:87-125 load_table_from_dataframe + row/col report).
-    */
-  def loadInto(wh: Warehouse, table: String, df: DataFrame): (Long, Int) = {
-    wh.write(table, df)
-    (wh.rowCount(table), wh.columnCount(table))
   }
 }

@@ -113,9 +113,6 @@ class Warehouse(val spark: SparkSession, val root: String) {
     df.write.mode("append").parquet(path(table))
   }
 
-  def rowCount(table: String): Long = read(table).count()
-  def columnCount(table: String): Int = read(table).schema.length
-
   /** Partitioned table with DYNAMIC partition overwrite: only the partitions
     * present in `df` are replaced; the rest of the table is untouched. This
     * is the 100 TB answer to the reference's whole-table snapshot rebuild

@@ -91,7 +91,6 @@ object H264 {
       (1L << zeros) - 1 + u(zeros)
     }
     def se(): Long = { val k = ue(); if (k % 2 == 1) (k + 1) / 2 else -(k / 2) }
-    def byteAligned: Boolean = nBits == 0
     def alignToByte(): Unit = while (nBits != 0) bit() // pcm_alignment_zero_bit(s)
     def rawByte(): Int = {
       require(nBits == 0, "rawByte unaligned")

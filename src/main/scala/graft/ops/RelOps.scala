@@ -24,12 +24,6 @@ object RelOps {
     */
   def dedupAll(df: DataFrame): DataFrame = df.distinct()
 
-  /** A4 restricted to a column subset (first-wins within partition; used when
-    * the caller wants key-dedup rather than whole-row dedup).
-    */
-  def dedupByKey(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
-
   /** A1 — entity-collapse dedup: GROUP BY `keys`, MAX of every other column
     * (reference: dags/mmd_transforms.py:74-96, 31 max() columns).
     *

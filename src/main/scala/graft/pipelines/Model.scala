@@ -156,8 +156,6 @@ class Runner(
     p
   }
 
-  def runStage(pipeline: String, st: Stage): Unit = runStage(pipeline, st, () => false)
-
   /** Runs one stage with retries. Once `aborted` holds (a sibling failed),
     * an error ends the stage without a retry or a failure alert. */
   private def runStage(pipeline: String, st: Stage, aborted: () => Boolean): Unit = {
@@ -206,12 +204,10 @@ class Runner(
         s"table(s) ${undeclared.mkString(", ")} missing from its `reads`")
   }
 
-  def run(p: Pipeline): Unit = p.stages.foreach(runStage(p.name, _))
-
   /** Runs the plan in program order on the caller's thread (covid/hts/mmd
     * after load, vls after mmd — README.md:74). */
   def runAll(pipelines: Seq[Pipeline]): Unit =
-    Plan(pipelines).stages.foreach(s => runStage(s.pipeline, s.stage))
+    Plan(pipelines).stages.foreach(s => runStage(s.pipeline, s.stage, () => false))
 
   /** O6 — runs the plan as dataflow: every stage whose hazards are cleared
     * is ready, and ready stages start longest-downstream-chain first, at
@@ -274,13 +270,4 @@ class Runner(
     }
     failure.foreach(e => throw e)
   }
-}
-
-/** O4/F9 — failure-alert message composition (the reference posts
-  * `{dag, task, log_url}` to a Mattermost webhook, idr_load.py:28-35; the
-  * transport is the caller's concern, the message shape is this).
-  */
-object Alerts {
-  def format(f: StageFailure): String =
-    s"pipeline=${f.pipeline} task=${f.stage} failed: ${f.error.getMessage}"
 }

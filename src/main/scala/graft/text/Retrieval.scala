@@ -76,42 +76,24 @@ object Retrieval {
     // to re-execute for each of tf/dl/dft/tot, 4×). Every identity is
     // exact integer algebra, so scores and ranks are unchanged.
     //
-    // OVERLAP (r14, guide §2.6): the query-term derivation is often its
-    // own corpus-scale chain (q197 derives queries from the corpus) and it
-    // is independent of the posting build until the prune join — both
-    // boundaries materialize from a 2-thread pool instead of paying the
-    // two chains' latencies in sequence. A failed sibling's in-flight jobs
-    // are cancelled via the job group.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val spark = docs.sparkSession
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val gid = s"bm25_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    def inGroup[T](desc: String)(body: => T): Future[T] = Future {
-      spark.sparkContext.setJobGroup(gid, desc, interruptOnCancel = true)
-      try body finally spark.sparkContext.clearJobGroup()
-    }
-    val (q, tf) = try {
-      val fQ = inGroup("bm25: query terms") {
+    // OVERLAP (r14): the query-term derivation is often its own
+    // corpus-scale chain (q197 derives queries from the corpus) and it is
+    // independent of the posting build until the prune join — both
+    // boundaries materialize as [[graft.ops.Overlap]] arms instead of
+    // paying the two chains' latencies in sequence.
+    val (q, tf) = graft.ops.Overlap.both(docs.sparkSession, "bm25")(
+      "bm25: query terms" -> { () =>
         val d = graft.ops.Replay.stable(queryTerms
           .select(col(queryId).as("__q"), col(termCol).as("__t")).distinct())
         d.count()
         d
-      }
-      val fTf = inGroup("bm25: posting table") {
+      },
+      "bm25: posting table" -> { () =>
         val t = graft.ops.Replay.stable(
           tok.groupBy("__doc", "__t").agg(count(lit(1)).as("__tf")))
         t.count()
         t
-      }
-      try (Await.result(fQ, Duration.Inf), Await.result(fTf, Duration.Inf))
-      catch { case t: Throwable =>
-        spark.sparkContext.cancelJobGroup(gid)
-        Seq(fQ, fTf).foreach(f => scala.util.Try(Await.ready(f, Duration.Inf)))
-        throw t
-      }
-    } finally pool.shutdown()
+      })
     val dl = tf.groupBy("__doc").agg(sum(col("__tf")).as("__dl"))
     val dft = tf.groupBy("__t").agg(count(lit(1)).as("__df"))
     val tot = dl.agg(count(lit(1)).as("__n"), sum(col("__dl")).as("__s"))

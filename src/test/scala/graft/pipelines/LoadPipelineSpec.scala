@@ -32,7 +32,7 @@ class LoadPipelineSpec extends SparkSpec {
     val load = LoadPipeline.pipeline(Map(
       "mmd" -> s"$lake/mmd/*", "vls" -> s"$lake/vls",
       "hts" -> s"$lake/hts", "covid" -> s"$lake/covid"))
-    new Runner(spark, wh).run(load)
+    new Runner(spark, wh).runAll(Seq(load))
 
     val mmd = wh.read("mmd_staging")
     assert(mmd.count() === 3) // 4 rows across files, 1 exact dup dropped

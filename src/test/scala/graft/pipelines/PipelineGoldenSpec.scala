@@ -185,7 +185,7 @@ class PipelineGoldenSpec extends SparkSpec {
     val r = new Runner(spark, wh, retries = 1, onFailure = failures += _)
     val boom = Pipeline("boom", Seq(Stage("explode", "never", (_, _) =>
       throw new RuntimeException("kaboom"))))
-    intercept[RuntimeException](r.run(boom))
+    intercept[RuntimeException](r.runAll(Seq(boom)))
     assert(failures.map(f => (f.pipeline, f.stage)) === Seq(("boom", "explode")))
     val a = Pipeline("a", Nil, dependsOn = Seq("b"))
     val b = Pipeline("b", Nil, dependsOn = Seq("a"))
@@ -217,7 +217,7 @@ class PipelineGoldenSpec extends SparkSpec {
         // observed metrics forbid DISTINCT aggregates; the HLL++ sketch is
         // the observable stand-in (exact at this cardinality)
         approx_count_distinct(col("c_mktsegment")).as("n_segments")))
-    r.run(Pipeline("load", Seq(st)))
+    r.runAll(Seq(Pipeline("load", Seq(st))))
     assert(metrics.size === 1)
     val m = metrics.head
     assert((m.pipeline, m.stage, m.sink) === (("load", "load_customers", "cust")))

@@ -65,11 +65,11 @@ class RunnerSpec extends SparkSpec {
     val failures = mutable.ArrayBuffer[StageFailure]()
     val r = new Runner(spark, wh, retries = 0, onFailure = failures += _)
     val e = intercept[IllegalStateException](
-      r.runStage("p", Stage("copy", "t_dst", (_, w) => w.read("t_src"))))
+      r.runAll(Seq(Pipeline("p", Seq(Stage("copy", "t_dst", (_, w) => w.read("t_src")))))))
     assert(e.getMessage.contains("t_src"))
     assert(!wh.exists("t_dst"))
     assert(failures.map(_.stage) === Seq("copy"))
-    r.runStage("p", Stage("copy", "t_dst", (_, w) => w.read("t_src"), reads = Seq("t_src")))
+    r.runAll(Seq(Pipeline("p", Seq(Stage("copy", "t_dst", (_, w) => w.read("t_src"), reads = Seq("t_src"))))))
     assert(wh.read("t_dst").count() === 2)
   }
 

@@ -1,10 +1,11 @@
 #!/usr/bin/env python3
 """Generate DESIGN.md's consolidated scaling table (markdown) from two Bench
-artifacts: bench_sf01.json (median-of-3, sf0.1) and bench_sf1.json (sf1).
+artifacts: plans/bench_sf01.json (median-of-3, sf0.1) and plans/bench_sf1.json
+(sf1).
 Per-query ratio = best-sample sf1 / best-sample sf0.1 (best is the honest
 per-query cost; medians carry round-count asymmetry across the two sweeps).
 
-Usage: python3 tools/scaling_table.py [bench_sf01.json] [bench_sf1.json]
+Usage: python3 tools/scaling_table.py [plans/bench_sf01.json] [plans/bench_sf1.json]
 Prints the cohort summary followed by the full per-query table, ratio
 descending, with standing adjudication notes folded in.
 """
@@ -30,8 +31,8 @@ def best(d, q):
 
 
 def main():
-    sf01 = json.load(open(sys.argv[1] if len(sys.argv) > 1 else "bench_sf01.json"))
-    sf1 = json.load(open(sys.argv[2] if len(sys.argv) > 2 else "bench_sf1.json"))
+    sf01 = json.load(open(sys.argv[1] if len(sys.argv) > 1 else "plans/bench_sf01.json"))
+    sf1 = json.load(open(sys.argv[2] if len(sys.argv) > 2 else "plans/bench_sf1.json"))
     qs = sorted(set(sf01["detail"]) & set(sf1["detail"]))
     only01 = sorted(set(sf01["detail"]) - set(sf1["detail"]))
     rows = []
