@@ -100,11 +100,11 @@ object Bench {
     // whose samples were [24.6, 27.0, 1.02] (steady state 1.0 s), a 12% lie
     // in the headline. A query whose median exceeds twice its own best
     // sample has contaminated samples, not a slow plan; give each such query
-    // up to SPARK_GRAFT_BENCH_EXTRA (default 2) extra interleaved rounds so
+    // up to two extra interleaved rounds so
     // the median is taken over enough samples that a contended window can't
     // hold it. The absolute floor (0.5 s) keeps sub-second queries — where
     // 2× spread is scheduler noise, not contention — out of the retry set.
-    val extraRounds = sys.env.get("SPARK_GRAFT_BENCH_EXTRA").map(_.toInt).getOrElse(2)
+    val extraRounds = 2
     val unstable = selected.filter { n =>
       samples.get(n).exists(ss =>
         ss.size >= 2 && median(ss) > 0.5 && median(ss) > 2.0 * ss.min)

@@ -2577,11 +2577,12 @@ object SparkEntry {
       s, java.nio.file.Files.createTempDirectory("graft_vsink").toString)
     val chk = java.nio.file.Files.createTempDirectory("graft_vsink_chk").toString
     val glob = s"$dir/events.parq*"
+    val appId = "q169_ingest"
     graft.streaming.VersionedSink.appendStream(
-      s, glob, raw, vt, "events_v", chk, appId = "q169_ingest")
+      s, glob, raw, vt, "events_v", chk, appId = appId)
     // replay batch 0 with the WHOLE dataset — watermark must absorb it
     vt.commitAppendTxn("events_v",
-      s.read.schema(raw).parquet(s"$dir/events.parquet"), "q169_ingest", 0L)
+      s.read.schema(raw).parquet(s"$dir/events.parquet"), appId, 0L)
     vt.read("events_v")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), countDistinct(col("user_id")).as("n_users"))
@@ -3532,7 +3533,8 @@ object SparkEntry {
       .select(col("o_orderkey").as("k"), col("o_orderpriority").as("grp"), cents.as("v"))
     val (vt, t) = clonedVersionedFixture(s, dir, "ordkv", statsCol = Some("k"))(base)
     MvRewriteRule.install(s)
-    MvRewriteRule.create(s, "q205_rollup", vt.readVersion(t, 1L), mvDir1,
+    val mvName = "q205_rollup"
+    MvRewriteRule.create(s, mvName, vt.readVersion(t, 1L), mvDir1,
       groupCols = Seq("grp"), aggCols = Seq("v"))
 
     def scansOf(df: DataFrame): Seq[String] = df.queryExecution.optimizedPlan.collect {
@@ -3564,7 +3566,7 @@ object SparkEntry {
     Incremental.applyCountSumDeltas(old, vt.changesWithImages(t, 1L, v3, "k"), "grp", "v")
       .select(col("grp"), col("n_rows").as("__cnt"), col("sum_val").as("__sum_v"))
       .write.mode("overwrite").parquet(mvDir2)
-    MvRewriteRule.registerExisting(s, "q205_rollup", vt.read(t), mvDir2,
+    MvRewriteRule.registerExisting(s, mvName, vt.read(t), mvDir2,
       groupCols = Seq("grp"), countStar = "__cnt", sums = Map("v" -> "__sum_v"))
     val q = query()
     require(scansOf(q).exists(_.endsWith(mvDir2)),
@@ -5572,304 +5574,69 @@ object SparkEntry {
   }
 
   // ------------------------------------------------------------------
+  // Query catalog
+  // ------------------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_scan_project" -> (q01_scan_project _),
-    "q02_filter_predicates" -> (q02_filter_predicates _),
-    "q03_dedup_distinct" -> (q03_dedup_distinct _),
-    "q04_collapse_max" -> (q04_collapse_max _),
-    "q05_groupby_agg" -> (q05_groupby_agg _),
-    "q06_conditional_counts" -> (q06_conditional_counts _),
-    "q07_case_normalize" -> (q07_case_normalize _),
-    "q08_join_broadcast" -> (q08_join_broadcast _),
-    "q09_join_left" -> (q09_join_left _),
-    "q10_latest_per_group" -> (q10_latest_per_group _),
-    "q11_latest_row_window" -> (q11_latest_row_window _),
-    "q12_datediff" -> (q12_datediff _),
-    "q13_extract_parts" -> (q13_extract_parts _),
-    "q14_format_date" -> (q14_format_date _),
-    "q15_union_distinct" -> (q15_union_distinct _),
-    "q16_topk" -> (q16_topk _),
-    "q17_stringify_retype" -> (q17_stringify_retype _),
-    "q18_sentinel_decode" -> (q18_sentinel_decode _),
-    "q19_null_impute" -> (q19_null_impute _),
-    "q20_multi_join" -> (q20_multi_join _),
-    "q21_rollup" -> (q21_rollup _),
-    "q22_window_running" -> (q22_window_running _),
-    "q23_count_distinct" -> (q23_count_distinct _),
-    "q24_json_extract" -> (q24_json_extract _),
-    "q25_pivot_counts" -> (q25_pivot_counts _),
-    "q26_sketch_distinct" -> (q26_sketch_distinct _),
-    "q27_cube" -> (q27_cube _),
-    "q28_asof_join" -> (q28_asof_join _),
-    "q29_range_join" -> (q29_range_join _),
-    "q30_text_stats" -> (q30_text_stats _),
-    "q31_lang_id" -> (q31_lang_id _),
-    "q32_quality" -> (q32_quality _),
-    "q33_fingerprint" -> (q33_fingerprint _),
-    "q34_dedup_exact" -> (q34_dedup_exact _),
-    "q35_jaccard_pairs" -> (q35_jaccard_pairs _),
-    "q36_minhash_lsh" -> (q36_minhash_lsh _),
-    "q37_simhash_neardup" -> (q37_simhash_neardup _),
-    "q38_ann_brute" -> (q38_ann_brute _),
-    "q39_ann_lsh" -> (q39_ann_lsh _),
-    "q40_fingerprint_rolling" -> (q40_fingerprint_rolling _),
-    "q41_embed_neardup" -> (q41_embed_neardup _),
-    "q42_ngram_jaccard" -> (q42_ngram_jaccard _),
-    "q43_ann_ivf" -> (q43_ann_ivf _),
-    "q44_join_semi" -> (q44_join_semi _),
-    "q45_join_anti" -> (q45_join_anti _),
-    "q46_salted_join" -> (q46_salted_join _),
-    "q47_grouping_sets" -> (q47_grouping_sets _),
-    "q48_lag_lead" -> (q48_lag_lead _),
-    "q49_sessionize_batch" -> (q49_sessionize_batch _),
-    "q50_media_features" -> (q50_media_features _),
-    "q51_stream_counts" -> (q51_stream_counts _),
-    "q52_pivot_wide" -> (q52_pivot_wide _),
-    "q53_token_bpe" -> (q53_token_bpe _),
-    "q54_collect_sorted" -> (q54_collect_sorted _),
-    "q55_explode_pos" -> (q55_explode_pos _),
-    "q56_date_arith" -> (q56_date_arith _),
-    "q57_string_funcs" -> (q57_string_funcs _),
-    "q58_quantiles" -> (q58_quantiles _),
-    "q59_frame_sample" -> (q59_frame_sample _),
-    "q60_stream_windows" -> (q60_stream_windows _),
-    "q61_array_funcs" -> (q61_array_funcs _),
-    "q62_moment_stats" -> (q62_moment_stats _),
-    "q63_intersect_except" -> (q63_intersect_except _),
-    "q64_fill_down" -> (q64_fill_down _),
-    "q65_try_cast" -> (q65_try_cast _),
-    "q66_profile" -> (q66_profile _),
-    "q67_bucketed_join" -> (q67_bucketed_join _),
-    "q68_partition_prune" -> (q68_partition_prune _),
-    "q69_approx_quantiles" -> (q69_approx_quantiles _),
-    "q70_hll_union" -> (q70_hll_union _),
-    "q71_session_window" -> (q71_session_window _),
-    "q72_stream_dedup" -> (q72_stream_dedup _),
-    "q73_typed_agg" -> (q73_typed_agg _),
-    "q74_math_funcs" -> (q74_math_funcs _),
-    "q75_conditional_funcs" -> (q75_conditional_funcs _),
-    "q76_regex_funcs" -> (q76_regex_funcs _),
-    "q77_incremental_merge" -> (q77_incremental_merge _),
-    "q78_map_funcs" -> (q78_map_funcs _),
-    "q79_unpivot" -> (q79_unpivot _),
-    "q80_range_frame" -> (q80_range_frame _),
-    "q81_repetition" -> (q81_repetition _),
-    "q82_pii_mask" -> (q82_pii_mask _),
-    "q83_hash_sample" -> (q83_hash_sample _),
-    "q84_date_spine" -> (q84_date_spine _),
-    "q85_levenshtein" -> (q85_levenshtein _),
-    "q86_rank_battery" -> (q86_rank_battery _),
-    "q87_zscore_outliers" -> (q87_zscore_outliers _),
-    "q88_dup_clusters" -> (q88_dup_clusters _),
-    "q89_chunk_windows" -> (q89_chunk_windows _),
-    "q90_vocab_topn" -> (q90_vocab_topn _),
-    "q91_stream_join" -> (q91_stream_join _),
-    "q92_minmax_scale" -> (q92_minmax_scale _),
-    "q93_full_outer" -> (q93_full_outer _),
-    "q94_cross_join" -> (q94_cross_join _),
-    "q95_sliding_windows" -> (q95_sliding_windows _),
-    "q96_mode" -> (q96_mode _),
-    "q97_json_struct" -> (q97_json_struct _),
-    "q98_csv_roundtrip" -> (q98_csv_roundtrip _),
-    "q99_json_roundtrip" -> (q99_json_roundtrip _),
-    "q100_value_windows" -> (q100_value_windows _),
-    "q101_union_evolve" -> (q101_union_evolve _),
-    "q102_merge_schema" -> (q102_merge_schema _),
-    "q103_snapshot_diff" -> (q103_snapshot_diff _),
-    "q104_incremental_stats" -> (q104_incremental_stats _),
-    "q105_topk_per_group" -> (q105_topk_per_group _),
-    "q106_orc_roundtrip" -> (q106_orc_roundtrip _),
-    "q107_nullsafe_join" -> (q107_nullsafe_join _),
-    "q108_dedup_keep_best" -> (q108_dedup_keep_best _),
-    "q109_quality_filter" -> (q109_quality_filter _),
-    "q110_typed_lambda" -> (q110_typed_lambda _),
-    "q111_funnel" -> (q111_funnel _),
-    "q112_cohort" -> (q112_cohort _),
-    "q113_pack_bins" -> (q113_pack_bins _),
-    "q114_split_labels" -> (q114_split_labels _),
-    "q115_normalize" -> (q115_normalize _),
-    "q116_key_skew" -> (q116_key_skew _),
-    "q117_text_lines" -> (q117_text_lines _),
-    "q118_asof_forward" -> (q118_asof_forward _),
-    "q119_percentile_disc" -> (q119_percentile_disc _),
-    "q120_interval_overlap" -> (q120_interval_overlap _),
-    "q121_explode_outer" -> (q121_explode_outer _),
-    "q122_islands" -> (q122_islands _),
-    "q123_ratio_to_report" -> (q123_ratio_to_report _),
-    "q124_cumulative_users" -> (q124_cumulative_users _),
-    "q125_session_funnel" -> (q125_session_funnel _),
-    "q126_deciles" -> (q126_deciles _),
-    "q127_weighted_sample" -> (q127_weighted_sample _),
-    "q128_balanced_sample" -> (q128_balanced_sample _),
-    "q129_vocab_by_lang" -> (q129_vocab_by_lang _),
-    "q130_bigram_top" -> (q130_bigram_top _),
-    "q131_corpus_composition" -> (q131_corpus_composition _),
-    "q132_split_balance" -> (q132_split_balance _),
-    "q133_decontaminate" -> (q133_decontaminate _),
-    "q134_rolling_window" -> (q134_rolling_window _),
-    "q135_source_overlap" -> (q135_source_overlap _),
-    "q136_histogram" -> (q136_histogram _),
-    "q137_semantic_dedup" -> (q137_semantic_dedup _),
-    "q138_bloom_semi" -> (q138_bloom_semi _),
-    "q139_tfidf" -> (q139_tfidf _),
-    "q140_record_linkage" -> (q140_record_linkage _),
-    "q141_zorder" -> (q141_zorder _),
-    "q142_quantize" -> (q142_quantize _),
-    "q143_vocab_coverage" -> (q143_vocab_coverage _),
-    "q144_stateful_stream" -> (q144_stateful_stream _),
-    "q145_chunk_dedup" -> (q145_chunk_dedup _),
-    "q146_pagerank" -> (q146_pagerank _),
-    "q147_referential_audit" -> (q147_referential_audit _),
-    "q148_key_cardinality" -> (q148_key_cardinality _),
-    "q149_transition_matrix" -> (q149_transition_matrix _),
-    "q150_period_change" -> (q150_period_change _),
-    "q151_mixture_quota" -> (q151_mixture_quota _),
-    "q152_bpe_merge" -> (q152_bpe_merge _),
-    "q153_label_agreement" -> (q153_label_agreement _),
-    "q154_scd2" -> (q154_scd2 _),
-    "q155_join_hints" -> (q155_join_hints _),
-    "q156_timer_sessions" -> (q156_timer_sessions _),
-    "q157_corrupt_quarantine" -> (q157_corrupt_quarantine _),
-    "q158_hof_battery" -> (q158_hof_battery _),
-    "q159_mapstate_counts" -> (q159_mapstate_counts _),
-    "q160_scd2_lookup" -> (q160_scd2_lookup _),
-    "q161_embed_neardup_banded" -> (q161_embed_neardup_banded _),
-    "q162_semantic_dedup_banded" -> (q162_semantic_dedup_banded _),
-    "q163_label_agreement_banded" -> (q163_label_agreement_banded _),
-    "q164_pagerank_dangling" -> (q164_pagerank_dangling _),
-    "q165_versioned_timetravel" -> (q165_versioned_timetravel _),
-    "q166_image_decode" -> (q166_image_decode _),
-    "q167_audio_decode" -> (q167_audio_decode _),
-    "q168_window_dedup" -> (q168_window_dedup _),
-    "q169_stream_versioned" -> (q169_stream_versioned _),
-    "q170_cdc_apply" -> (q170_cdc_apply _),
-    "q171_triangle_count" -> (q171_triangle_count _),
-    "q172_heavy_hitters" -> (q172_heavy_hitters _),
-    "q173_spacesaving" -> (q173_spacesaving _),
-    "q174_sorted_neighborhood" -> (q174_sorted_neighborhood _),
-    "q175_versioned_merge" -> (q175_versioned_merge _),
-    "q176_versioned_delta" -> (q176_versioned_delta _),
-    "q177_golden_record" -> (q177_golden_record _),
-    "q178_concurrency_sweep" -> (q178_concurrency_sweep _),
-    "q179_stream_static" -> (q179_stream_static _),
-    "q180_winsorize" -> (q180_winsorize _),
-    "q181_corpus_shuffle" -> (q181_corpus_shuffle _),
-    "q182_token_budget" -> (q182_token_budget _),
-    "q183_png_decode" -> (q183_png_decode _),
-    "q184_jpeg_decode" -> (q184_jpeg_decode _),
-    "q185_gif_frames" -> (q185_gif_frames _),
-    "q186_image_dedup" -> (q186_image_dedup _),
-    "q187_video_frames" -> (q187_video_frames _),
-    "q188_audio_g711" -> (q188_audio_g711 _),
-    "q189_versioned_changes" -> (q189_versioned_changes _),
-    "q190_unicode_clean" -> (q190_unicode_clean _),
-    "q191_versioned_point" -> (q191_versioned_point _),
-    "q192_asof_join" -> (q192_asof_join _),
-    "q193_interval_join" -> (q193_interval_join _),
-    "q194_incremental_view" -> (q194_incremental_view _),
-    "q195_seq_pack" -> (q195_seq_pack _),
-    "q196_range_join_rule" -> (q196_range_join_rule _),
-    "q197_bm25_topk" -> (q197_bm25_topk _),
-    "q198_lm_perplexity" -> (q198_lm_perplexity _),
-    "q199_ann_ivfpq" -> (q199_ann_ivfpq _),
-    "q200_zorder_box" -> (q200_zorder_box _),
-    "q201_delete_vectors" -> (q201_delete_vectors _),
-    "q202_mv_rewrite" -> (q202_mv_rewrite _),
-    "q203_mor_update" -> (q203_mor_update _),
-    "q204_hashed_classifier" -> (q204_hashed_classifier _),
-    "q205_mv_incremental_rewrite" -> (q205_mv_incremental_rewrite _),
-    "q206_restore_clone" -> (q206_restore_clone _),
-    "q207_span_dedup" -> (q207_span_dedup _),
-    "q208_knn_classify" -> (q208_knn_classify _),
-    "q209_source_quota" -> (q209_source_quota _),
-    "q210_jl_projection" -> (q210_jl_projection _),
-    "q211_interpolate" -> (q211_interpolate _),
-    "q212_minhash_det" -> (q212_minhash_det _),
-    "q213_simhash_det" -> (q213_simhash_det _),
-    "q214_centroid_shard" -> (q214_centroid_shard _),
-    "q215_fingerprint_det" -> (q215_fingerprint_det _),
-    "q216_winnow_fingerprints" -> (q216_winnow_fingerprints _),
-    "q217_kmeans_quantized" -> (q217_kmeans_quantized _),
-    "q218_semdedup" -> (q218_semdedup _),
-    "q219_bpe_learn" -> (q219_bpe_learn _),
-    "q220_bpe_segment" -> (q220_bpe_segment _),
-    "q221_mmr_rerank" -> (q221_mmr_rerank _),
-    "q222_pagerank" -> (q222_pagerank _),
-    "q223_ann_lsh_det" -> (q223_ann_lsh_det _),
-    "q224_ann_ivf_det" -> (q224_ann_ivf_det _),
-    "q225_ann_pq_det" -> (q225_ann_pq_det _),
-    "q226_semdedup_far" -> (q226_semdedup_far _),
-    "q227_gram_matrix" -> (q227_gram_matrix _),
-    "q228_covariance" -> (q228_covariance _),
-    "q229_pca_project" -> (q229_pca_project _),
-    "q230_kcore" -> (q230_kcore _),
-    "q231_label_prop" -> (q231_label_prop _),
-    "q232_split_leakage" -> (q232_split_leakage _),
-    "q233_drift_shift" -> (q233_drift_shift _),
-    "q234_hilbert_layout" -> (q234_hilbert_layout _),
-    "q235_countmin" -> (q235_countmin _),
-    "q236_mad_outliers" -> (q236_mad_outliers _),
-    "q237_dsir_scores" -> (q237_dsir_scores _),
-    "q238_rendezvous_shard" -> (q238_rendezvous_shard _),
-    "q239_bfs_layers" -> (q239_bfs_layers _),
-    "q240_trend_ols" -> (q240_trend_ols _),
-    "q241_cusum" -> (q241_cusum _),
-    "q242_pca2_project" -> (q242_pca2_project _),
-    "q243_joinsize_sketch" -> (q243_joinsize_sketch _),
-    "q244_shard_purity" -> (q244_shard_purity _),
-    "q245_h264_frames" -> (q245_h264_frames _),
-    "q246_mixture_sample" -> (q246_mixture_sample _),
-    "q247_stream_neardup_gate" -> (q247_stream_neardup_gate _),
-    "q248_refine_quantiles" -> (q248_refine_quantiles _),
-    "q249_group_quantiles" -> (q249_group_quantiles _),
-    "q250_balanced_range_bins" -> (q250_balanced_range_bins _),
-    "q251_tokenmass_quantiles" -> (q251_tokenmass_quantiles _),
-    "q252_dist_drift" -> (q252_dist_drift _),
-    "q253_stream_drift" -> (q253_stream_drift _),
-    "q254_containment_pairs" -> (q254_containment_pairs _),
-    "q255_containment_indexed" -> (q255_containment_indexed _),
-    "q256_gopher_rules" -> (q256_gopher_rules _),
-    "q257_bpe_distributed" -> (q257_bpe_distributed _),
-    "q258_gopher_repetition" -> (q258_gopher_repetition _),
-    "q259_corpus_prep" -> (q259_corpus_prep _),
-    "q260_unigram_vocab" -> (q260_unigram_vocab _),
-    "q261_unigram_segment" -> (q261_unigram_segment _),
-    "q262_unigram_prune" -> (q262_unigram_prune _),
-    "q263_kneser_ney" -> (q263_kneser_ney _),
-    "q264_wordpiece_learn" -> (q264_wordpiece_learn _),
-    "q265_wordpiece_segment" -> (q265_wordpiece_segment _),
-    "q266_ccnet_buckets" -> (q266_ccnet_buckets _),
-    "q267_suffix_ranks" -> (q267_suffix_ranks _),
-    "q268_c4_rules" -> (q268_c4_rules _),
-    "q269_c4_span_dedup" -> (q269_c4_span_dedup _),
-    "q270_stream_c4_gate" -> (q270_stream_c4_gate _),
-    "q271_modified_kn" -> (q271_modified_kn _),
-    "q272_fineweb_prep" -> (q272_fineweb_prep _),
-    "q273_tokenizer_fertility" -> (q273_tokenizer_fertility _),
-    "q274_stream_wordpiece" -> (q274_stream_wordpiece _),
-    "q275_image_neardup" -> (q275_image_neardup _),
-    "q284_image_phash_neardup" -> (q284_image_phash_neardup _),
-    "q285_video_neardup" -> (q285_video_neardup _),
-    "q286_audio_neardup" -> (q286_audio_neardup _),
-    "q287_bpe_bytes_learn" -> (q287_bpe_bytes_learn _),
-    "q288_bpe_bytes_segment" -> (q288_bpe_bytes_segment _),
-    "q289_quality_calibrated" -> (q289_quality_calibrated _),
-    "q290_stream_image_gate" -> (q290_stream_image_gate _),
-    "q291_stream_audio_gate" -> (q291_stream_audio_gate _),
-    "q292_calibration_ece" -> (q292_calibration_ece _),
-    "q276_exactsubstr_strip" -> (q276_exactsubstr_strip _),
-    "q277_fineweb_strip" -> (q277_fineweb_strip _),
-    "q278_unigram_softem" -> (q278_unigram_softem _),
-    "q279_containment_gate" -> (q279_containment_gate _),
-    "q280_stream_containment_gate" -> (q280_stream_containment_gate _),
-    "q281_quality_perceptron" -> (q281_quality_perceptron _),
-    "q282_decontaminate_strip" -> (q282_decontaminate_strip _),
-    "q283_stream_quality_score" -> (q283_stream_quality_score _),
-  )
+  /** How a query's result is checked: exactly one of the two per query. */
+  sealed trait Check
+  /** DuckDB SQL whose result must equal the query's exactly. Taken by name,
+    * so building [[queries]] never evaluates an oracle. */
+  final class Oracle(sql0: => String) extends Check { def sql: String = sql0 }
+  object Oracle { def apply(sql: => String): Oracle = new Oracle(sql) }
+  /** Deliberately un-oracled: approximate / hash-family semantics no ANSI
+    * engine reproduces. `why` names the oracle-checked exact twin or spec
+    * that pins correctness instead; Verify publishes it (rows_only.json) so
+    * the correctness artifact says why a query has no oracle. */
+  final case class RowsOnly(why: String) extends Check
 
-  /** q252's oracle, shared with q253's streaming drain (row-identical by
-    * construction): even-id half = reference, odd-id half = current. */
+  /** One declared query: its name, its builder, its check, and whether the
+    * bench times it (see [[headlineQueries]]). */
+  final case class QuerySpec(name: String, build: (SparkSession, String) => DataFrame,
+      check: Check, benched: Boolean = true)
+
+  /** The catalog indexed by name. A name declared twice fails loudly (a Map
+    * literal would silently keep the last). */
+  private[graft] def byName(specs: Seq[QuerySpec]): Map[String, QuerySpec] = {
+    val dups = specs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"query names declared twice: ${dups.toSeq.sorted.mkString(", ")}")
+    specs.map(q => q.name -> q).toMap
+  }
+
+  private lazy val catalogByName: Map[String, QuerySpec] = byName(catalog)
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    catalogByName.map { case (n, q) => n -> q.build }
+
+  lazy val oracleSql: Map[String, String] =
+    catalogByName.collect { case (n, QuerySpec(_, _, o: Oracle, _)) => n -> o.sql }
+
+  lazy val rowsOnlyByDesign: Map[String, String] =
+    catalogByName.collect { case (n, QuerySpec(_, _, RowsOnly(why), _)) => n -> why }
+
+  /** Bench set: every catalog entry except the eight `benched = false`
+    * ones, the deliberately brute-force O(n²) *correctness baselines*, each
+    * retired to oracle/differential duty once its scale-safe form is wired:
+    * q35 (exact-Jaccard twin of the MinHash path q36), the r4 retirements
+    * q41/q137/q153 (theta-join twins of the banded q161/q162/q163), the r5
+    * retirement q140 (exhaustive blocked linkage — Σ block² pairs by
+    * definition; its scale-safe default is the sorted-neighborhood
+    * q174/q177, and LinkageSpec holds the two forms against each other
+    * differentially), and q254 (exact containment pairs; the indexed q255
+    * shares its oracle). At bench scale the operator a real deployment
+    * runs IS the bucketed/banded form; timing the N² twins would benchmark
+    * algorithms the library exists to avoid.
+    *
+    * Same discipline for the r7 ORACLE-BRIDGE forms q212/q213: their whole
+    * point is md5-affine hashes an external engine reproduces (hash-exact
+    * DuckDB proof of the LSH pipeline incl. candidate generation), which
+    * forces interpreted-lambda evaluation — 52 s at sf0.1 vs the 0.6 s
+    * xxhash64 codegen kernels (q36/q37) a deployment actually runs. The
+    * correctness gate runs them (sf0.01, seconds); benching them would time
+    * the deliberately-portable slow form.
+    */
+  def headlineQueries: Seq[String] =
+    catalogByName.values.filter(_.benched).map(_.name).toSeq.sorted
+
   /** Shared oracle for q254 (exact baseline) and q255 (indexed scale
     * path): directed 3-gram shingle-set containment at τ = 0.8. The size
     * prefilters are implied by the final predicate (inter ≤ min(n_a, n_b)),
@@ -5918,6 +5685,8 @@ object SparkEntry {
          (len(i.sh) > 0 AND coalesce(b.inter, 0) * 10 >= len(i.sh) * 8) AS gated
        FROM inc i LEFT JOIN best b ON b.doc_id = i.doc_id"""
 
+  /** q252's oracle, shared with q253's streaming drain (row-identical by
+    * construction): even-id half = reference, odd-id half = current. */
   private val distDriftOracleSql: String =
     """WITH t AS (
            SELECT doc_id % 2 = 0 AS is_ref,
@@ -6002,60 +5771,6 @@ object SparkEntry {
          cast(sum(CASE WHEN n_agree <= 1 THEN 1 ELSE 0 END) as bigint) AS n_suspect
        FROM per GROUP BY 1"""
 
-  /** DuckDB oracles. Dialect notes: date_diff('part', start, end) argument
-    * order; strftime for FORMAT_DATETIME; sum(BIGINT) returns HUGEINT in
-    * DuckDB → cast back to BIGINT; integer-arithmetic thresholds instead of
-    * float compares. Queries without an entry (MinHash/SimHash/LSH/xxhash64
-    * families) get the driver's rows-only check — their exact-result twins
-    * (q35, q38's brute-force, q33/q34 md5) ARE oracle-checked.
-    */
-  /** Bench set: every query except the deliberately brute-force O(n²)
-    * *correctness baselines*, each retired to oracle/differential duty once
-    * its scale-safe form is wired: q35 (exact-Jaccard twin of the MinHash
-    * path q36), the r4 retirements q41/q137/q153 (theta-join twins of the
-    * banded q161/q162/q163), and the r5 retirement q140 (exhaustive
-    * blocked linkage — Σ block² pairs by definition; its scale-safe
-    * default is the sorted-neighborhood q174/q177, and LinkageSpec holds
-    * the two forms against each other differentially). At bench scale the
-    * operator a real deployment runs IS the bucketed/banded form; timing
-    * the N² twins would benchmark algorithms the library exists to avoid.
-    *
-    * Same discipline for the r7 ORACLE-BRIDGE forms q212/q213: their whole
-    * point is md5-affine hashes an external engine reproduces (hash-exact
-    * DuckDB proof of the LSH pipeline incl. candidate generation), which
-    * forces interpreted-lambda evaluation — 52 s at sf0.1 vs the 0.6 s
-    * xxhash64 codegen kernels (q36/q37) a deployment actually runs. The
-    * correctness gate runs them (sf0.01, seconds); benching them would time
-    * the deliberately-portable slow form.
-    */
-  def headlineQueries: Seq[String] =
-    (queries.keySet -- Set("q35_jaccard_pairs", "q41_embed_neardup",
-      "q137_semantic_dedup", "q153_label_agreement",
-      "q140_record_linkage", "q212_minhash_det", "q213_simhash_det",
-      "q254_containment_pairs")).toSeq.sorted
-
-  /** Queries that are DELIBERATELY un-oracled (approximate / hash-family /
-    * stub semantics no ANSI engine reproduces), each mapped to the
-    * oracle-checked exact query or spec that pins its correctness instead.
-    * Single source of truth: EntrySpec guards the set, Verify publishes it
-    * (rows_only.json) so the correctness artifact says *why* a query has no
-    * oracle rather than leaving a null row.
-    */
-  def rowsOnlyByDesign: Map[String, String] = Map(
-    "q36_minhash_lsh" -> "exact twin q35_jaccard_pairs (oracle-checked); hash-PROVEN det twin q212; DedupSpec differential",
-    "q37_simhash_neardup" -> "hash-PROVEN det twin q213; DedupSpec differential vs exact Hamming over simhash64",
-    "q39_ann_lsh" -> "exact twin q38_ann_brute (oracle-checked); hash-PROVEN det twin q223 (candidate generation itself oracle-checked); SimilaritySpec recall bound",
-    "q43_ann_ivf" -> "exact twin q38_ann_brute; hash-PROVEN det twin q224 (whole IVF pipeline oracle-checked); SimilaritySpec recall bound",
-    "q199_ann_ivfpq" -> "exact twin q38_ann_brute; hash-PROVEN det twin q225 (train/encode/ADC oracle-checked); PqSpec exhaustive-regime identity + planted recall bound")
-  // r7: q50 (md5 stub → closed-form oracle), q69 (histogram-exact
-  // percentiles) and q70 (deterministic md5-HLL) left this set — 10 → 7.
-  // r8: q26 (DetHll estimate beside the exact count — builtin sketches stay
-  // spec-pinned in RelOps.distinctCounts) and q40 (character Rabin-Karp
-  // closed form — xxhash64 fold stays the spec-pinned fast path) — 7 → 5.
-  // The five that remain are exactly the hash-family-specific fast kernels
-  // (xxhash64 MinHash/SimHash, random-hyperplane LSH, sampled-centroid
-  // IVF/PQ), each with its hash-proven deterministic twin listed above.
-
   /** Closed-form oracle for q50: recompute the md5 stub features
     * (Multimodal.stubDecodeFeatures) in pure SQL. hex16 parses the first 4
     * hex chars of md5(text || ':' || i) via strpos — portable, no
@@ -6114,137 +5829,149 @@ object SparkEntry {
          cast(floor(0.673 * 256.0 * 576460752303423488.0 / cast(nn as double)) as bigint) AS approx_orders
        FROM n"""
 
-  def oracleSql: Map[String, String] = Map(
-    "q01_scan_project" ->
-      "SELECT c_custkey AS cust_id, c_name AS name, c_mktsegment AS segment FROM customer",
-    "q02_filter_predicates" ->
+  /** DuckDB oracles. Dialect notes: date_diff('part', start, end) argument
+    * order; strftime for FORMAT_DATETIME; sum(BIGINT) returns HUGEINT in
+    * DuckDB → cast back to BIGINT; integer-arithmetic thresholds instead of
+    * float compares. The `RowsOnly` entries (MinHash/SimHash/LSH/IVF/PQ
+    * families) get the driver's rows-only check — their exact-result twins
+    * (q35, q38's brute-force, the det twins q212/q213/q223–q225) ARE
+    * oracle-checked.
+    *
+    * Every query is declared here once, with its builder and its check;
+    * [[queries]], [[oracleSql]], [[rowsOnlyByDesign]] and
+    * [[headlineQueries]] are views of this list.
+    */
+  private lazy val catalog: Seq[QuerySpec] = Seq(
+    QuerySpec("q01_scan_project", q01_scan_project, Oracle(
+      "SELECT c_custkey AS cust_id, c_name AS name, c_mktsegment AS segment FROM customer")),
+    QuerySpec("q02_filter_predicates", q02_filter_predicates, Oracle(
       """SELECT l_orderkey, cast(l_linenumber as bigint) AS line_no, cast(l_quantity as bigint) AS qty
-         FROM lineitem WHERE l_returnflag = 'R' AND l_quantity > 30""",
-    "q03_dedup_distinct" ->
+         FROM lineitem WHERE l_returnflag = 'R' AND l_quantity > 30""")),
+    QuerySpec("q03_dedup_distinct", q03_dedup_distinct, Oracle(
       """SELECT DISTINCT l_returnflag AS returnflag, l_linestatus AS linestatus,
-           cast(l_quantity as bigint) AS qty FROM lineitem""",
-    "q04_collapse_max" ->
+           cast(l_quantity as bigint) AS qty FROM lineitem""")),
+    QuerySpec("q04_collapse_max", q04_collapse_max, Oracle(
       """SELECT l_orderkey, max(cast(l_quantity as bigint)) AS max_qty,
            max(cast(l_shipdate as date)) AS max_ship, max(l_returnflag) AS max_flag
-         FROM lineitem GROUP BY l_orderkey""",
-    "q05_groupby_agg" ->
+         FROM lineitem GROUP BY l_orderkey""")),
+    QuerySpec("q05_groupby_agg", q05_groupby_agg, Oracle(
       """SELECT l_returnflag AS returnflag, l_linestatus AS linestatus,
            cast(sum(cast(l_quantity as bigint)) as bigint) AS sum_qty,
            cast(count(*) as bigint) AS cnt,
            cast(sum(cast(l_extendedprice as decimal(18,2))) as double) AS sum_price
-         FROM lineitem GROUP BY 1, 2""",
-    "q06_conditional_counts" ->
+         FROM lineitem GROUP BY 1, 2""")),
+    QuerySpec("q06_conditional_counts", q06_conditional_counts, Oracle(
       """SELECT cast(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) as bigint) AS n_returned,
            cast(sum(CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END) as bigint) AS n_accepted,
            cast(sum(CASE WHEN l_returnflag = 'N' THEN 1 ELSE 0 END) as bigint) AS n_none
-         FROM lineitem""",
-    "q07_case_normalize" ->
+         FROM lineitem""")),
+    QuerySpec("q07_case_normalize", q07_case_normalize, Oracle(
       """SELECT o_orderkey,
            CASE WHEN o_orderpriority = '1-URGENT' THEN 'Critical'
                 WHEN o_orderpriority = '2-HIGH' THEN 'Critical'
                 WHEN o_orderpriority = '3-MEDIUM' THEN 'Normal'
                 WHEN o_orderpriority = '4-NOT SPECIFIED' THEN 'Unknown'
                 ELSE 'Low' END AS priority_class
-         FROM orders""",
-    "q08_join_broadcast" ->
+         FROM orders""")),
+    QuerySpec("q08_join_broadcast", q08_join_broadcast, Oracle(
       """SELECT o_orderkey, o_totalprice AS total_price, c_name AS cust_name, c_mktsegment AS segment
-         FROM orders JOIN customer ON o_custkey = c_custkey""",
-    "q09_join_left" ->
+         FROM orders JOIN customer ON o_custkey = c_custkey""")),
+    QuerySpec("q09_join_left", q09_join_left, Oracle(
       """SELECT c_custkey, c_name AS cust_name, o_orderkey, o_orderstatus AS status
-         FROM customer LEFT JOIN orders ON c_custkey = o_custkey""",
-    "q10_latest_per_group" ->
-      "SELECT user_id, max(ts) AS last_ts FROM events GROUP BY user_id",
-    "q11_latest_row_window" ->
+         FROM customer LEFT JOIN orders ON c_custkey = o_custkey""")),
+    QuerySpec("q10_latest_per_group", q10_latest_per_group, Oracle(
+      "SELECT user_id, max(ts) AS last_ts FROM events GROUP BY user_id")),
+    QuerySpec("q11_latest_row_window", q11_latest_row_window, Oracle(
       """SELECT user_id, event_id, event_type, ts FROM (
            SELECT user_id, event_id, event_type, ts,
              row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-           FROM events) t WHERE rn = 1""",
-    "q12_datediff" ->
+           FROM events) t WHERE rn = 1""")),
+    QuerySpec("q12_datediff", q12_datediff, Oracle(
       """SELECT l_orderkey, cast(l_linenumber as bigint) AS line_no,
            cast(date_diff('day', cast(o_orderdate as date), cast(l_shipdate as date)) as bigint) AS d_days,
            cast(date_diff('month', cast(o_orderdate as date), cast(l_shipdate as date)) as bigint) AS d_months,
            cast(date_diff('year', cast(o_orderdate as date), cast(l_shipdate as date)) as bigint) AS d_years
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey""",
-    "q13_extract_parts" ->
+         FROM lineitem JOIN orders ON l_orderkey = o_orderkey""")),
+    QuerySpec("q13_extract_parts", q13_extract_parts, Oracle(
       """SELECT o_orderkey, cast(year(o_orderdate) as bigint) AS y,
            cast(quarter(o_orderdate) as bigint) AS q,
            cast(month(o_orderdate) as bigint) AS m,
            cast(day(o_orderdate) as bigint) AS d
-         FROM orders""",
-    "q14_format_date" ->
+         FROM orders""")),
+    QuerySpec("q14_format_date", q14_format_date, Oracle(
       """SELECT o_orderkey, strftime(o_orderdate, '%Y') AS y_str,
-           strftime(o_orderdate, '%B') AS month_name FROM orders""",
-    "q15_union_distinct" ->
+           strftime(o_orderdate, '%B') AS month_name FROM orders""")),
+    QuerySpec("q15_union_distinct", q15_union_distinct, Oracle(
       """SELECT DISTINCT o_orderkey, o_orderpriority AS priority FROM orders
-         WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')""",
-    "q16_topk" ->
+         WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')""")),
+    QuerySpec("q16_topk", q16_topk, Oracle(
       """SELECT o_orderkey, o_totalprice AS total_price FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 100""",
-    "q17_stringify_retype" ->
+         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 100""")),
+    QuerySpec("q17_stringify_retype", q17_stringify_retype, Oracle(
       """SELECT cast(cast(l_orderkey as varchar) as bigint) AS l_orderkey,
            cast(cast(l_linenumber as varchar) as bigint) AS line_no,
            cast(cast(l_quantity as varchar) as double) AS qty_back,
            cast(cast(l_shipdate as varchar) as date) AS ship_back
-         FROM lineitem""",
-    "q18_sentinel_decode" ->
+         FROM lineitem""")),
+    QuerySpec("q18_sentinel_decode", q18_sentinel_decode, Oracle(
       """SELECT l_orderkey, cast(l_linenumber as bigint) AS line_no,
            cast(CASE WHEN l_returnflag = 'N' THEN cast(0 as decimal(18,2))
                 ELSE cast(cast(l_quantity as bigint) as decimal(18,2)) END as double) AS load_qty
-         FROM lineitem""",
-    "q19_null_impute" ->
+         FROM lineitem""")),
+    QuerySpec("q19_null_impute", q19_null_impute, Oracle(
       """SELECT c_mktsegment AS segment,
            CASE WHEN o_orderstatus IS NULL THEN 'Unknown' ELSE o_orderstatus END AS status_filled,
            cast(count(*) as bigint) AS cnt
          FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-         GROUP BY 1, 2""",
-    "q20_multi_join" ->
+         GROUP BY 1, 2""")),
+    QuerySpec("q20_multi_join", q20_multi_join, Oracle(
       """SELECT c_mktsegment AS segment,
            cast(sum(cast(l_extendedprice * (1 - l_discount) as decimal(18,4))) as double) AS revenue,
            cast(count(*) as bigint) AS n_lines
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
            JOIN customer ON o_custkey = c_custkey
-         GROUP BY 1""",
-    "q21_rollup" ->
+         GROUP BY 1""")),
+    QuerySpec("q21_rollup", q21_rollup, Oracle(
       """SELECT l_returnflag AS returnflag, l_linestatus AS linestatus,
            cast(count(*) as bigint) AS cnt
-         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""",
-    "q22_window_running" ->
+         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""")),
+    QuerySpec("q22_window_running", q22_window_running, Oracle(
       """SELECT user_id, event_id,
            cast(row_number() OVER w as bigint) AS rn,
            cast(sum(cast(value as decimal(18,6))) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) as double) AS running_value
-         FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)""",
-    "q23_count_distinct" ->
+         FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)""")),
+    QuerySpec("q23_count_distinct", q23_count_distinct, Oracle(
       """SELECT l_returnflag AS returnflag,
            cast(count(DISTINCT l_partkey) as bigint) AS n_parts,
            cast(count(DISTINCT l_suppkey) as bigint) AS n_supps,
            cast(count(*) as bigint) AS cnt
-         FROM lineitem GROUP BY 1""",
-    "q27_cube" ->
+         FROM lineitem GROUP BY 1""")),
+    QuerySpec("q27_cube", q27_cube, Oracle(
       """SELECT l_returnflag AS returnflag, l_linestatus AS linestatus,
            cast(count(*) as bigint) AS cnt,
            cast(sum(cast(l_quantity as bigint)) as bigint) AS sum_qty
-         FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""",
-    "q28_asof_join" ->
+         FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""")),
+    QuerySpec("q28_asof_join", q28_asof_join, Oracle(
       """SELECT p.event_id, p.user_id, p.ts, c.event_id AS click_id
          FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase') p
          ASOF LEFT JOIN (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') c
-           ON p.user_id = c.user_id AND p.ts >= c.ts""",
-    "q29_range_join" ->
+           ON p.user_id = c.user_id AND p.ts >= c.ts""")),
+    QuerySpec("q29_range_join", q29_range_join, Oracle(
       """SELECT l_orderkey, cast(l_linenumber as bigint) AS line_no,
            cast(l_quantity as bigint) AS qty, band
          FROM lineitem
          JOIN (VALUES (1, 10, 'light'), (11, 30, 'medium'), (31, 50, 'heavy')) AS r(lo, hi, band)
-           ON cast(l_quantity as bigint) BETWEEN lo AND hi""",
-    "q24_json_extract" ->
-      """SELECT event_id, cast(json_extract_string(props, '$.k') as bigint) AS k FROM events""",
-    "q25_pivot_counts" ->
+           ON cast(l_quantity as bigint) BETWEEN lo AND hi""")),
+    QuerySpec("q24_json_extract", q24_json_extract, Oracle(
+      """SELECT event_id, cast(json_extract_string(props, '$.k') as bigint) AS k FROM events""")),
+    QuerySpec("q25_pivot_counts", q25_pivot_counts, Oracle(
       """SELECT cast(ts as date) AS day, event_type, cast(count(*) as bigint) AS cnt
-         FROM events GROUP BY 1, 2""",
+         FROM events GROUP BY 1, 2""")),
     // q26: exact distinct beside the deterministic md5-HLL estimate — the
     // q70 register/rho/harmonic-mean closed form over DISTINCT
     // (flag, partkey) pairs (register max is duplicate-invariant)
-    "q26_sketch_distinct" ->
+    QuerySpec("q26_sketch_distinct", q26_sketch_distinct, Oracle(
       """WITH d AS (SELECT DISTINCT l_returnflag, l_partkey FROM lineitem),
          rr AS (
            SELECT l_returnflag,
@@ -6264,11 +5991,11 @@ object SparkEntry {
          ex AS (SELECT l_returnflag, cast(count(*) as bigint) AS exact_distinct FROM d GROUP BY 1)
          SELECT ex.l_returnflag, ex.exact_distinct,
            cast(floor(0.673 * 256.0 * 576460752303423488.0 / cast(nn as double)) as bigint) AS approx_distinct
-         FROM ex JOIN n USING (l_returnflag)""",
+         FROM ex JOIN n USING (l_returnflag)""")),
     // q40: character-level Rabin-Karp — the Horner fold replayed as
     // Σ ascii(cᵢ)·B^(n−1−i) mod M over a recursive power table (equal by
     // ring homomorphism; q215's token-level oracle is the template)
-    "q40_fingerprint_rolling" ->
+    QuerySpec("q40_fingerprint_rolling", q40_fingerprint_rolling, Oracle(
       """WITH RECURSIVE ch AS (
            SELECT doc_id, regexp_extract_all(text, '.') AS cs FROM documents),
          mx AS (SELECT max(len(cs)) AS m FROM ch),
@@ -6287,13 +6014,13 @@ object SparkEntry {
            FROM pos JOIN powers pw ON pw.k = pos.n - 1 - pos.i
            GROUP BY 1)
          SELECT t.doc_id, coalesce(a.fp, 0) AS fp
-         FROM ch t LEFT JOIN agg a ON t.doc_id = a.doc_id""",
-    "q30_text_stats" ->
+         FROM ch t LEFT JOIN agg a ON t.doc_id = a.doc_id""")),
+    QuerySpec("q30_text_stats", q30_text_stats, Oracle(
       """SELECT doc_id, cast(length(text) as bigint) AS char_len,
            cast(len(list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0)) as bigint) AS token_count,
            cast(length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) as bigint) AS punct_count
-         FROM documents""",
-    "q32_quality" ->
+         FROM documents""")),
+    QuerySpec("q32_quality", q32_quality, Oracle(
       """WITH stats AS (
            SELECT doc_id, cast(length(text) as bigint) AS n_char,
              cast(len(list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0)) as bigint) AS n_tok,
@@ -6305,8 +6032,8 @@ object SparkEntry {
                 WHEN n_punct * 10 > n_char * 3 THEN 'too_much_punct'
                 WHEN n_char > n_tok * 15 THEN 'words_too_long'
                 ELSE 'ok' END AS quality
-         FROM stats""",
-    "q31_lang_id" ->
+         FROM stats""")),
+    QuerySpec("q31_lang_id", q31_lang_id, Oracle(
       """WITH sc AS (SELECT doc_id,
            len(regexp_extract_all(text, '(?i)\b(the|and|of|to|a|in|is|that|it|for)\b')) AS s_en,
            len(regexp_extract_all(text, '(?i)\b(der|die|das|und|ist|nicht|ein|mit|auf|zu)\b')) AS s_de,
@@ -6321,21 +6048,23 @@ object SparkEntry {
                   WHEN s_fr = greatest(s_en, s_de, s_fr, s_es) THEN 'fr'
                   ELSE 'es' END
            WHEN s_zh > 0 THEN 'zh' ELSE 'und' END AS lang_pred
-         FROM sc""",
-    "q38_ann_brute" ->
+         FROM sc""")),
+    QuerySpec("q38_ann_brute", q38_ann_brute, Oracle(
       """SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
            cast(row_number() OVER (PARTITION BY q.vec_id
              ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id ASC) as bigint) AS rank
          FROM embeddings q, embeddings c
          WHERE q.label = 0 AND q.vec_id != c.vec_id
-         QUALIFY rank <= 5""",
-    "q41_embed_neardup" -> embedNearDupOracleSql,
+         QUALIFY rank <= 5""")),
+    QuerySpec("q39_ann_lsh", q39_ann_lsh, RowsOnly(
+      "exact twin q38_ann_brute (oracle-checked); hash-PROVEN det twin q223 (candidate generation itself oracle-checked); SimilaritySpec recall bound")),
+    QuerySpec("q41_embed_neardup", q41_embed_neardup, benched = false, check = Oracle(embedNearDupOracleSql)),
     // q161: the banded scale form computes the IDENTICAL pair set (recall-1
     // banding + exact verification) — same oracle proves it end-to-end
-    "q161_embed_neardup_banded" -> embedNearDupOracleSql,
-    "q51_stream_counts" ->
-      "SELECT event_type, cast(count(*) as bigint) AS cnt FROM events GROUP BY 1",
-    "q42_ngram_jaccard" ->
+    QuerySpec("q161_embed_neardup_banded", q161_embed_neardup_banded, Oracle(embedNearDupOracleSql)),
+    QuerySpec("q51_stream_counts", q51_stream_counts, Oracle(
+      "SELECT event_type, cast(count(*) as bigint) AS cnt FROM events GROUP BY 1")),
+    QuerySpec("q42_ngram_jaccard", q42_ngram_jaccard, Oracle(
       """WITH s AS (
            SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
                     i -> array_to_string(toks[i:i+2], ' '))) AS sh
@@ -6347,38 +6076,40 @@ object SparkEntry {
            cast(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) as bigint) AS uni
          FROM s a JOIN s b ON a.doc_id < b.doc_id
          WHERE len(list_intersect(a.sh, b.sh)) * 10 >=
-               (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) * 7""",
-    "q33_fingerprint" ->
-      "SELECT doc_id, md5(text) AS content_hash FROM documents",
-    "q34_dedup_exact" ->
+               (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) * 7""")),
+    QuerySpec("q43_ann_ivf", q43_ann_ivf, RowsOnly(
+      "exact twin q38_ann_brute; hash-PROVEN det twin q224 (whole IVF pipeline oracle-checked); SimilaritySpec recall bound")),
+    QuerySpec("q33_fingerprint", q33_fingerprint, Oracle(
+      "SELECT doc_id, md5(text) AS content_hash FROM documents")),
+    QuerySpec("q34_dedup_exact", q34_dedup_exact, Oracle(
       """SELECT md5(text) AS content_hash, cast(count(*) as bigint) AS n_copies,
-           min(doc_id) AS keep_id FROM documents GROUP BY 1""",
-    "q44_join_semi" ->
+           min(doc_id) AS keep_id FROM documents GROUP BY 1""")),
+    QuerySpec("q44_join_semi", q44_join_semi, Oracle(
       """SELECT o_orderkey, o_totalprice AS total_price FROM orders
          WHERE EXISTS (SELECT 1 FROM lineitem
-                       WHERE l_orderkey = o_orderkey AND l_quantity > 45)""",
-    "q45_join_anti" ->
+                       WHERE l_orderkey = o_orderkey AND l_quantity > 45)""")),
+    QuerySpec("q45_join_anti", q45_join_anti, Oracle(
       """SELECT c_custkey, c_name AS cust_name FROM customer
          WHERE NOT EXISTS (SELECT 1 FROM orders
-                           WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')""",
-    "q46_salted_join" ->
+                           WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')""")),
+    QuerySpec("q46_salted_join", q46_salted_join, Oracle(
       """SELECT o_orderpriority AS priority,
            cast(count(*) as bigint) AS n_lines,
            cast(sum(cast(l_quantity as bigint)) as bigint) AS sum_qty
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY 1""",
-    "q47_grouping_sets" ->
+         GROUP BY 1""")),
+    QuerySpec("q47_grouping_sets", q47_grouping_sets, Oracle(
       """SELECT l_returnflag AS returnflag, l_linestatus AS linestatus,
            cast(count(*) as bigint) AS cnt,
            cast(sum(cast(l_quantity as bigint)) as bigint) AS sum_qty
-         FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))""",
-    "q48_lag_lead" ->
+         FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))""")),
+    QuerySpec("q48_lag_lead", q48_lag_lead, Oracle(
       """SELECT user_id, event_id,
            lag(event_type, 1) OVER w AS prev_type,
            lead(event_type, 1) OVER w AS next_type,
            cast(dense_rank() OVER (PARTITION BY user_id ORDER BY value DESC) as bigint) AS value_rank
-         FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)""",
-    "q49_sessionize_batch" ->
+         FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)""")),
+    QuerySpec("q49_sessionize_batch", q49_sessionize_batch, Oracle(
       """WITH flagged AS (
            SELECT user_id, ts,
              CASE WHEN lag(ts, 1) OVER w IS NULL
@@ -6393,41 +6124,41 @@ object SparkEntry {
          SELECT user_id, cast(session_idx as bigint) AS session_idx,
            min(ts) AS session_start, max(ts) AS session_end,
            cast(count(*) as bigint) AS n_events
-         FROM numbered GROUP BY 1, 2""",
-    "q50_media_features" -> q50OracleSql,
-    "q52_pivot_wide" ->
+         FROM numbered GROUP BY 1, 2""")),
+    QuerySpec("q50_media_features", q50_media_features, Oracle(q50OracleSql)),
+    QuerySpec("q52_pivot_wide", q52_pivot_wide, Oracle(
       """SELECT cast(ts as date) AS day,
            cast(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) as bigint) AS n_click,
            cast(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) as bigint) AS n_error,
            cast(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) as bigint) AS n_purchase,
            cast(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) as bigint) AS n_signup,
            cast(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) as bigint) AS n_view
-         FROM events GROUP BY 1""",
-    "q53_token_bpe" ->
+         FROM events GROUP BY 1""")),
+    QuerySpec("q53_token_bpe", q53_token_bpe, Oracle(
       """SELECT doc_id,
            cast(len(regexp_extract_all(text, '[\p{L}]+|[\p{N}]|[^\p{L}\p{N}\s]')) as bigint) AS n_pieces
-         FROM documents""",
-    "q54_collect_sorted" ->
+         FROM documents""")),
+    QuerySpec("q54_collect_sorted", q54_collect_sorted, Oracle(
       """SELECT user_id,
            string_agg(event_type, ',' ORDER BY event_type) AS types_sorted,
            cast(count(*) as bigint) AS n_events
-         FROM events GROUP BY 1""",
-    "q55_explode_pos" ->
+         FROM events GROUP BY 1""")),
+    QuerySpec("q55_explode_pos", q55_explode_pos, Oracle(
       """WITH t AS (SELECT doc_id,
              list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS toks
            FROM documents)
          SELECT doc_id,
            cast(unnest(range(0, len(toks))) as bigint) AS pos,
            unnest(toks) AS token
-         FROM t""",
-    "q56_date_arith" ->
+         FROM t""")),
+    QuerySpec("q56_date_arith", q56_date_arith, Oracle(
       """SELECT o_orderkey,
            cast(o_orderdate + INTERVAL 30 DAY as date) AS due_date,
            cast(o_orderdate + INTERVAL 3 MONTH as date) AS review_date,
            last_day(o_orderdate) AS month_end,
            cast(date_trunc('month', o_orderdate) as date) AS month_start
-         FROM orders""",
-    "q57_string_funcs" ->
+         FROM orders""")),
+    QuerySpec("q57_string_funcs", q57_string_funcs, Oracle(
       """SELECT c_custkey,
            upper(c_name) AS name_upper,
            lower(c_mktsegment) AS segment_lower,
@@ -6435,26 +6166,26 @@ object SparkEntry {
            concat_ws('|', c_mktsegment, c_name) AS seg_name,
            replace(c_name, ' ', '') AS name_nospace,
            lpad(cast(c_custkey as varchar), 12, '0') AS key_padded
-         FROM customer""",
-    "q58_quantiles" ->
+         FROM customer""")),
+    QuerySpec("q58_quantiles", q58_quantiles, Oracle(
       """SELECT l_returnflag AS returnflag,
            quantile_cont(cast(l_quantity as bigint), 0.25) AS p25,
            quantile_cont(cast(l_quantity as bigint), 0.5) AS p50,
            quantile_cont(cast(l_quantity as bigint), 0.9) AS p90
-         FROM lineitem GROUP BY 1""",
-    "q59_frame_sample" ->
+         FROM lineitem GROUP BY 1""")),
+    QuerySpec("q59_frame_sample", q59_frame_sample, Oracle(
       """WITH v AS (
            SELECT doc_id, range(0, (doc_id % 10) * 1000 + 1, 2000) AS fts
            FROM documents WHERE doc_id % 3 = 2)
          SELECT doc_id AS media_id,
            cast(unnest(range(0, len(fts))) as bigint) AS frame_idx,
            cast(unnest(fts) as bigint) AS frame_ts_ms
-         FROM v""",
-    "q60_stream_windows" ->
+         FROM v""")),
+    QuerySpec("q60_stream_windows", q60_stream_windows, Oracle(
       """SELECT date_trunc('hour', ts) AS window_start, event_type,
            cast(count(*) as bigint) AS cnt
-         FROM events GROUP BY 1, 2""",
-    "q61_array_funcs" ->
+         FROM events GROUP BY 1, 2""")),
+    QuerySpec("q61_array_funcs", q61_array_funcs, Oracle(
       """WITH t AS (SELECT doc_id,
              list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS toks
            FROM documents)
@@ -6464,8 +6195,8 @@ object SparkEntry {
            toks[1] AS first_tok,
            toks[-1] AS last_tok,
            cast(coalesce(list_position(toks, 'the'), 0) as bigint) AS the_pos
-         FROM t WHERE len(toks) > 0""",
-    "q62_moment_stats" ->
+         FROM t WHERE len(toks) > 0""")),
+    QuerySpec("q62_moment_stats", q62_moment_stats, Oracle(
       """WITH m AS (
            SELECT l_returnflag AS returnflag,
              cast(count(*) as bigint) AS n,
@@ -6480,8 +6211,8 @@ object SparkEntry {
            sqrt(cast(n * sxx - sx * sx as double) / cast(n * (n - 1) as double)) AS stddev_x,
            cast(n * sxy - sx * sy as double) /
              (sqrt(cast(n * sxx - sx * sx as double)) * sqrt(cast(n * syy - sy * sy as double))) AS corr_xy
-         FROM m""",
-    "q63_intersect_except" ->
+         FROM m""")),
+    QuerySpec("q63_intersect_except", q63_intersect_except, Oracle(
       """SELECT custkey, relation FROM (
            SELECT o_custkey AS custkey, 'both' AS relation FROM (
              SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
@@ -6491,19 +6222,19 @@ object SparkEntry {
            SELECT o_custkey AS custkey, 'urgent_only' AS relation FROM (
              SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
              EXCEPT
-             SELECT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH'))""",
-    "q64_fill_down" ->
+             SELECT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH'))""")),
+    QuerySpec("q64_fill_down", q64_fill_down, Oracle(
       """SELECT user_id, event_id,
            last_value(CASE WHEN event_type = 'purchase' THEN value END IGNORE NULLS)
              OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_purchase_value
-         FROM events""",
-    "q65_try_cast" ->
+         FROM events""")),
+    QuerySpec("q65_try_cast", q65_try_cast, Oracle(
       """SELECT l_orderkey, cast(l_linenumber as bigint) AS line_no,
            TRY_CAST(cast(cast(l_quantity as bigint) as varchar) ||
              (CASE WHEN l_orderkey % 7 = 0 THEN 'x' ELSE '' END) AS BIGINT) AS qty_parsed
-         FROM lineitem""",
-    "q66_profile" ->
+         FROM lineitem""")),
+    QuerySpec("q66_profile", q66_profile, Oracle(
       """SELECT 'l_orderkey' AS column_name, cast(count(*) as bigint) AS n_rows,
            cast(sum(CASE WHEN l_orderkey IS NULL THEN 1 ELSE 0 END) as bigint) AS n_null,
            cast(count(DISTINCT l_orderkey) as bigint) AS n_distinct,
@@ -6526,8 +6257,8 @@ object SparkEntry {
            cast(sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) as bigint),
            cast(count(DISTINCT l_shipdate) as bigint),
            cast(min(l_shipdate) as varchar), cast(max(l_shipdate) as varchar)
-         FROM lineitem""",
-    "q35_jaccard_pairs" ->
+         FROM lineitem""")),
+    QuerySpec("q35_jaccard_pairs", q35_jaccard_pairs, benched = false, check = Oracle(
       """WITH sets AS (
            SELECT doc_id, list_distinct(list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0)) AS ws
            FROM documents)
@@ -6536,23 +6267,27 @@ object SparkEntry {
            cast(len(a.ws) + len(b.ws) - len(list_intersect(a.ws, b.ws)) as bigint) AS uni
          FROM sets a JOIN sets b ON a.doc_id < b.doc_id
          WHERE len(list_intersect(a.ws, b.ws)) * 10 >=
-               (len(a.ws) + len(b.ws) - len(list_intersect(a.ws, b.ws))) * 8""",
+               (len(a.ws) + len(b.ws) - len(list_intersect(a.ws, b.ws))) * 8""")),
+    QuerySpec("q36_minhash_lsh", q36_minhash_lsh, RowsOnly(
+      "exact twin q35_jaccard_pairs (oracle-checked); hash-PROVEN det twin q212; DedupSpec differential")),
+    QuerySpec("q37_simhash_neardup", q37_simhash_neardup, RowsOnly(
+      "hash-PROVEN det twin q213; DedupSpec differential vs exact Hamming over simhash64")),
     // q67: bucketing changes the physical plan, never the answer — the
     // oracle is the plain join+agg
-    "q67_bucketed_join" ->
+    QuerySpec("q67_bucketed_join", q67_bucketed_join, Oracle(
       """SELECT o_orderpriority AS priority, cast(count(*) as bigint) AS n_lines,
            cast(sum(cast(l_quantity as bigint)) as bigint) AS sum_qty
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY 1""",
-    "q68_partition_prune" ->
+         GROUP BY 1""")),
+    QuerySpec("q68_partition_prune", q68_partition_prune, Oracle(
       """SELECT o_orderpriority AS priority, cast(count(*) as bigint) AS n_orders,
            cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS sum_price
          FROM orders WHERE year(o_orderdate) = 1995
-         GROUP BY 1""",
+         GROUP BY 1""")),
     // q69: histogram-exact percentile_disc — rank = ceil(p·n), smallest
     // value whose cumulative count reaches it; all-integer, mirrors
     // sketch.HistogramQuantiles verbatim
-    "q69_approx_quantiles" ->
+    QuerySpec("q69_approx_quantiles", q69_approx_quantiles, Oracle(
       """WITH h AS (
            SELECT l_returnflag AS returnflag, cast(l_quantity as bigint) AS v,
              cast(count(*) as bigint) AS c
@@ -6566,12 +6301,12 @@ object SparkEntry {
            min(CASE WHEN cum >= ceil(0.25 * n) THEN v END) AS p25,
            min(CASE WHEN cum >= ceil(0.5 * n) THEN v END) AS p50,
            min(CASE WHEN cum >= ceil(0.9 * n) THEN v END) AS p90
-         FROM t GROUP BY 1""",
-    "q70_hll_union" -> q70OracleSql,
+         FROM t GROUP BY 1""")),
+    QuerySpec("q70_hll_union", q70_hll_union, Oracle(q70OracleSql)),
     // q71: gaps-and-islands with session_window's exact boundary semantics —
     // Spark coalesces touching windows, so merge iff gap <= 30 min (a break
     // needs STRICTLY more), and session_end is last_ts + gap
-    "q71_session_window" ->
+    QuerySpec("q71_session_window", q71_session_window, Oracle(
       """WITH g AS (
            SELECT user_id, ts,
              CASE WHEN lag(ts) OVER w IS NULL
@@ -6584,21 +6319,21 @@ object SparkEntry {
          SELECT user_id, min(ts) AS session_start,
            max(ts) + INTERVAL 30 MINUTE AS session_end,
            cast(count(*) as bigint) AS n_events
-         FROM s GROUP BY user_id, sid""",
-    "q72_stream_dedup" ->
+         FROM s GROUP BY user_id, sid""")),
+    QuerySpec("q72_stream_dedup", q72_stream_dedup, Oracle(
       """SELECT event_type, cast(count(DISTINCT event_id) as bigint) AS n_unique
-         FROM events GROUP BY 1""",
+         FROM events GROUP BY 1""")),
     // q73: the only float ops are the two final divisions, written in the
     // same order as Aggregator.finish (sum/100.0/qty)
-    "q73_typed_agg" ->
+    QuerySpec("q73_typed_agg", q73_typed_agg, Oracle(
       """SELECT l_returnflag AS returnflag,
            cast(sum(cast(cast(l_extendedprice as decimal(18,2)) * 100 as bigint)
                     * cast(l_quantity as bigint)) as double) / 100.0
              / cast(sum(cast(l_quantity as bigint)) as double) AS wavg_price
-         FROM lineitem GROUP BY 1""",
+         FROM lineitem GROUP BY 1""")),
     // q74: floor/ceil via positive-operand integer division (Spark `div`
     // truncates toward zero, DuckDB `//` floors — equal on positives)
-    "q74_math_funcs" ->
+    QuerySpec("q74_math_funcs", q74_math_funcs, Oracle(
       """SELECT l_orderkey, cast(l_linenumber as bigint) AS line_no,
            abs(cast(l_quantity as bigint) - 25) AS abs_dev,
            cast(cast(cast(l_extendedprice as decimal(18,2)) * 100 as bigint) // 100000 as bigint) AS price_kfloor,
@@ -6606,35 +6341,35 @@ object SparkEntry {
            sqrt(cast(cast(l_quantity as bigint) as double)) AS qty_sqrt,
            l_orderkey % 7 AS key_mod7,
            cast(sign(cast(l_quantity as double) - 25.0) as bigint) AS dev_sign
-         FROM lineitem""",
-    "q75_conditional_funcs" ->
+         FROM lineitem""")),
+    QuerySpec("q75_conditional_funcs", q75_conditional_funcs, Oracle(
       """SELECT o_orderkey,
            coalesce(nullif(o_orderpriority, '4-NOT SPECIFIED'), 'UNSPECIFIED') AS priority_clean,
            greatest(o_totalprice, 100000.0) AS price_floor,
            least(o_totalprice, 100000.0) AS price_cap,
            coalesce(o_orderstatus, '?') AS status_nn,
            CASE WHEN o_totalprice > 200000.0 THEN 'big' ELSE 'small' END AS size_class
-         FROM orders""",
+         FROM orders""")),
     // q76: RE2-safe patterns; DuckDB regexp_replace needs the 'g' flag to
     // match Spark's global-replace default
-    "q76_regex_funcs" ->
+    QuerySpec("q76_regex_funcs", q76_regex_funcs, Oracle(
       """SELECT doc_id,
            regexp_extract(text, '([A-Za-z]+)', 1) AS first_word,
            cast(len(regexp_extract_all(text, '[0-9]+')) as bigint) AS n_numruns,
            regexp_replace(text, '[0-9]+', '#', 'g') AS masked,
            regexp_matches(text, 'data') AS has_data
-         FROM documents""",
+         FROM documents""")),
     // q77: merge heals the stale snapshot back to the source — the oracle
     // aggregates the source directly
-    "q77_incremental_merge" ->
+    QuerySpec("q77_incremental_merge", q77_incremental_merge, Oracle(
       """SELECT o_orderstatus AS status, cast(count(*) as bigint) AS n_orders,
            cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS sum_price
-         FROM orders GROUP BY 1""",
-    "q78_map_funcs" ->
+         FROM orders GROUP BY 1""")),
+    QuerySpec("q78_map_funcs", q78_map_funcs, Oracle(
       """SELECT o_orderkey, o_orderstatus AS m_status, true AS has_priority,
            cast(2 as bigint) AS m_size, 'orders' AS m_source
-         FROM orders""",
-    "q79_unpivot" ->
+         FROM orders""")),
+    QuerySpec("q79_unpivot", q79_unpivot, Oracle(
       """WITH a AS (
            SELECT l_returnflag AS returnflag,
              cast(sum(cast(l_quantity as bigint)) as bigint) AS sum_qty,
@@ -6643,17 +6378,17 @@ object SparkEntry {
            FROM lineitem GROUP BY 1)
          SELECT returnflag, 'sum_qty' AS measure, sum_qty AS value FROM a
          UNION ALL SELECT returnflag, 'cnt' AS measure, cnt AS value FROM a
-         UNION ALL SELECT returnflag, 'max_qty' AS measure, max_qty AS value FROM a""",
-    "q80_range_frame" ->
+         UNION ALL SELECT returnflag, 'max_qty' AS measure, max_qty AS value FROM a""")),
+    QuerySpec("q80_range_frame", q80_range_frame, Oracle(
       """SELECT user_id, event_id, vfloor,
            cast(count(*) OVER fr as bigint) AS n_near,
            cast(sum(vfloor) OVER fr as bigint) AS sum_near
          FROM (SELECT user_id, event_id, cast(floor(value) as bigint) AS vfloor FROM events)
          WINDOW fr AS (PARTITION BY user_id ORDER BY vfloor
-                       RANGE BETWEEN 10 PRECEDING AND CURRENT ROW)""",
+                       RANGE BETWEEN 10 PRECEDING AND CURRENT ROW)""")),
     // q81: DuckDB range(1,0) is empty (never descends) so the bigram list is
     // safely empty for 0/1-token docs; Spark side has an explicit guard
-    "q81_repetition" ->
+    QuerySpec("q81_repetition", q81_repetition, Oracle(
       """WITH t AS (SELECT doc_id,
              list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS toks
            FROM documents),
@@ -6671,8 +6406,8 @@ object SparkEntry {
            CASE WHEN len(bg) > 0
                 THEN cast(len(bg) - len(list_distinct(bg)) as double) / cast(len(bg) as double)
                 ELSE 0.0 END AS dup_bigram_frac
-         FROM b""",
-    "q82_pii_mask" ->
+         FROM b""")),
+    QuerySpec("q82_pii_mask", q82_pii_mask, Oracle(
       """WITH a AS (SELECT doc_id,
              text || ' contact user' || cast(doc_id as varchar) ||
                '@example.com or call +1-555-' || lpad(cast(doc_id % 10000 as varchar), 7, '0') AS aug
@@ -6682,16 +6417,16 @@ object SparkEntry {
            cast(len(regexp_extract_all(aug, '[+][0-9][0-9-]{5,}')) as bigint) AS n_phones,
            regexp_replace(regexp_replace(aug, '[A-Za-z0-9_.]+@[A-Za-z0-9_.-]+', '<EMAIL>', 'g'),
              '[+][0-9][0-9-]{5,}', '<PHONE>', 'g') AS masked
-         FROM a""",
+         FROM a""")),
     // q83: md5 of the stringified key is engine-identical; lowercase hex
     // compares lexicographically == numerically at fixed width
-    "q83_hash_sample" ->
+    QuerySpec("q83_hash_sample", q83_hash_sample, Oracle(
       """SELECT o_orderkey, o_orderpriority AS priority, o_totalprice AS total_price
          FROM orders
          WHERE CASE WHEN o_orderpriority = '1-URGENT'
                     THEN substring(md5(cast(o_orderkey as varchar)), 1, 4) < '8000'
-                    ELSE substring(md5(cast(o_orderkey as varchar)), 1, 4) < '199a' END""",
-    "q84_date_spine" ->
+                    ELSE substring(md5(cast(o_orderkey as varchar)), 1, 4) < '199a' END""")),
+    QuerySpec("q84_date_spine", q84_date_spine, Oracle(
       """WITH daily AS (
            SELECT user_id, cast(ts as date) AS day, cast(count(*) as bigint) AS n
            FROM events GROUP BY 1, 2),
@@ -6700,8 +6435,8 @@ object SparkEntry {
              cast(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) as date) AS day
            FROM bounds)
          SELECT s.user_id, s.day, coalesce(n, 0) AS n_events
-         FROM spine s LEFT JOIN daily d ON s.user_id = d.user_id AND s.day = d.day""",
-    "q85_levenshtein" ->
+         FROM spine s LEFT JOIN daily d ON s.user_id = d.user_id AND s.day = d.day""")),
+    QuerySpec("q85_levenshtein", q85_levenshtein, Oracle(
       """WITH t AS (SELECT p_partkey,
              p_type || repeat('x', cast(p_partkey % 3 as int)) AS dirty
            FROM part)
@@ -6713,8 +6448,8 @@ object SparkEntry {
                  AND levenshtein(dirty, 'ECONOMY') <= levenshtein(dirty, 'PROMO') THEN 'ECONOMY'
                 WHEN levenshtein(dirty, 'STANDARD') <= levenshtein(dirty, 'PROMO') THEN 'STANDARD'
                 ELSE 'PROMO' END AS canonical
-         FROM t""",
-    "q86_rank_battery" ->
+         FROM t""")),
+    QuerySpec("q86_rank_battery", q86_rank_battery, Oracle(
       """SELECT o_custkey AS custkey, o_orderkey,
            cast(rank() OVER w as bigint) AS rnk,
            cast(dense_rank() OVER w as bigint) AS drnk,
@@ -6722,10 +6457,10 @@ object SparkEntry {
            percent_rank() OVER w AS pct_rank,
            cume_dist() OVER w AS cdist
          FROM orders
-         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC)""",
+         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC)""")),
     // q87: z from exact integer (n, Σx, Σx²); the float formula is written
     // in the identical operation order on both sides
-    "q87_zscore_outliers" ->
+    QuerySpec("q87_zscore_outliers", q87_zscore_outliers, Oracle(
       """WITH st AS (
            SELECT l_returnflag AS rf, cast(count(*) as bigint) AS n,
              cast(sum(cast(l_quantity as bigint)) as bigint) AS sx,
@@ -6737,11 +6472,11 @@ object SparkEntry {
              sqrt(cast(n * sxx - sx * sx as double) / cast(n * (n - 1) as double)) AS z,
            abs((cast(cast(l_quantity as bigint) as double) - cast(sx as double) / cast(n as double)) /
              sqrt(cast(n * sxx - sx * sx as double) / cast(n * (n - 1) as double))) > 2.0 AS is_outlier
-         FROM lineitem JOIN st ON l_returnflag = rf""",
+         FROM lineitem JOIN st ON l_returnflag = rf""")),
     // q88: same pair set as q42 (hash-distinct == string-distinct shingle
     // counts), closed transitively by a recursive CTE; min reachable id is
     // the cluster id
-    "q88_dup_clusters" ->
+    QuerySpec("q88_dup_clusters", q88_dup_clusters, Oracle(
       """WITH RECURSIVE s AS (
            SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
                     i -> array_to_string(toks[i:i+2], ' '))) AS sh
@@ -6759,24 +6494,24 @@ object SparkEntry {
            SELECT doc_id, doc_id FROM documents
            UNION
            SELECT e.dst, w.lab FROM walk w JOIN edges e ON e.src = w.id)
-         SELECT id AS doc_id, min(lab) AS cluster_id FROM walk GROUP BY id""",
+         SELECT id AS doc_id, min(lab) AS cluster_id FROM walk GROUP BY id""")),
     // q89: DuckDB range(0, n, 96) == Spark sequence(0, n-1, 96) for n > 0;
     // both empty for empty docs
-    "q89_chunk_windows" ->
+    QuerySpec("q89_chunk_windows", q89_chunk_windows, Oracle(
       """WITH t AS (SELECT doc_id,
              cast(len(list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0)) as bigint) AS n_tok
            FROM documents)
          SELECT doc_id, cast(st // 96 as bigint) AS chunk_idx,
            cast(st as bigint) AS tok_start,
            cast(least(st + 128, n_tok) as bigint) AS tok_end
-         FROM (SELECT doc_id, n_tok, unnest(range(0, n_tok, 96)) AS st FROM t)""",
-    "q90_vocab_topn" ->
+         FROM (SELECT doc_id, n_tok, unnest(range(0, n_tok, 96)) AS st FROM t)""")),
+    QuerySpec("q90_vocab_topn", q90_vocab_topn, Oracle(
       """SELECT token, cast(count(*) as bigint) AS n FROM (
            SELECT unnest(list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0)) AS token
            FROM documents)
          WHERE regexp_matches(token, '^[a-z]+$')
-         GROUP BY 1 ORDER BY n DESC, token ASC LIMIT 200""",
-    "q91_stream_join" ->
+         GROUP BY 1 ORDER BY n DESC, token ASC LIMIT 200""")),
+    QuerySpec("q91_stream_join", q91_stream_join, Oracle(
       """SELECT c.user_id, cast(count(*) as bigint) AS n_pairs,
            cast(count(DISTINCT c.event_id) as bigint) AS n_lefts,
            cast(count(DISTINCT p.event_id) as bigint) AS n_rights
@@ -6784,15 +6519,15 @@ object SparkEntry {
            ON c.user_id = p.user_id
            AND c.event_type = 'click' AND p.event_type = 'purchase'
            AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
-         GROUP BY 1""",
-    "q92_minmax_scale" ->
+         GROUP BY 1""")),
+    QuerySpec("q92_minmax_scale", q92_minmax_scale, Oracle(
       """SELECT o_orderkey, o_orderpriority AS priority, o_totalprice AS total_price,
            CASE WHEN max(o_totalprice) OVER w = min(o_totalprice) OVER w THEN 0.5
                 ELSE (o_totalprice - min(o_totalprice) OVER w) /
                      (max(o_totalprice) OVER w - min(o_totalprice) OVER w) END AS price_scaled
          FROM orders
-         WINDOW w AS (PARTITION BY o_orderpriority)""",
-    "q93_full_outer" ->
+         WINDOW w AS (PARTITION BY o_orderpriority)""")),
+    QuerySpec("q93_full_outer", q93_full_outer, Oracle(
       """WITH c AS (SELECT c_custkey AS ckey, c_name FROM customer WHERE c_custkey % 3 = 0),
          o AS (SELECT o_custkey, cast(count(*) as bigint) AS n_urgent
                FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY 1)
@@ -6801,21 +6536,21 @@ object SparkEntry {
            coalesce(n_urgent, 0) AS n_urgent,
            ckey IS NOT NULL AS in_dim,
            o_custkey IS NOT NULL AS in_fact
-         FROM c FULL OUTER JOIN o ON ckey = o_custkey""",
-    "q94_cross_join" ->
+         FROM c FULL OUTER JOIN o ON ckey = o_custkey""")),
+    QuerySpec("q94_cross_join", q94_cross_join, Oracle(
       """SELECT r_regionkey, n_nationkey,
            r_name || '/' || n_name AS pair_label
-         FROM region CROSS JOIN nation""",
+         FROM region CROSS JOIN nation""")),
     // q95: each event expands into windowLen/slide = 4 epoch-aligned window
     // starts (time_bucket == Spark's slide-aligned window start)
-    "q95_sliding_windows" ->
+    QuerySpec("q95_sliding_windows", q95_sliding_windows, Oracle(
       """SELECT ws AS window_start, event_type, cast(count(*) as bigint) AS cnt
          FROM (SELECT event_type,
                  unnest(generate_series(time_bucket(INTERVAL 15 MINUTE, ts) - INTERVAL 45 MINUTE,
                    time_bucket(INTERVAL 15 MINUTE, ts), INTERVAL 15 MINUTE)) AS ws
                FROM events)
-         GROUP BY 1, 2""",
-    "q96_mode" ->
+         GROUP BY 1, 2""")),
+    QuerySpec("q96_mode", q96_mode, Oracle(
       """WITH c AS (SELECT user_id, event_type, cast(count(*) as bigint) AS cnt
                     FROM events GROUP BY 1, 2),
          r AS (SELECT user_id, event_type, cnt,
@@ -6824,24 +6559,24 @@ object SparkEntry {
                FROM c)
          SELECT user_id, event_type AS mode_type, cnt AS mode_count,
            cast(n_events as bigint) AS n_events
-         FROM r WHERE rn = 1""",
+         FROM r WHERE rn = 1""")),
     // q97: the round-trip is the identity — the oracle reads the original
     // columns straight off the table
-    "q97_json_struct" ->
+    QuerySpec("q97_json_struct", q97_json_struct, Oracle(
       """SELECT event_id, event_id AS id_back, event_type AS type_back, user_id AS user_back
-         FROM events""",
+         FROM events""")),
     // q98/q99: lossless round-trip — the oracle aggregates the original
-    "q98_csv_roundtrip" ->
+    QuerySpec("q98_csv_roundtrip", q98_csv_roundtrip, Oracle(
       """SELECT o_orderpriority AS priority, cast(count(*) as bigint) AS n_orders,
            cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS sum_price,
            min(cast(o_orderdate as date)) AS first_date,
            max(cast(o_orderdate as date)) AS last_date
-         FROM orders GROUP BY 1""",
-    "q99_json_roundtrip" ->
+         FROM orders GROUP BY 1""")),
+    QuerySpec("q99_json_roundtrip", q99_json_roundtrip, Oracle(
       """SELECT o_orderpriority AS priority, cast(count(*) as bigint) AS n_orders,
            cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS sum_price
-         FROM orders GROUP BY 1""",
-    "q100_value_windows" ->
+         FROM orders GROUP BY 1""")),
+    QuerySpec("q100_value_windows", q100_value_windows, Oracle(
       """SELECT user_id, event_id,
            first_value(event_type) OVER run AS first_type,
            last_value(event_type) OVER whole AS last_type,
@@ -6850,15 +6585,15 @@ object SparkEntry {
          WINDOW run AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
            whole AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""",
-    "q101_union_evolve" ->
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""")),
+    QuerySpec("q101_union_evolve", q101_union_evolve, Oracle(
       """SELECT o_orderkey, priority, total_price FROM (
            SELECT o_orderkey, o_orderpriority AS priority, NULL::double AS total_price
            FROM orders WHERE o_orderkey % 2 = 0
            UNION ALL BY NAME
            SELECT o_orderkey, o_orderpriority AS priority, o_totalprice AS total_price
-           FROM orders WHERE o_orderkey % 2 = 1)""",
-    "q102_merge_schema" ->
+           FROM orders WHERE o_orderkey % 2 = 1)""")),
+    QuerySpec("q102_merge_schema", q102_merge_schema, Oracle(
       """WITH merged AS (
            SELECT o_orderpriority, NULL::double AS o_totalprice
            FROM orders WHERE o_orderkey % 2 = 0
@@ -6868,8 +6603,8 @@ object SparkEntry {
          SELECT o_orderpriority AS priority, cast(count(*) as bigint) AS n_orders,
            cast(sum(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) as bigint) AS n_legacy_rows,
            cast(sum(cast(coalesce(o_totalprice, 0.0) as decimal(18,2))) as double) AS sum_price_new
-         FROM merged GROUP BY 1""",
-    "q103_snapshot_diff" ->
+         FROM merged GROUP BY 1""")),
+    QuerySpec("q103_snapshot_diff", q103_snapshot_diff, Oracle(
       """WITH today AS (
            SELECT o_orderkey AS k_new,
              md5(cast(cast(o_totalprice as decimal(18,2)) as varchar) || '|' || o_orderpriority) AS h_new
@@ -6886,28 +6621,28 @@ object SparkEntry {
                      ELSE 'unchanged' END AS status,
            cast(count(*) as bigint) AS n_rows
          FROM today FULL OUTER JOIN yesterday ON k_new = k_old
-         GROUP BY 1""",
+         GROUP BY 1""")),
     // q104: the merged partials must equal one monolithic pass exactly
-    "q104_incremental_stats" ->
+    QuerySpec("q104_incremental_stats", q104_incremental_stats, Oracle(
       """SELECT l_returnflag AS returnflag, cast(count(*) as bigint) AS n,
            cast(count(*) * sum(cast(l_quantity as bigint) * cast(l_quantity as bigint))
                 - sum(cast(l_quantity as bigint)) * sum(cast(l_quantity as bigint)) as double) /
              cast(count(*) * (count(*) - 1) as double) AS var_qty
-         FROM lineitem GROUP BY 1""",
-    "q105_topk_per_group" ->
+         FROM lineitem GROUP BY 1""")),
+    QuerySpec("q105_topk_per_group", q105_topk_per_group, Oracle(
       """SELECT o_custkey AS custkey, cast(rnk as bigint) AS rnk, o_orderkey,
            o_totalprice AS total_price
          FROM (SELECT o_custkey, o_orderkey, o_totalprice,
                  row_number() OVER (PARTITION BY o_custkey
                    ORDER BY o_totalprice DESC, o_orderkey ASC) AS rnk
                FROM orders)
-         WHERE rnk <= 3""",
-    "q106_orc_roundtrip" ->
+         WHERE rnk <= 3""")),
+    QuerySpec("q106_orc_roundtrip", q106_orc_roundtrip, Oracle(
       """SELECT o_orderpriority AS priority, cast(count(*) as bigint) AS n_orders,
            cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS sum_price,
            min(cast(o_orderdate as date)) AS first_date
-         FROM orders GROUP BY 1""",
-    "q107_nullsafe_join" ->
+         FROM orders GROUP BY 1""")),
+    QuerySpec("q107_nullsafe_join", q107_nullsafe_join, Oracle(
       """WITH dim AS (
            SELECT * FROM (VALUES ('1-URGENT', 'now'), ('2-HIGH', 'soon'),
              ('3-MEDIUM', 'later'), ('5-LOW', 'whenever'), (NULL, 'unknown'))
@@ -6917,8 +6652,8 @@ object SparkEntry {
            FROM orders)
          SELECT sla, cast(count(*) as bigint) AS n_orders
          FROM facts JOIN dim ON priority IS NOT DISTINCT FROM d_priority
-         GROUP BY 1""",
-    "q108_dedup_keep_best" ->
+         GROUP BY 1""")),
+    QuerySpec("q108_dedup_keep_best", q108_dedup_keep_best, Oracle(
       """WITH RECURSIVE s AS (
            SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
                     i -> array_to_string(toks[i:i+2], ' '))) AS sh
@@ -6945,8 +6680,8 @@ object SparkEntry {
            FROM clusters c JOIN documents d ON c.doc_id = d.doc_id)
          SELECT cluster_id, doc_id AS keeper_id, n_chars AS keeper_chars,
            cast(n_members as bigint) AS n_members
-         FROM ranked WHERE rn = 1""",
-    "q109_quality_filter" ->
+         FROM ranked WHERE rn = 1""")),
+    QuerySpec("q109_quality_filter", q109_quality_filter, Oracle(
       """WITH t AS (SELECT doc_id, text,
              list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS toks
            FROM documents),
@@ -6970,14 +6705,14 @@ object SparkEntry {
                              ELSE 'es' END
                       WHEN s_zh > 0 THEN 'zh' ELSE 'und' END) <> 'en' THEN 'non_english'
                 ELSE 'keep' END AS verdict
-         FROM sc""",
-    "q110_typed_lambda" ->
+         FROM sc""")),
+    QuerySpec("q110_typed_lambda", q110_typed_lambda, Oracle(
       """SELECT l_returnflag AS returnflag, cast(count(*) as bigint) AS n_lines,
            cast(sum(cast(l_quantity as bigint) - 30) as bigint) AS excess_qty
          FROM lineitem
          WHERE cast(l_quantity as bigint) > 30 AND l_returnflag <> 'N'
-         GROUP BY 1""",
-    "q111_funnel" ->
+         GROUP BY 1""")),
+    QuerySpec("q111_funnel", q111_funnel, Oracle(
       """WITH fc AS (
            SELECT user_id, min(ts) AS c_ts FROM events
            WHERE event_type = 'click' GROUP BY 1),
@@ -6991,8 +6726,8 @@ object SparkEntry {
          SELECT cast(count(*) as bigint) AS n_clickers,
            cast(sum(CASE WHEN first_p_ts IS NOT NULL THEN 1 ELSE 0 END) as bigint) AS n_converted,
            cast(sum(CASE WHEN first_p_ts <= c_ts + INTERVAL 1 DAY THEN 1 ELSE 0 END) as bigint) AS n_converted_1d
-         FROM conv""",
-    "q112_cohort" ->
+         FROM conv""")),
+    QuerySpec("q112_cohort", q112_cohort, Oracle(
       """WITH weekly AS (
            SELECT DISTINCT user_id, cast(date_trunc('week', ts) as date) AS wk FROM events),
          cohort AS (SELECT user_id, min(wk) AS c_wk FROM weekly GROUP BY 1)
@@ -7000,29 +6735,29 @@ object SparkEntry {
            cast(date_diff('day', c_wk, wk) // 7 as bigint) AS week_offset,
            cast(count(*) as bigint) AS n_active_users
          FROM weekly JOIN cohort USING (user_id)
-         GROUP BY 1, 2""",
-    "q113_pack_bins" ->
+         GROUP BY 1, 2""")),
+    QuerySpec("q113_pack_bins", q113_pack_bins, Oracle(
       """WITH t AS (SELECT doc_id, doc_id % 8 AS shard,
              cast(len(list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0)) as bigint) AS n_tok
            FROM documents)
          SELECT doc_id, shard, n_tok,
            cast(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 4096 as bigint) AS bin
-         FROM t""",
-    "q114_split_labels" ->
+         FROM t""")),
+    QuerySpec("q114_split_labels", q114_split_labels, Oracle(
       """SELECT doc_id,
            CASE WHEN substring(md5(cast(doc_id as varchar)), 1, 4) < 'cccd' THEN 'train'
                 WHEN substring(md5(cast(doc_id as varchar)), 1, 4) < 'e666' THEN 'val'
                 ELSE 'test' END AS split
-         FROM documents""",
-    "q115_normalize" ->
+         FROM documents""")),
+    QuerySpec("q115_normalize", q115_normalize, Oracle(
       """SELECT doc_id,
            trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
              ' +', ' ', 'g')) AS norm_text,
            cast(len(text) - len(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
              ' +', ' ', 'g'))) as bigint) AS n_chars_removed
-         FROM documents""",
-    "q116_key_skew" ->
+         FROM documents""")),
+    QuerySpec("q116_key_skew", q116_key_skew, Oracle(
       """WITH c AS (SELECT l_orderkey, cast(count(*) as bigint) AS n
                     FROM lineitem GROUP BY 1)
          SELECT cast(count(*) as bigint) AS n_keys,
@@ -7031,19 +6766,19 @@ object SparkEntry {
            max(n) AS hot_rows,
            (SELECT min(l_orderkey) FROM c WHERE n = (SELECT max(n) FROM c)) AS hot_key,
            cast(sum(n) as double) / cast(count(*) as double) AS mean_rows_per_key
-         FROM c""",
-    "q117_text_lines" ->
+         FROM c""")),
+    QuerySpec("q117_text_lines", q117_text_lines, Oracle(
       """SELECT cast(count(*) as bigint) AS n_lines,
            cast(count(DISTINCT text) as bigint) AS n_distinct_lines,
            cast(sum(len(list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0))) as bigint) AS n_tokens,
            cast(sum(len(text)) as bigint) AS n_chars
-         FROM documents""",
-    "q118_asof_forward" ->
+         FROM documents""")),
+    QuerySpec("q118_asof_forward", q118_asof_forward, Oracle(
       """SELECT c.event_id, c.user_id, c.ts, p.event_id AS next_purchase_id
          FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') c
          ASOF LEFT JOIN (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase') p
-           ON c.user_id = p.user_id AND c.ts <= p.ts""",
-    "q119_percentile_disc" ->
+           ON c.user_id = p.user_id AND c.ts <= p.ts""")),
+    QuerySpec("q119_percentile_disc", q119_percentile_disc, Oracle(
       """WITH r AS (
            SELECT l_returnflag AS returnflag, cast(l_quantity as bigint) AS qty,
              row_number() OVER (PARTITION BY l_returnflag ORDER BY cast(l_quantity as bigint) ASC) AS rn,
@@ -7053,18 +6788,18 @@ object SparkEntry {
            max(CASE WHEN rn = (n + 3) // 4 THEN qty END) AS p25_disc,
            max(CASE WHEN rn = (n + 1) // 2 THEN qty END) AS p50_disc,
            max(CASE WHEN rn = (9 * n + 9) // 10 THEN qty END) AS p90_disc
-         FROM r GROUP BY 1""",
-    "q120_interval_overlap" ->
+         FROM r GROUP BY 1""")),
+    QuerySpec("q120_interval_overlap", q120_interval_overlap, Oracle(
       """WITH iv AS (
            SELECT user_id, cast(ts as date) AS day, min(ts) AS lo, max(ts) AS hi
            FROM events GROUP BY 1, 2)
          SELECT a.day, cast(count(*) as bigint) AS n_overlapping_pairs
          FROM iv a JOIN iv b ON a.day = b.day AND a.user_id < b.user_id
            AND a.lo <= b.hi AND b.lo <= a.hi
-         GROUP BY 1""",
+         GROUP BY 1""")),
     // q121: DuckDB unnest drops empty lists, so empties are padded to [NULL]
     // to mirror explode_outer's survive-as-null semantics
-    "q121_explode_outer" ->
+    QuerySpec("q121_explode_outer", q121_explode_outer, Oracle(
       """WITH t AS (SELECT doc_id,
              list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS toks
            FROM documents),
@@ -7076,21 +6811,21 @@ object SparkEntry {
            FROM s)
          SELECT doc_id, cast(count(shingle) as bigint) AS n_shingles,
            cast(sum(CASE WHEN shingle IS NULL THEN 1 ELSE 0 END) as bigint) AS n_null_rows
-         FROM e GROUP BY 1""",
-    "q122_islands" ->
+         FROM e GROUP BY 1""")),
+    QuerySpec("q122_islands", q122_islands, Oracle(
       """WITH k AS (SELECT DISTINCT o_orderkey AS okey FROM orders),
          g AS (SELECT okey, okey - row_number() OVER (ORDER BY okey) AS grp FROM k)
          SELECT min(okey) AS island_start, max(okey) AS island_end,
            cast(count(*) as bigint) AS n_keys
-         FROM g GROUP BY grp""",
-    "q123_ratio_to_report" ->
+         FROM g GROUP BY grp""")),
+    QuerySpec("q123_ratio_to_report", q123_ratio_to_report, Oracle(
       """WITH a AS (SELECT o_orderpriority AS priority,
              sum(cast(o_totalprice as decimal(18,2))) AS rev
            FROM orders GROUP BY 1)
          SELECT priority, cast(rev as double) AS revenue,
            cast(rev as double) / cast(sum(rev) OVER () as double) AS share
-         FROM a""",
-    "q124_cumulative_users" ->
+         FROM a""")),
+    QuerySpec("q124_cumulative_users", q124_cumulative_users, Oracle(
       """WITH fd AS (
            SELECT min(cast(ts as date)) AS day, user_id FROM events GROUP BY user_id),
          nu AS (SELECT day, cast(count(*) as bigint) AS n_new_users FROM fd GROUP BY 1),
@@ -7098,10 +6833,10 @@ object SparkEntry {
          SELECT ad.day, coalesce(n_new_users, 0) AS n_new_users,
            cast(sum(coalesce(n_new_users, 0)) OVER (ORDER BY ad.day
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) as bigint) AS n_users_cum
-         FROM ad LEFT JOIN nu ON ad.day = nu.day""",
+         FROM ad LEFT JOIN nu ON ad.day = nu.day""")),
     // q125: same session construction as q49, event_type carried through;
     // sessions without a click have NULL c_ts -> comparisons null -> 0
-    "q125_session_funnel" ->
+    QuerySpec("q125_session_funnel", q125_session_funnel, Oracle(
       """WITH flagged AS (
            SELECT user_id, ts, event_type,
              CASE WHEN lag(ts) OVER w IS NULL
@@ -7125,8 +6860,8 @@ object SparkEntry {
          SELECT cast(count(*) as bigint) AS n_sessions,
            cast(sum(CASE WHEN c_ts IS NOT NULL THEN 1 ELSE 0 END) as bigint) AS n_with_click,
            cast(sum(converted) as bigint) AS n_converted
-         FROM sess""",
-    "q126_deciles" ->
+         FROM sess""")),
+    QuerySpec("q126_deciles", q126_deciles, Oracle(
       """WITH t AS (
            SELECT l_returnflag AS returnflag, cast(l_quantity as bigint) AS qty,
              ntile(10) OVER (PARTITION BY l_returnflag
@@ -7135,19 +6870,19 @@ object SparkEntry {
            FROM lineitem)
          SELECT returnflag, cast(decile as bigint) AS decile,
            min(qty) AS lo_qty, max(qty) AS hi_qty, cast(count(*) as bigint) AS n_rows
-         FROM t GROUP BY 1, 2""",
-    "q127_weighted_sample" ->
+         FROM t GROUP BY 1, 2""")),
+    QuerySpec("q127_weighted_sample", q127_weighted_sample, Oracle(
       """WITH m AS (SELECT max(n_chars) AS max_chars FROM documents)
          SELECT doc_id, n_chars FROM documents, m
-         WHERE ((doc_id * 2654435761) % 65536) * max_chars < 65536 * n_chars""",
-    "q128_balanced_sample" ->
+         WHERE ((doc_id * 2654435761) % 65536) * max_chars < 65536 * n_chars""")),
+    QuerySpec("q128_balanced_sample", q128_balanced_sample, Oracle(
       """SELECT lang, cast(rn as bigint) AS rn, doc_id FROM (
            SELECT lang, doc_id,
              row_number() OVER (PARTITION BY lang
                ORDER BY md5(cast(doc_id as varchar)) ASC, doc_id ASC) AS rn
            FROM documents)
-         WHERE rn <= 50""",
-    "q129_vocab_by_lang" ->
+         WHERE rn <= 50""")),
+    QuerySpec("q129_vocab_by_lang", q129_vocab_by_lang, Oracle(
       """WITH c AS (
            SELECT lang, token, cast(count(*) as bigint) AS n FROM (
              SELECT lang, unnest(list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0)) AS token
@@ -7157,21 +6892,21 @@ object SparkEntry {
            SELECT lang, token, n,
              row_number() OVER (PARTITION BY lang ORDER BY n DESC, token ASC) AS rnk
            FROM c)
-         WHERE rnk <= 20""",
-    "q130_bigram_top" ->
+         WHERE rnk <= 20""")),
+    QuerySpec("q130_bigram_top", q130_bigram_top, Oracle(
       """WITH t AS (SELECT list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS toks
            FROM documents),
          b AS (SELECT unnest(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS bigram
            FROM t)
          SELECT bigram, cast(count(*) as bigint) AS n
-         FROM b GROUP BY 1 ORDER BY n DESC, bigram ASC LIMIT 50""",
-    "q131_corpus_composition" ->
+         FROM b GROUP BY 1 ORDER BY n DESC, bigram ASC LIMIT 50""")),
+    QuerySpec("q131_corpus_composition", q131_corpus_composition, Oracle(
       """SELECT source, lang, cast(count(*) as bigint) AS n_docs,
            cast(sum(len(list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0))) as bigint) AS n_tokens,
            cast(sum(n_chars) as bigint) AS n_chars,
            cast(sum(n_chars) as double) / cast(count(*) as double) AS mean_chars
-         FROM documents GROUP BY 1, 2""",
-    "q132_split_balance" ->
+         FROM documents GROUP BY 1, 2""")),
+    QuerySpec("q132_split_balance", q132_split_balance, Oracle(
       """WITH labeled AS (
            SELECT CASE WHEN substring(md5(cast(doc_id as varchar)), 1, 4) < 'cccd' THEN 'train'
                        WHEN substring(md5(cast(doc_id as varchar)), 1, 4) < 'e666' THEN 'val'
@@ -7187,10 +6922,10 @@ object SparkEntry {
                 WHEN n_char > n_tok * 15 THEN 'words_too_long'
                 ELSE 'ok' END AS quality,
            cast(count(*) as bigint) AS n_docs
-         FROM labeled GROUP BY 1, 2""",
+         FROM labeled GROUP BY 1, 2""")),
     // q133: DuckDB inclusive slice toks[i:i+4] = 5 tokens; range end-exclusive
     // so i walks 1..len-4 — exactly Spark's shinglesFromTokens(toks, 5)
-    "q133_decontaminate" ->
+    QuerySpec("q133_decontaminate", q133_decontaminate, Oracle(
       """WITH g AS (
            SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 3),
                     i -> array_to_string(toks[i:i+4], ' ')))) AS gram
@@ -7204,17 +6939,17 @@ object SparkEntry {
          SELECT c.doc_id, c.n_grams, coalesce(h.n_hits, 0) AS n_hits,
            CASE WHEN coalesce(h.n_hits, 0) * 2 >= c.n_grams THEN 'contaminated'
                 ELSE 'clean' END AS status
-         FROM counts c LEFT JOIN hits h USING (doc_id)""",
+         FROM counts c LEFT JOIN hits h USING (doc_id)""")),
     // q134: RANGE frames are peer-inclusive in both engines; epoch_us(naive
     // ts) == Spark unix_micros(ntz→UTC); decimal window sum is order-free
-    "q134_rolling_window" ->
+    QuerySpec("q134_rolling_window", q134_rolling_window, Oracle(
       """SELECT event_id, user_id,
            cast(count(*) OVER w as bigint) AS roll_cnt,
            cast(sum(cast(value as DECIMAL(18,4))) OVER w as double) AS roll_sum
          FROM (SELECT event_id, user_id, value, epoch_us(ts) AS ts_us FROM events)
          WINDOW w AS (PARTITION BY user_id ORDER BY ts_us
-                      RANGE BETWEEN 604799999999 PRECEDING AND CURRENT ROW)""",
-    "q135_source_overlap" ->
+                      RANGE BETWEEN 604799999999 PRECEDING AND CURRENT ROW)""")),
+    QuerySpec("q135_source_overlap", q135_source_overlap, Oracle(
       """WITH st AS (
            SELECT DISTINCT source, token FROM (
              SELECT source, unnest(list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0)) AS token
@@ -7229,27 +6964,27 @@ object SparkEntry {
            sa.n + sb.n - coalesce(i.i, 0) AS uni,
            cast(coalesce(i.i, 0) as double) / cast(sa.n + sb.n - coalesce(i.i, 0) as double) AS jaccard
          FROM sizes sa JOIN sizes sb ON sa.source < sb.source
-         LEFT JOIN inter i ON i.source_a = sa.source AND i.source_b = sb.source""",
-    "q136_histogram" ->
+         LEFT JOIN inter i ON i.source_a = sa.source AND i.source_b = sb.source""")),
+    QuerySpec("q136_histogram", q136_histogram, Oracle(
       """WITH c AS (SELECT cast(cast(l_extendedprice as DECIMAL(18,2)) * 100 as bigint) AS cents
                     FROM lineitem),
          mm AS (SELECT min(cents) AS lo, max(cents) AS hi FROM c)
          SELECT cast((cents - lo) * 20 // (hi - lo + 1) as bigint) AS bin,
            cast(count(*) as bigint) AS n
-         FROM c, mm GROUP BY 1""",
-    "q137_semantic_dedup" -> semanticDedupOracleSql,
+         FROM c, mm GROUP BY 1""")),
+    QuerySpec("q137_semantic_dedup", q137_semantic_dedup, benched = false, check = Oracle(semanticDedupOracleSql)),
     // q162: banded pair generation feeds the same CC — identical components
-    "q162_semantic_dedup_banded" -> semanticDedupOracleSql,
+    QuerySpec("q162_semantic_dedup_banded", q162_semantic_dedup_banded, Oracle(semanticDedupOracleSql)),
     // q138: the bloom is a shuffle-volume optimization only — exact result is
     // the plain IN-subquery semi join
-    "q138_bloom_semi" ->
+    QuerySpec("q138_bloom_semi", q138_bloom_semi, Oracle(
       """SELECT l_orderkey, cast(l_linenumber as bigint) AS line_no,
            cast(l_quantity as bigint) AS qty
          FROM lineitem
-         WHERE l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT')""",
+         WHERE l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT')""")),
     // q139: integer-scaled tf·1e6//df keeps the ranking float-free; row_number
     // tie-break on token makes top-3 deterministic in both engines
-    "q139_tfidf" ->
+    QuerySpec("q139_tfidf", q139_tfidf, Oracle(
       """WITH tok AS (
            SELECT doc_id, unnest(list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0)) AS token
            FROM documents),
@@ -7260,10 +6995,10 @@ object SparkEntry {
              cast(row_number() OVER (PARTITION BY tf.doc_id
                ORDER BY tf.tf * 1000000 // df.df DESC, tf.token ASC) as bigint) AS rank
            FROM tf JOIN df USING (token)) t
-         WHERE rank <= 3""",
+         WHERE rank <= 3""")),
     // q140: all score components integer (money in DECIMAL cents); DuckDB
     // levenshtein == Spark levenshtein (q85-established parity)
-    "q140_record_linkage" ->
+    QuerySpec("q140_record_linkage", q140_record_linkage, benched = false, check = Oracle(
       """WITH c AS (
            SELECT c_custkey AS id, c_name AS name, cast(c_nationkey as bigint) AS nation,
              cast(cast(c_acctbal as DECIMAL(18,2)) * 100 as bigint) AS cents,
@@ -7277,10 +7012,10 @@ object SparkEntry {
              cast(CASE WHEN a.segment = b.segment THEN 2 ELSE 0 END as bigint) AS seg_pts,
              cast(CASE WHEN abs(a.cents - b.cents) <= 10000 THEN 1 ELSE 0 END as bigint) AS bal_pts
            FROM c a JOIN c b ON a.nation = b.nation AND a.id < b.id) t
-         WHERE name_pts + seg_pts + bal_pts >= 4""",
+         WHERE name_pts + seg_pts + bal_pts >= 4""")),
     // q141: the bit-interleave is generated from the same (bits, x, y) spec as
     // the Spark plan so the two expressions cannot drift
-    "q141_zorder" -> {
+    QuerySpec("q141_zorder", q141_zorder, Oracle {
       val x = "(o_custkey % 1024)"
       val y = "(date_diff('day', DATE '1970-01-01', o_orderdate) % 1024)"
       val z = (0 until 10).map { i =>
@@ -7292,10 +7027,10 @@ object SparkEntry {
            cast(count(*) as bigint) AS n,
            min(x) AS x_lo, max(x) AS x_hi, min(y) AS y_lo, max(y) AS y_hi
          FROM t GROUP BY 1"""
-    },
+    }),
     // q142: float32 widens exactly to double in both engines; every step after
     // that is IEEE double (sub, mul, div, floor), so codes are bit-identical
-    "q142_quantize" ->
+    QuerySpec("q142_quantize", q142_quantize, Oracle(
       """WITH d AS (
            SELECT vec_id, cast(unnest(range(0, len(embedding))) as bigint) AS dim,
              cast(unnest(embedding) as double) AS v
@@ -7306,9 +7041,9 @@ object SparkEntry {
          FROM (SELECT d.vec_id,
                  cast(least(floor((d.v - s.lo) * 255 / (s.hi - s.lo)), 255) as bigint) AS code
                FROM d JOIN s USING (dim)) q
-         GROUP BY 1""",
+         GROUP BY 1""")),
     // q143: top-200 vocab tie-broken (n DESC, token ASC) = q90's determinism
-    "q143_vocab_coverage" ->
+    QuerySpec("q143_vocab_coverage", q143_vocab_coverage, Oracle(
       """WITH tok AS (
            SELECT doc_id, unnest(list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0)) AS token
            FROM documents),
@@ -7319,16 +7054,16 @@ object SparkEntry {
            cast(sum(CASE WHEN v.token IS NOT NULL THEN 1 ELSE 0 END) as bigint) AS n_in,
            cast((count(*) - sum(CASE WHEN v.token IS NOT NULL THEN 1 ELSE 0 END)) * 1000 // count(*) as bigint) AS oov_permille
          FROM tok t LEFT JOIN vocab v ON t.token = v.token
-         GROUP BY 1""",
+         GROUP BY 1""")),
     // q144: the stateful stream's converged answer IS the batch aggregate;
     // money summed in exact integer cents on both sides
-    "q144_stateful_stream" ->
+    QuerySpec("q144_stateful_stream", q144_stateful_stream, Oracle(
       """SELECT user_id, cast(count(*) as bigint) AS n_events,
            cast(sum(cast(cast(value as DECIMAL(18,4)) * 10000 as bigint)) as bigint) AS cents
-         FROM events GROUP BY user_id""",
+         FROM events GROUP BY user_id""")),
     // q145: DuckDB list slice is 1-based inclusive — toks[i*10+1 : i*10+10]
     // is exactly Spark's slice(toks, i*10+1, 10); range() is end-exclusive
-    "q145_chunk_dedup" ->
+    QuerySpec("q145_chunk_dedup", q145_chunk_dedup, Oracle(
       """WITH t AS (
            SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS toks
            FROM documents),
@@ -7340,10 +7075,10 @@ object SparkEntry {
          SELECT c.doc_id, cast(count(*) as bigint) AS n_chunks,
            cast(sum(CASE WHEN h.nd >= 2 THEN 1 ELSE 0 END) as bigint) AS n_dup,
            cast(sum(CASE WHEN h.nd >= 2 THEN 1 ELSE 0 END) * 1000 // count(*) as bigint) AS dup_permille
-         FROM c JOIN h USING (chunk) GROUP BY 1""",
+         FROM c JOIN h USING (chunk) GROUP BY 1""")),
     // q146: two unrolled integer-arithmetic iterations; coalesce(insum,0)
     // covers nodes with no in-edges (customers) on both sides
-    "q146_pagerank" ->
+    QuerySpec("q146_pagerank", q146_pagerank, Oracle(
       """WITH edges AS (
            SELECT DISTINCT 'c' || o_custkey AS src, 's' || l_suppkey AS dst
            FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
@@ -7359,8 +7094,8 @@ object SparkEntry {
                 FROM edges e JOIN r1 ON e.src = r1.node JOIN deg d ON e.src = d.src
                 GROUP BY 1)
          SELECT n.node, cast(150000 + 85 * coalesce(i2.insum, 0) // 100 as bigint) AS rank_ppm
-         FROM nodes n LEFT JOIN i2 ON n.node = i2.dst""",
-    "q147_referential_audit" ->
+         FROM nodes n LEFT JOIN i2 ON n.node = i2.dst""")),
+    QuerySpec("q147_referential_audit", q147_referential_audit, Oracle(
       """SELECT 'lineitem_orphan_order' AS check, cast(count(*) as bigint) AS n_rows,
            cast(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) as bigint) AS n_violations
          FROM lineitem LEFT JOIN orders ON l_orderkey = o_orderkey
@@ -7376,8 +7111,8 @@ object SparkEntry {
          SELECT 'customer_without_order', cast(count(*) as bigint),
            cast(sum(CASE WHEN nk IS NULL THEN 1 ELSE 0 END) as bigint)
          FROM customer LEFT JOIN (SELECT DISTINCT o_custkey AS nk FROM orders) o2
-           ON c_custkey = nk""",
-    "q148_key_cardinality" ->
+           ON c_custkey = nk""")),
+    QuerySpec("q148_key_cardinality", q148_key_cardinality, Oracle(
       """WITH a AS (SELECT l_orderkey, cast(count(*) as bigint) AS rows_per_key
                     FROM lineitem GROUP BY 1),
          b AS (SELECT l_orderkey, l_linenumber, cast(count(*) as bigint) AS rows_per_key
@@ -7386,8 +7121,8 @@ object SparkEntry {
          FROM a GROUP BY 2
          UNION ALL
          SELECT 'l_orderkey+l_linenumber', rows_per_key, cast(count(*) as bigint)
-         FROM b GROUP BY 2""",
-    "q149_transition_matrix" ->
+         FROM b GROUP BY 2""")),
+    QuerySpec("q149_transition_matrix", q149_transition_matrix, Oracle(
       """WITH t AS (
            SELECT event_type AS from_type,
              coalesce(lead(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id),
@@ -7396,8 +7131,8 @@ object SparkEntry {
          c AS (SELECT from_type, to_type, cast(count(*) as bigint) AS n FROM t GROUP BY 1, 2)
          SELECT from_type, to_type, n,
            cast(n * 1000 // sum(n) OVER (PARTITION BY from_type) as bigint) AS permille
-         FROM c""",
-    "q150_period_change" ->
+         FROM c""")),
+    QuerySpec("q150_period_change", q150_period_change, Oracle(
       """WITH m AS (
            SELECT c_mktsegment AS segment,
              cast(year(o_orderdate) * 100 + month(o_orderdate) as bigint) AS ym,
@@ -7411,8 +7146,8 @@ object SparkEntry {
                      THEN (cents - lag(cents, 1) OVER (PARTITION BY segment ORDER BY ym)) * 1000
                           // lag(cents, 1) OVER (PARTITION BY segment ORDER BY ym)
                 END as bigint) AS delta_permille
-         FROM m""",
-    "q151_mixture_quota" ->
+         FROM m""")),
+    QuerySpec("q151_mixture_quota", q151_mixture_quota, Oracle(
       """WITH c AS (SELECT source, cast(count(*) as bigint) AS n_docs FROM documents GROUP BY 1),
          t AS (SELECT sum(n_docs) AS total FROM c),
          b AS (SELECT source, n_docs,
@@ -7424,25 +7159,25 @@ object SparkEntry {
          SELECT source, n_docs, base,
            cast(CASE WHEN seat_rank <= 10000 - sum_base THEN 1 ELSE 0 END as bigint) AS extra,
            cast(base + CASE WHEN seat_rank <= 10000 - sum_base THEN 1 ELSE 0 END as bigint) AS quota
-         FROM r""",
+         FROM r""")),
     // q152: DuckDB slice w[i:i+1] (1-based, inclusive) == Spark substring(w, i, 2)
-    "q152_bpe_merge" ->
+    QuerySpec("q152_bpe_merge", q152_bpe_merge, Oracle(
       """WITH w AS (
            SELECT unnest(list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0)) AS w
            FROM documents),
          p AS (SELECT unnest(list_transform(range(1, len(w)), i -> w[i:i+1])) AS pair
                FROM w WHERE len(w) >= 2)
          SELECT pair, cast(count(*) as bigint) AS n
-         FROM p GROUP BY 1 ORDER BY n DESC, pair ASC LIMIT 20""",
+         FROM p GROUP BY 1 ORDER BY n DESC, pair ASC LIMIT 20""")),
     // q153: same ranked-neighbor idiom as the q38 oracle (rank ties broken by
     // id; list_cosine_similarity rank order matches the codegen'd kernel)
-    "q153_label_agreement" -> labelAgreementOracleSql,
+    QuerySpec("q153_label_agreement", q153_label_agreement, benched = false, check = Oracle(labelAgreementOracleSql)),
     // q163: the banded kNN reproduces every exact 5-NN set (measured, pinned
     // by differential test) — same aggregate, same oracle
-    "q163_label_agreement_banded" -> labelAgreementOracleSql,
+    QuerySpec("q163_label_agreement_banded", q163_label_agreement_banded, Oracle(labelAgreementOracleSql)),
     // q164: textbook dangling-mass form — each iteration re-injects the
     // sink (supplier) mass as an equal integer share dm // n_nodes
-    "q164_pagerank_dangling" ->
+    QuerySpec("q164_pagerank_dangling", q164_pagerank_dangling, Oracle(
       """WITH edges AS (
            SELECT DISTINCT cast(o_custkey as bigint) * 2 AS src,
              cast(l_suppkey as bigint) * 2 + 1 AS dst
@@ -7467,29 +7202,29 @@ object SparkEntry {
          SELECT CASE WHEN n.node % 2 = 0 THEN 'c' || cast(n.node // 2 as varchar)
                      ELSE 's' || cast((n.node - 1) // 2 as varchar) END AS node,
            cast(150000 + 85 * (coalesce(i2.insum, 0) + dm1.dm // nn.n_nodes) // 100 as bigint) AS rank_ppm
-         FROM nodes n LEFT JOIN i2 ON n.node = i2.dst, dm1, nn""",
+         FROM nodes n LEFT JOIN i2 ON n.node = i2.dst, dm1, nn""")),
     // q165: the versioned table's two snapshots must equal the plain
     // relational definition of what was committed — manifest bugs (dropped,
     // leaked, or torn files) break the hash
-    "q165_versioned_timetravel" ->
+    QuerySpec("q165_versioned_timetravel", q165_versioned_timetravel, Oracle(
       """SELECT 'v1' AS snapshot, cast(count(*) as bigint) AS n_rows,
            cast(sum(cast(cast(o_totalprice as DECIMAL(18,2)) * 100 as bigint)) as bigint) AS sum_cents
          FROM orders WHERE o_orderkey % 2 = 0
          UNION ALL
          SELECT 'latest', cast(count(*) as bigint),
            cast(sum(cast(cast(o_totalprice as DECIMAL(18,2)) * 100 as bigint)) as bigint)
-         FROM orders""",
+         FROM orders""")),
     // q166/q167: the oracle recomputes the decode statistics from the
     // closed-form pixel/sample generators WITHOUT seeing any bytes — only a
     // correct PPM/WAV decoder on the engine side can match the hash
-    "q166_image_decode" ->
+    QuerySpec("q166_image_decode", q166_image_decode, Oracle(
       """SELECT doc_id, cast(64 as bigint) AS n_pixels,
            cast(sum((doc_id*31 + (3*i)*7) % 256) as bigint) AS sum_r,
            cast(sum((doc_id*31 + (3*i+1)*7) % 256) as bigint) AS sum_g,
            cast(sum((doc_id*31 + (3*i+2)*7) % 256) as bigint) AS sum_b
          FROM documents, (SELECT unnest(range(64)) AS i)
-         GROUP BY 1""",
-    "q167_audio_decode" ->
+         GROUP BY 1""")),
+    QuerySpec("q167_audio_decode", q167_audio_decode, Oracle(
       """WITH s AS (
            SELECT doc_id, i, (doc_id*13 + i*11) % 2001 - 1000 AS v
            FROM documents, (SELECT unnest(range(256)) AS i)),
@@ -7501,10 +7236,10 @@ object SparkEntry {
            cast(sum(CASE WHEN pv IS NOT NULL AND
                               ((pv < 0 AND v >= 0) OR (pv >= 0 AND v < 0))
                          THEN 1 ELSE 0 END) as bigint) AS zero_crossings
-         FROM l GROUP BY 1""",
+         FROM l GROUP BY 1""")),
     // q168: DuckDB slice toks[i+1:i+10] (1-based inclusive) == Spark
     // slice(toks, i+1, 10); range(0, len-9) == sequence(0, size-10)
-    "q168_window_dedup" ->
+    QuerySpec("q168_window_dedup", q168_window_dedup, Oracle(
       """WITH t AS (
            SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS toks
            FROM documents),
@@ -7516,11 +7251,11 @@ object SparkEntry {
          SELECT c.doc_id, cast(count(*) as bigint) AS n_windows,
            cast(sum(CASE WHEN h.nd >= 2 THEN 1 ELSE 0 END) as bigint) AS n_shared,
            cast(sum(CASE WHEN h.nd >= 2 THEN 1 ELSE 0 END) * 1000 // count(*) as bigint) AS shared_permille
-         FROM c JOIN h USING (win) GROUP BY 1""",
-    "q154_scd2" -> scd2OracleSql,
+         FROM c JOIN h USING (win) GROUP BY 1""")),
+    QuerySpec("q154_scd2", q154_scd2, Oracle(scd2OracleSql)),
     // q160: the SCD2 oracle becomes a CTE; each fact matches exactly one
     // version because the intervals partition time (sentinel, no null arm)
-    "q160_scd2_lookup" ->
+    QuerySpec("q160_scd2_lookup", q160_scd2_lookup, Oracle(
       s"""WITH dim AS ($scd2OracleSql),
          facts AS (
            SELECT o_orderkey AS key,
@@ -7529,17 +7264,17 @@ object SparkEntry {
            FROM orders)
          SELECT f.key, f.as_of, d.version, d.cents
          FROM facts f JOIN dim d ON f.key = d.key
-         WHERE d.valid_from <= f.as_of AND f.as_of < d.valid_to""",
+         WHERE d.valid_from <= f.as_of AND f.as_of < d.valid_to""")),
     // q155: hints change the physical strategy, never the result — same
     // oracle as the unhinted q08
-    "q155_join_hints" ->
+    QuerySpec("q155_join_hints", q155_join_hints, Oracle(
       """SELECT o_orderkey, o_totalprice AS total_price, c_name AS cust_name, c_mktsegment AS segment
-         FROM orders JOIN customer ON o_custkey = c_custkey""",
+         FROM orders JOIN customer ON o_custkey = c_custkey""")),
     // q156: gap-sessionize per user; non-final sessions always emitted
     // (closed in-batch by the next event); the final session emits iff its
     // timer deadline in integer ms cleared the final watermark
     // (max_ts_ms − 1h). Timer/watermark math is exact integer on both sides.
-    "q156_timer_sessions" ->
+    QuerySpec("q156_timer_sessions", q156_timer_sessions, Oracle(
       """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us FROM events),
          g AS (SELECT max(ts_us) // 1000 - 3600000 AS wm_ms FROM e),
          s1 AS (SELECT user_id, ts_us,
@@ -7555,21 +7290,21 @@ object SparkEntry {
          mx AS (SELECT user_id, max(sid) AS last_sid FROM sess GROUP BY 1)
          SELECT s.user_id, s.start_us, s.end_us, s.n_events
          FROM sess s JOIN mx USING (user_id), g
-         WHERE s.sid < mx.last_sid OR (s.end_us + 1800000000) // 1000 <= g.wm_ms""",
+         WHERE s.sid < mx.last_sid OR (s.end_us + 1800000000) // 1000 <= g.wm_ms""")),
     // q157: ground truth derived relationally — the PERMISSIVE reader must
     // quarantine exactly the keys the generator corrupted
-    "q157_corrupt_quarantine" ->
+    QuerySpec("q157_corrupt_quarantine", q157_corrupt_quarantine, Oracle(
       """SELECT
            cast(sum(CASE WHEN o_orderkey % 13 != 0 THEN 1 ELSE 0 END) as bigint) AS n_good,
            cast(sum(CASE WHEN o_orderkey % 13 = 0 THEN 1 ELSE 0 END) as bigint) AS n_quarantined,
            cast(sum(CASE WHEN o_orderkey % 13 != 0
                          THEN cast(cast(o_totalprice as DECIMAL(18,2)) * 100 as bigint)
                          ELSE 0 END) as bigint) AS good_cents
-         FROM orders""",
+         FROM orders""")),
     // q158: DuckDB list lambdas mirror Spark HOFs 1:1 (list_sort is ASC
     // NULLS-less here; fold via list_reduce needs a seed-less form, so the
     // fold seeds with 0 prepended)
-    "q158_hof_battery" ->
+    QuerySpec("q158_hof_battery", q158_hof_battery, Oracle(
       """WITH q AS (
            SELECT l_orderkey,
              list_sort(list(cast(l_quantity as bigint))) AS qtys
@@ -7582,19 +7317,19 @@ object SparkEntry {
            len(list_filter(qtys, x -> x <= 0)) = 0 AS all_positive,
            cast(list_reduce(list_prepend(cast(0 as bigint), list_transform(qtys, x -> x * x)),
              (acc, x) -> acc + x) as bigint) AS sum_sq
-         FROM q""",
-    "q159_mapstate_counts" ->
+         FROM q""")),
+    QuerySpec("q159_mapstate_counts", q159_mapstate_counts, Oracle(
       """SELECT user_id, event_type, cast(count(*) as bigint) AS n
-         FROM events GROUP BY 1, 2""",
+         FROM events GROUP BY 1, 2""")),
     // q169: if the replayed batch had landed a second time, every count
     // below would double — the oracle is the exactly-once proof
-    "q169_stream_versioned" ->
+    QuerySpec("q169_stream_versioned", q169_stream_versioned, Oracle(
       """SELECT event_type, cast(count(*) as bigint) AS n_events,
            cast(count(DISTINCT user_id) as bigint) AS n_users
-         FROM events GROUP BY 1""",
+         FROM events GROUP BY 1""")),
     // q170: survivors are keys not deleted (%5); cents carry the LAST
     // update in seq order (%9 beats %3 beats the insert/base image)
-    "q170_cdc_apply" ->
+    QuerySpec("q170_cdc_apply", q170_cdc_apply, Oracle(
       """WITH c AS (SELECT o_orderkey AS k,
              cast(cast(o_totalprice as DECIMAL(18,2)) * 100 as bigint) AS c
            FROM orders)
@@ -7602,10 +7337,10 @@ object SparkEntry {
            CASE WHEN k % 9 = 0 THEN c + 20
                 WHEN k % 3 = 0 THEN c + 7
                 ELSE c END AS cents
-         FROM c WHERE k % 5 != 0""",
+         FROM c WHERE k % 5 != 0""")),
     // q171: canonical a<b<c three-way self-join — the O(n^3)-looking but
     // tiny-at-oracle-scale ground truth for the degree-ordered count
-    "q171_triangle_count" ->
+    QuerySpec("q171_triangle_count", q171_triangle_count, Oracle(
       """WITH e AS (
            SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
            FROM lineitem x JOIN lineitem y
@@ -7618,21 +7353,21 @@ object SparkEntry {
          SELECT cast(v.n as bigint) AS n_vertices,
            cast((SELECT count(*) FROM e) as bigint) AS n_edges,
            cast(t.nt as bigint) AS n_triangles
-         FROM v, t""",
+         FROM v, t""")),
     // q172/q173 share one oracle — the sketch runs in its no-eviction
     // regime at oracle scale, so exact and sketch must agree to the hash
-    "q172_heavy_hitters" ->
+    QuerySpec("q172_heavy_hitters", q172_heavy_hitters, Oracle(
       """SELECT cast(l_suppkey as bigint) AS suppkey, cast(count(*) as bigint) AS n_li
          FROM lineitem GROUP BY 1
-         HAVING count(*) * 110 > (SELECT count(*) FROM lineitem)""",
-    "q173_spacesaving" ->
+         HAVING count(*) * 110 > (SELECT count(*) FROM lineitem)""")),
+    QuerySpec("q173_spacesaving", q173_spacesaving, Oracle(
       """SELECT cast(l_suppkey as bigint) AS suppkey, cast(count(*) as bigint) AS n_li
          FROM lineitem GROUP BY 1
-         HAVING count(*) * 110 > (SELECT count(*) FROM lineitem)""",
+         HAVING count(*) * 110 > (SELECT count(*) FROM lineitem)""")),
     // q174: rank-distance ≤ 3 inside the nation block, verified at edit
     // distance ≤ 1 — DuckDB's levenshtein is the reference for the
     // codegen'd bounded form
-    "q174_sorted_neighborhood" ->
+    QuerySpec("q174_sorted_neighborhood", q174_sorted_neighborhood, Oracle(
       """WITH r AS (
            SELECT c_custkey AS id, cast(c_nationkey as bigint) AS nation, c_name AS name,
              row_number() OVER (PARTITION BY c_nationkey ORDER BY c_name, c_custkey) AS rn
@@ -7641,11 +7376,11 @@ object SparkEntry {
            cast(levenshtein(a.name, b.name) as bigint) AS dist
          FROM r a JOIN r b
            ON a.nation = b.nation AND b.rn > a.rn AND b.rn <= a.rn + 3
-         WHERE levenshtein(a.name, b.name) <= 1""",
+         WHERE levenshtein(a.name, b.name) <= 1""")),
     // q175: the three slices recomputed relationally — merge correctness
     // (no lost/duplicated row) and pruning correctness (no skipped live
     // file) both feed the same hash
-    "q175_versioned_merge" ->
+    QuerySpec("q175_versioned_merge", q175_versioned_merge, Oracle(
       """WITH c AS (SELECT o_orderkey AS k,
              cast(cast(o_totalprice as DECIMAL(18,2)) * 100 as bigint) AS c
            FROM orders),
@@ -7657,10 +7392,10 @@ object SparkEntry {
          FROM m WHERE k BETWEEN 0 AND 3000
          UNION ALL
          SELECT 'cold', cast(count(*) as bigint), cast(sum(c) as bigint)
-         FROM m WHERE k BETWEEN 30000 AND 40000""",
+         FROM m WHERE k BETWEEN 30000 AND 40000""")),
     // q176: each manifest-diff increment must equal its relational slice —
     // a leaked carried-over file (dup rows) or dropped append breaks it
-    "q176_versioned_delta" ->
+    QuerySpec("q176_versioned_delta", q176_versioned_delta, Oracle(
       """WITH c AS (SELECT o_orderkey AS k,
              cast(cast(o_totalprice as DECIMAL(18,2)) * 100 as bigint) AS c
            FROM orders)
@@ -7674,10 +7409,10 @@ object SparkEntry {
          FROM c WHERE k % 3 = 2
          UNION ALL
          SELECT 'v1..v3', cast(count(*) as bigint), cast(sum(c) as bigint)
-         FROM c WHERE k % 3 IN (1, 2)""",
+         FROM c WHERE k % 3 IN (1, 2)""")),
     // q177: the same closure as a recursive CTE; golden row picked by the
     // same (cents, id) argmax tie-break
-    "q177_golden_record" ->
+    QuerySpec("q177_golden_record", q177_golden_record, Oracle(
       """WITH RECURSIVE r AS (
            SELECT c_custkey AS id, cast(c_nationkey as bigint) AS nation, c_name AS name,
              row_number() OVER (PARTITION BY c_nationkey ORDER BY c_name, c_custkey) AS rn
@@ -7703,10 +7438,10 @@ object SparkEntry {
                  FROM m)
          SELECT entity_id, cast(nm as bigint) AS n_members,
            cents AS golden_cents, segment AS golden_segment
-         FROM sel WHERE rk = 1""",
+         FROM sel WHERE rk = 1""")),
     // q178: identical sweep — ±1 per date aggregated first, then the
     // running sum; peak of end-of-day open counts per month
-    "q178_concurrency_sweep" ->
+    QuerySpec("q178_concurrency_sweep", q178_concurrency_sweep, Oracle(
       """WITH dl AS (
            SELECT o_orderdate AS d, 1 AS delta FROM orders
            UNION ALL
@@ -7714,16 +7449,16 @@ object SparkEntry {
          net AS (SELECT d, sum(delta) AS net FROM dl GROUP BY 1),
          run AS (SELECT d, sum(net) OVER (ORDER BY d) AS open FROM net)
          SELECT strftime(d, '%Y-%m') AS month, cast(max(open) as bigint) AS peak_open
-         FROM run GROUP BY 1""",
+         FROM run GROUP BY 1""")),
     // q179: the batch twin of the stream-static enrichment — identical rows
     // or the hash breaks
-    "q179_stream_static" ->
+    QuerySpec("q179_stream_static", q179_stream_static, Oracle(
       """SELECT n_name, cast(count(*) as bigint) AS n_events,
            cast(count(DISTINCT event_type) as bigint) AS n_types
          FROM events e JOIN nation n ON e.user_id % 25 = n.n_nationkey
-         GROUP BY 1""",
+         GROUP BY 1""")),
     // q180: identical rank-based discrete percentiles + integer clamp math
-    "q180_winsorize" ->
+    QuerySpec("q180_winsorize", q180_winsorize, Oracle(
       """WITH r AS (
            SELECT l_returnflag AS returnflag,
              cast(cast(l_extendedprice as DECIMAL(18,2)) * 100 as bigint) AS cents,
@@ -7742,9 +7477,9 @@ object SparkEntry {
              as bigint) AS n_clamped,
            cast(count(*) as bigint) AS n_rows
          FROM r JOIN p USING (returnflag)
-         GROUP BY 1, 2, 3""",
+         GROUP BY 1, 2, 3""")),
     // q181: same md5 permutation, same nibble sharding, same rank pivots
-    "q181_corpus_shuffle" ->
+    QuerySpec("q181_corpus_shuffle", q181_corpus_shuffle, Oracle(
       """WITH d AS (
            SELECT doc_id,
              cast(len(list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0)) as bigint) AS toks,
@@ -7758,10 +7493,10 @@ object SparkEntry {
            max(CASE WHEN rn = 1 THEN doc_id END) AS head1,
            max(CASE WHEN rn = 2 THEN doc_id END) AS head2,
            max(CASE WHEN rn = 3 THEN doc_id END) AS head3
-         FROM s GROUP BY 1""",
+         FROM s GROUP BY 1""")),
     // q182: ONE global cumsum in the oracle (fine at oracle scale) vs the
     // engine's bucket-carried parallel form — same keep set or the hash breaks
-    "q182_token_budget" ->
+    QuerySpec("q182_token_budget", q182_token_budget, Oracle(
       """WITH d AS (
            SELECT doc_id,
              cast(len(list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0)) as bigint) AS toks,
@@ -7772,32 +7507,32 @@ object SparkEntry {
          b AS (SELECT cast(sum(toks) // 2 as bigint) AS budget FROM sc),
          r AS (SELECT doc_id, score, toks,
                  sum(toks) OVER (ORDER BY score DESC, doc_id) AS cum FROM sc)
-         SELECT doc_id, score, toks FROM r, b WHERE cum <= budget""",
+         SELECT doc_id, score, toks FROM r, b WHERE cum <= budget""")),
     // q183: same closed-form pixel oracle as q166 — the payload is REAL PNG
     // (zlib + per-row cycling filters + CRCs), so only a correct inflate and
     // filter inversion reproduce the sums DuckDB computes without the bytes
-    "q183_png_decode" ->
+    QuerySpec("q183_png_decode", q183_png_decode, Oracle(
       """SELECT doc_id, cast(64 as bigint) AS n_pixels,
            cast(sum((doc_id*31 + (3*i)*7) % 256) as bigint) AS sum_r,
            cast(sum((doc_id*31 + (3*i+1)*7) % 256) as bigint) AS sum_g,
            cast(sum((doc_id*31 + (3*i+2)*7) % 256) as bigint) AS sum_b
          FROM documents, (SELECT unnest(range(64)) AS i)
-         GROUP BY 1""",
+         GROUP BY 1""")),
     // q184: the lossy format's EXACT oracle — four uniform 8x8 blocks per
     // image survive DCT+quant+Huffman+IDCT bit-exactly (DC-only spectrum),
     // so the decode statistic has a closed form; gray => r=g=b
-    "q184_jpeg_decode" ->
+    QuerySpec("q184_jpeg_decode", q184_jpeg_decode, Oracle(
       """SELECT doc_id, cast(256 as bigint) AS n_pixels,
            cast(64 * sum((doc_id*31 + b*7) % 256) as bigint) AS sum_r,
            cast(64 * sum((doc_id*31 + b*7) % 256) as bigint) AS sum_g,
            cast(64 * sum((doc_id*31 + b*7) % 256) as bigint) AS sum_b
          FROM documents, (SELECT unnest(range(4)) AS b)
-         GROUP BY 1""",
+         GROUP BY 1""")),
     // q185: per-frame closed forms — palette j -> (j, 2j%256, 3j%256), frame
     // f pixel i index (id*31+f*13+i*5)%256, GCE delay (id%100+7f+1) cs. The
     // position-weighted wsum_r is the deinterlace proof; frame_ts_ms is the
     // delay-accumulation proof. Engine decodes real interlaced GIF89a bytes.
-    "q185_gif_frames" ->
+    QuerySpec("q185_gif_frames", q185_gif_frames, Oracle(
       """SELECT doc_id, f AS frame_idx,
            cast(10 * (f * ((doc_id % 100) + 1) + 7 * f * (f - 1) // 2) as bigint)
              AS frame_ts_ms,
@@ -7809,20 +7544,20 @@ object SparkEntry {
          FROM (SELECT doc_id, f, i, (doc_id*31 + f*13 + i*5) % 256 AS v
                FROM documents, (SELECT unnest(range(4)) AS f),
                  (SELECT unnest(range(64)) AS i))
-         GROUP BY 1, 2, 3, 4""",
+         GROUP BY 1, 2, 3, 4""")),
     // q186: cluster identity is doc_id mod 41 REGARDLESS of container
     // (doc_id mod 3 picks PPM/PNG/GIF) — matches only if the engine hashes
     // decoded pixels, not payload bytes
-    "q186_image_dedup" ->
+    QuerySpec("q186_image_dedup", q186_image_dedup, Oracle(
       """SELECT doc_id,
            cast(min(doc_id) OVER (PARTITION BY doc_id % 41) as bigint) AS cluster_id,
            cast(count(*) OVER (PARTITION BY doc_id % 41) as bigint) AS cluster_size
-         FROM documents""",
+         FROM documents""")),
     // q187: per-frame uniform-block closed forms (q184's exactness contract)
     // plus the scale/rate timing rational; the block position weights
     // 3872/4384/12064/12576 are sum(i+1) over each 8x8 quadrant of the
     // 16x16 raster — wrong block placement or a wrong RIFF walk breaks them
-    "q187_video_frames" ->
+    QuerySpec("q187_video_frames", q187_video_frames, Oracle(
       """SELECT doc_id, f AS frame_idx,
            cast(f * 1000 // (CASE doc_id % 4 WHEN 0 THEN 5 WHEN 1 THEN 10
              WHEN 2 THEN 20 ELSE 25 END) as bigint) AS frame_ts_ms,
@@ -7835,11 +7570,11 @@ object SparkEntry {
          FROM (SELECT doc_id, f, b, (doc_id*31 + f*13 + b*7) % 256 AS v
                FROM documents, (SELECT unnest(range(3)) AS f),
                  (SELECT unnest(range(4)) AS b))
-         GROUP BY 1, 2, 3, 4""",
+         GROUP BY 1, 2, 3, 4""")),
     // q188: the G.711 expansion recomputed arithmetically — μ-law is
     // complement + ((mantissa*8+132) << exponent) - 132 with bit-7 NEGATIVE,
     // A-law is XOR 0x55 with segment 0/1 special cases and bit-7 POSITIVE
-    "q188_audio_g711" ->
+    QuerySpec("q188_audio_g711", q188_audio_g711, Oracle(
       """WITH s AS (
            SELECT doc_id, (doc_id*7 + i*13) % 256 AS c
            FROM documents, (SELECT unnest(range(240)) AS i)),
@@ -7861,12 +7596,12 @@ object SparkEntry {
            cast(240 as bigint) AS n_samples,
            cast(sum(v) as bigint) AS sum_lin,
            cast(sum(v * v) as bigint) AS sum_sq
-         FROM v GROUP BY 1, 2""",
+         FROM v GROUP BY 1, 2""")),
     // q189: the exact change set from key arithmetic — updates are the
     // mod-3 keys with +7 cents, inserts the negated mod-5 twins; any
     // unchanged-but-rewritten row the snapshot diff failed to drop would
     // add rows and break the hash
-    "q189_versioned_changes" ->
+    QuerySpec("q189_versioned_changes", q189_versioned_changes, Oracle(
       """WITH c AS (
            SELECT o_orderkey AS k,
              cast(cast(o_totalprice as DECIMAL(18,2)) * 100 as bigint) AS cents
@@ -7875,11 +7610,11 @@ object SparkEntry {
            cast(cents + 7 as bigint) AS cents
          FROM c WHERE k % 3 = 0
          UNION ALL
-         SELECT -k - 1, 'insert', cents FROM c WHERE k % 5 = 0""",
+         SELECT -k - 1, 'insert', cents FROM c WHERE k % 5 = 0""")),
     // q190: DuckDB's own UAX #15 nfc_normalize recomputes the cleaning —
     // the cleaned string itself is hash-compared, so composition and the
     // zero-width strip must agree codepoint-for-codepoint across engines
-    "q190_unicode_clean" ->
+    QuerySpec("q190_unicode_clean", q190_unicode_clean, Oracle(
       """WITH d AS (
            SELECT doc_id,
              'ab' || repeat(chr(8203), cast(doc_id % 4 as int)) || 'e' ||
@@ -7893,10 +7628,10 @@ object SparkEntry {
            FROM d)
          SELECT doc_id, cast(length(dirty) as bigint) AS chars_before,
            cast(length(clean) as bigint) AS chars_after, clean
-         FROM c""",
+         FROM c""")),
     // q191: the two point rows by key arithmetic; a bloom false NEGATIVE
     // (impossible by construction) would drop a row and break the hash
-    "q191_versioned_point" ->
+    QuerySpec("q191_versioned_point", q191_versioned_point, Oracle(
       """WITH c AS (
            SELECT o_orderkey,
              cast(cast(o_totalprice as DECIMAL(18,2)) * 100 as bigint) AS cents
@@ -7904,11 +7639,11 @@ object SparkEntry {
          b AS (SELECT min(o_orderkey) AS lo, max(o_orderkey) AS hi FROM c)
          SELECT 'lo' AS probe, o_orderkey, cents FROM c, b WHERE o_orderkey = lo
          UNION ALL
-         SELECT 'hi', o_orderkey, cents FROM c, b WHERE o_orderkey = hi""",
+         SELECT 'hi', o_orderkey, cents FROM c, b WHERE o_orderkey = hi""")),
     // q192: DuckDB's NATIVE ASOF LEFT JOIN recomputes the backward match —
     // an independent implementation of the same inclusive <= semantics the
     // union+window plan produces; the matched quote_ts rides in the hash
-    "q192_asof_join" ->
+    QuerySpec("q192_asof_join", q192_asof_join, Oracle(
       """WITH quotes AS (
            SELECT user_id, ts AS quote_ts, max(value) AS last_quote
            FROM events WHERE event_type IN ('view', 'click') GROUP BY 1, 2),
@@ -7918,9 +7653,9 @@ object SparkEntry {
          SELECT t.trade_id, t.user_id, t.ts, t.trade_val,
            q.quote_ts, q.last_quote
          FROM trades t ASOF LEFT JOIN quotes q
-           ON t.user_id = q.user_id AND t.ts >= q.quote_ts""",
+           ON t.user_id = q.user_id AND t.ts >= q.quote_ts""")),
     // q193: the oracle IS the range theta-join the binned plan avoids
-    "q193_interval_join" ->
+    QuerySpec("q193_interval_join", q193_interval_join, Oracle(
       """WITH iv AS (
            SELECT o_orderkey AS ik, cast(o_orderdate as date) AS win_start,
              cast(o_orderdate as date) + cast(o_orderkey % 30 as int) AS win_end
@@ -7931,11 +7666,11 @@ object SparkEntry {
          SELECT ik, win_start, win_end,
            cast(count(*) as bigint) AS n_ship, cast(sum(qty) as bigint) AS sum_qty
          FROM iv JOIN pt ON d BETWEEN win_start AND win_end
-         GROUP BY 1, 2, 3""",
+         GROUP BY 1, 2, 3""")),
     // q194: the oracle recomputes the v2 state from the key arithmetic and
     // aggregates it FROM SCRATCH — the incremental path must land exactly
     // there. Negative-key inserts exercise pmod vs remainder semantics.
-    "q194_incremental_view" ->
+    QuerySpec("q194_incremental_view", q194_incremental_view, Oracle(
       """WITH c AS (
            SELECT o_orderkey AS k,
              cast(cast(o_totalprice as DECIMAL(18,2)) * 100 as bigint) AS cents
@@ -7949,11 +7684,11 @@ object SparkEntry {
            SELECT -k - 1, ((-k - 1) % 7 + 7) % 7, cents FROM c WHERE k % 5 = 0)
          SELECT grp, cast(count(*) as bigint) AS n_rows,
            cast(sum(cents) as bigint) AS sum_cents
-         FROM fin GROUP BY 1""",
+         FROM fin GROUP BY 1""")),
     // q195: DuckDB recomputes the packing with the GLOBAL-order window the
     // Spark plan deliberately avoids — same exclusive prefix sum, same
     // integer pack arithmetic
-    "q195_seq_pack" ->
+    QuerySpec("q195_seq_pack", q195_seq_pack, Oracle(
       """WITH d AS (
            SELECT doc_id,
              cast(len(list_filter(string_split_regex(text, '\s+'),
@@ -7970,10 +7705,10 @@ object SparkEntry {
            (cb + nt - 1) // 512 AS pack_last,
            (cb + nt - 1) // 512 - cb // 512 + 1 AS n_packs,
            cb % 512 AS pack_off
-         FROM c""",
+         FROM c""")),
     // q196: the oracle IS the theta-join the user wrote — the optimizer
     // rule must preserve it exactly while deleting the nested loop
-    "q196_range_join_rule" ->
+    QuerySpec("q196_range_join_rule", q196_range_join_rule, Oracle(
       """WITH iv AS (
            SELECT o_orderkey AS ik, cast(o_orderdate as date) AS win_start,
              cast(o_orderdate as date) + cast(o_orderkey % 45 as int) AS win_end
@@ -7984,11 +7719,11 @@ object SparkEntry {
          SELECT ik, win_start, win_end,
            cast(count(*) as bigint) AS n_ship, cast(sum(qty) as bigint) AS sum_qty
          FROM iv JOIN pt ON d BETWEEN win_start AND win_end
-         GROUP BY 1, 2, 3""",
+         GROUP BY 1, 2, 3""")),
     // q197: RationalIdf BM25 is pure long arithmetic with floor division —
     // the oracle recomputes scores AND ranks bit-identically (idf =
     // (2N-2df+1)e6/(2df+1), tfpart = 22·tf·S·e6/(10·tf·S+3·S+9·dl·N))
-    "q197_bm25_topk" ->
+    QuerySpec("q197_bm25_topk", q197_bm25_topk, Oracle(
       """WITH tok AS (
            SELECT doc_id, unnest(list_filter(string_split_regex(text, '\s+'),
              x -> len(x) > 0)) AS t
@@ -8016,11 +7751,11 @@ object SparkEntry {
              cast(row_number() OVER (PARTITION BY query_id
                ORDER BY score DESC, doc_id ASC) as bigint) AS rank
            FROM sc) t
-         WHERE rank <= 10""",
+         WHERE rank <= 10""")),
     // q198: the bigram-LM likelihood is pure long arithmetic (floor-scaled
     // add-one probs), and the 80% train split is the q83 md5 convention
     // (0.8·65536 = 52429 = 0xcccd) — fully engine-portable
-    "q198_lm_perplexity" ->
+    QuerySpec("q198_lm_perplexity", q198_lm_perplexity, Oracle(
       """WITH d AS (SELECT doc_id,
              list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS l,
              substring(md5(cast(doc_id as varchar)), 1, 4) < 'cccd' AS is_train
@@ -8050,19 +7785,21 @@ object SparkEntry {
          SELECT doc_id, cast(count(*) as bigint) AS n_bigrams,
            cast(sum(t) as bigint) AS score_ppm,
            cast(sum(t) as bigint) // cast(count(*) as bigint) AS mean_ppm
-         FROM terms GROUP BY 1""",
+         FROM terms GROUP BY 1""")),
+    QuerySpec("q199_ann_ivfpq", q199_ann_ivfpq, RowsOnly(
+      "exact twin q38_ann_brute; hash-PROVEN det twin q225 (train/encode/ADC oracle-checked); PqSpec exhaustive-regime identity + planted recall bound")),
     // q200: the pruned box read must equal the plain relational box — file
     // skipping is invisible to results by contract
-    "q200_zorder_box" ->
+    QuerySpec("q200_zorder_box", q200_zorder_box, Oracle(
       """SELECT l_suppkey, cast(count(*) as bigint) AS n_rows,
            cast(sum(cast(l_quantity as bigint)) as bigint) AS sum_qty,
            cast(count(DISTINCT l_orderkey) as bigint) AS n_orders
          FROM lineitem
          WHERE l_partkey BETWEEN 20 AND 149 AND l_suppkey BETWEEN 2 AND 7
-         GROUP BY 1""",
+         GROUP BY 1""")),
     // q201: three snapshots — pre-delete (v1), merge-on-read (mor), and
     // post-purge (purged); the latter two must agree exactly
-    "q201_delete_vectors" ->
+    QuerySpec("q201_delete_vectors", q201_delete_vectors, Oracle(
       """WITH agg AS (
            SELECT l_linestatus,
              cast(count(*) as bigint) AS n_rows,
@@ -8084,10 +7821,10 @@ object SparkEntry {
            FROM agg WHERE NOT live
          UNION ALL
          SELECT 'purged', l_linestatus, n_rows, sum_qty, n_orders
-           FROM agg WHERE NOT live""",
+           FROM agg WHERE NOT live""")),
     // q202: the MV-rewritten rollup must equal the base-table aggregate —
     // the rewrite changes the access path, never the answer
-    "q202_mv_rewrite" ->
+    QuerySpec("q202_mv_rewrite", q202_mv_rewrite, Oracle(
       """SELECT l_linestatus AS status,
            cast(count(*) as bigint) AS n_rows,
            cast(sum(cast(l_quantity as bigint)) as bigint) AS sum_qty,
@@ -8095,10 +7832,10 @@ object SparkEntry {
            cast(max(cast(l_quantity as bigint)) as bigint) AS max_qty
          FROM lineitem
          WHERE l_returnflag <> 'R'
-         GROUP BY 1""",
+         GROUP BY 1""")),
     // q203: update-then-delete through vectors must equal the relational
     // CASE + WHERE recomputation
-    "q203_mor_update" ->
+    QuerySpec("q203_mor_update", q203_mor_update, Oracle(
       """SELECT l_linestatus,
            cast(count(*) as bigint) AS n_rows,
            cast(sum(cast(CASE WHEN l_quantity >= 45 THEN l_quantity - 40
@@ -8106,10 +7843,10 @@ object SparkEntry {
            cast(count(DISTINCT l_orderkey) as bigint) AS n_orders
          FROM lineitem
          WHERE l_returnflag <> 'R'
-         GROUP BY 1""",
+         GROUP BY 1""")),
     // q204: feature extraction and hashed-weight scoring recomputed
     // relationally (same md5 fold on both engines)
-    "q204_hashed_classifier" ->
+    QuerySpec("q204_hashed_classifier", q204_hashed_classifier, Oracle(
       """WITH toks AS (
            SELECT doc_id,
              list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS u
@@ -8124,10 +7861,10 @@ object SparkEntry {
              cast(coalesce(list_sum(list_transform(f,
                t -> (('0x' || substring(md5(t),1,8))::BIGINT % 997) - 498)), 0) as bigint) AS score
            FROM feats)
-         SELECT doc_id, n_feats, score, score > 0 AS accepted FROM scored""",
+         SELECT doc_id, n_feats, score, score > 0 AS accepted FROM scored""")),
     // q205: the incrementally refreshed MV must equal the relational
     // recomputation of the evolved base (append + keyed update)
-    "q205_mv_incremental_rewrite" ->
+    QuerySpec("q205_mv_incremental_rewrite", q205_mv_incremental_rewrite, Oracle(
       """WITH base AS (
            SELECT o_orderkey AS k, o_orderpriority AS grp,
              cast(cast(o_totalprice as DECIMAL(18,2)) * 100 as bigint) AS v
@@ -8140,11 +7877,11 @@ object SparkEntry {
            SELECT k, grp, v FROM appended)
          SELECT grp, cast(count(*) as bigint) AS n_rows,
            cast(sum(v) as bigint) AS sum_cents
-         FROM merged GROUP BY 1""",
+         FROM merged GROUP BY 1""")),
     // q206: restored source and shallow clone must both equal the
     // relational recomputation of the v2 snapshot (delete applied, junk
     // append gone)
-    "q206_restore_clone" ->
+    QuerySpec("q206_restore_clone", q206_restore_clone, Oracle(
       """WITH agg AS (
            SELECT l_linestatus,
              cast(count(*) as bigint) AS n_rows,
@@ -8152,11 +7889,11 @@ object SparkEntry {
            FROM lineitem WHERE l_returnflag <> 'R' GROUP BY 1)
          SELECT l_linestatus, n_rows, sum_qty, 'restored' AS src FROM agg
          UNION ALL
-         SELECT l_linestatus, n_rows, sum_qty, 'clone' AS src FROM agg""",
+         SELECT l_linestatus, n_rows, sum_qty, 'clone' AS src FROM agg""")),
     // q207: the full span-dedup recomputed relationally — window
     // fingerprints, global duplicate set, coverage expansion, and the
     // cleaned text itself
-    "q207_span_dedup" ->
+    QuerySpec("q207_span_dedup", q207_span_dedup, Oracle(
       """WITH toks AS (
            SELECT doc_id,
              list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS u
@@ -8192,11 +7929,11 @@ object SparkEntry {
              i -> t.u[i]), ' '), '') AS cleaned_text
          FROM toks t
          LEFT JOIN magg USING (doc_id)
-         LEFT JOIN cagg USING (doc_id)""",
+         LEFT JOIN cagg USING (doc_id)""")),
     // q208: rank-only neighbor ordering (the q38 convention — cosine values
     // never cross the comparison, only their order), then the same
     // votes-desc/label-asc argmax the Spark struct-max encodes
-    "q208_knn_classify" ->
+    QuerySpec("q208_knn_classify", q208_knn_classify, Oracle(
       """WITH nn AS (
            SELECT q.vec_id AS query_id, c.label AS lbl,
              row_number() OVER (PARTITION BY q.vec_id
@@ -8211,17 +7948,17 @@ object SparkEntry {
                    ORDER BY votes DESC, lbl ASC) AS pick
                FROM v)
          SELECT query_id, cast(lbl as bigint) AS pred_label, votes
-         FROM r WHERE pick = 1""",
-    "q209_source_quota" ->
+         FROM r WHERE pick = 1""")),
+    QuerySpec("q209_source_quota", q209_source_quota, Oracle(
       """SELECT doc_id, source FROM (
            SELECT doc_id, source, row_number() OVER (
              PARTITION BY source
              ORDER BY substring(md5(cast(doc_id as varchar)), 1, 8), doc_id) AS rn
-           FROM documents) WHERE rn <= 10""",
+           FROM documents) WHERE rn <= 10""")),
     // q210: all-integer JL projection — float→double cast is exact, ·1024 is
     // an exponent shift, and the ±1/0 matrix comes from the same closed-form
     // integer formula on both sides, so the comparison is hash-exact
-    "q210_jl_projection" ->
+    QuerySpec("q210_jl_projection", q210_jl_projection, Oracle(
       """WITH q AS (
            SELECT vec_id, list_transform(embedding,
              x -> cast(round(cast(x as double) * 1024) as bigint)) AS qv
@@ -8230,10 +7967,10 @@ object SparkEntry {
          SELECT q.vec_id, cast(d.dim as bigint) AS dim,
            cast(list_sum(list_transform(range(0, len(qv)),
              i -> qv[i+1] * ((i * 131 + d.dim * 37) * (i * 131 + d.dim * 37 + 1) % 4099 % 3 - 1))) as bigint) AS val
-         FROM q, d""",
+         FROM q, d""")),
     // q211: integer cents, exact integer numerator, one mirrored double
     // division + addition (the q92 deterministic-IEEE convention)
-    "q211_interpolate" ->
+    QuerySpec("q211_interpolate", q211_interpolate, Oracle(
       """WITH daily AS (
            SELECT user_id, cast(ts as date) AS day,
              cast(sum(cast(cast(value as decimal(18,4)) * 10000 as bigint)) as bigint) AS cents
@@ -8262,20 +7999,20 @@ object SparkEntry {
                 ELSE pv + (nv - pv) * datediff('day', pd, day) / datediff('day', pd, nd)
            END AS cents_filled,
            cents IS NOT NULL AS observed
-         FROM f""",
+         FROM f""")),
     // q212: the ENTIRE MinHash-LSH pipeline on the md5-affine hash family —
     // 28-bit token hash from 7 hex chars, affine perms derived inline from
     // the seed index, per-band bucket keys, candidate join, exact verify
-    "q212_minhash_det" -> detMinhashOracleSql,
+    QuerySpec("q212_minhash_det", q212_minhash_det, benched = false, check = Oracle(detMinhashOracleSql)),
     // q213: md5-derived SimHash bit votes, pigeonhole bands, exact Hamming
-    "q213_simhash_det" -> detSimhashOracleSql,
+    QuerySpec("q213_simhash_det", q213_simhash_det, benched = false, check = Oracle(detSimhashOracleSql)),
     // q215: the fold acc*B + h mod P equals sum(h_t * B^(n-1-t)) mod P —
     // recursive power table; per-term mod keeps the sum < 2^43
-    "q215_fingerprint_det" -> detRollingOracleSql,
+    QuerySpec("q215_fingerprint_det", q215_fingerprint_det, Oracle(detRollingOracleSql)),
     // q216: robust winnowing (k=3, w=4) — min per hash window, RIGHTMOST
     // tie-break via max position among window minima; ≥ 6 tokens required
     // for one full window (k + w − 1)
-    "q216_winnow_fingerprints" ->
+    QuerySpec("q216_winnow_fingerprints", q216_winnow_fingerprints, Oracle(
       s"""WITH toks AS (
            SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> len(x) > 0) AS ts
            FROM documents),
@@ -8289,37 +8026,37 @@ object SparkEntry {
              list_max(list_filter(range(i, i + 4), j -> hs[j] = list_min(hs[i:i+3]))) AS pos,
              list_min(hs[i:i+3]) AS fp
            FROM win)
-         SELECT doc_id, cast(pos as bigint) AS pos, fp FROM sel""",
+         SELECT doc_id, cast(pos as bigint) AS pos, fp FROM sel""")),
     // q217: both Lloyd rounds unrolled — assignment (exact integer sqdist,
     // ties to the smaller cluster), M-step (floor-div centroid update,
     // empty clusters keep the old centroid), final stats + centroid digest
-    "q217_kmeans_quantized" -> kmeansOracleSql(k = 8, iters = 2),
+    QuerySpec("q217_kmeans_quantized", q217_kmeans_quantized, Oracle(kmeansOracleSql(k = 8, iters = 2))),
     // q219: all 256 BPE iterations unrolled — vocab pair counts, argmax,
     // padded-replace merge rewrite; the merge table INCLUDING the
     // early-stop point is the checked output (iterations past exhaustion
     // produce empty b/v CTEs in both engines)
-    "q219_bpe_learn" -> bpeOracleSql(nMerges = 256),
+    QuerySpec("q219_bpe_learn", q219_bpe_learn, Oracle(bpeOracleSql(nMerges = 256))),
     // q264/q265: the WordPiece merge loop and its greedy segmenter,
     // replayed relationally (unrolled rounds, exact HUGEINT rational
     // argmax, 8-step longest-match unroll)
-    "q264_wordpiece_learn" -> wordpieceLearnOracleSql(nMerges = 64),
+    QuerySpec("q264_wordpiece_learn", q264_wordpiece_learn, Oracle(wordpieceLearnOracleSql(nMerges = 64))),
     // q273: all three tokenizers replayed in one statement
-    "q273_tokenizer_fertility" -> tokenizerFertilityOracleSql(nMerges = 64),
-    "q265_wordpiece_segment" -> wordpieceSegmentOracleSql(nMerges = 64),
+    QuerySpec("q273_tokenizer_fertility", q273_tokenizer_fertility, Oracle(tokenizerFertilityOracleSql(nMerges = 64))),
+    QuerySpec("q265_wordpiece_segment", q265_wordpiece_segment, Oracle(wordpieceSegmentOracleSql(nMerges = 64))),
     // q274: the SAME oracle — batch-trained model applied in a streaming
     // drain equals the batch segmentation row-for-row (q253 discipline)
-    "q274_stream_wordpiece" -> wordpieceSegmentOracleSql(nMerges = 64),
+    QuerySpec("q274_stream_wordpiece", q274_stream_wordpiece, Oracle(wordpieceSegmentOracleSql(nMerges = 64))),
     // q268: the structured-page fixture rebuilt relationally, then every
     // C4 rule recomputed (regex + integer counts) down to the md5 of the
     // retained-line output
-    "q268_c4_rules" -> c4RulesOracleSql,
+    QuerySpec("q268_c4_rules", q268_c4_rules, Oracle(c4RulesOracleSql)),
     // q270: the SAME oracle — the streaming drain must equal the batch
     // battery row-for-row (stateless projections, q253 discipline)
-    "q270_stream_c4_gate" -> c4RulesOracleSql,
+    QuerySpec("q270_stream_c4_gate", q270_stream_c4_gate, Oracle(c4RulesOracleSql)),
     // q269: the C4 span-dedup step over the same fixture — sentences by
     // terminal punctuation, 3-sentence sliding spans, retained occurrence
     // = (doc_id, position)-smallest
-    "q269_c4_span_dedup" ->
+    QuerySpec("q269_c4_span_dedup", q269_c4_span_dedup, Oracle(
       ("""WITH """ + c4PageCtes + """,
          sent AS (SELECT doc_id,
              list_transform(regexp_extract_all(replace(page, chr(10), ' '), '[^.!?]+[.!?]'),
@@ -8340,12 +8077,12 @@ object SparkEntry {
          FROM sent s LEFT JOIN (
            SELECT doc_id, count(*) AS n_spans,
              count(*) FILTER (cnt > 1 AND rn > 1) AS n_removed
-           FROM marked GROUP BY 1) m ON m.doc_id = s.doc_id"""),
+           FROM marked GROUP BY 1) m ON m.doc_id = s.doc_id"""))),
     // q272: the composed chain — C4 pass from the page CTEs, KN scores
     // from the shared knsc core, rank-thirds bucket filter over the
     // C4-surviving held-out pool, duplicated-window strip over the
     // survivor corpus, per-(lang, source) summary
-    "q272_fineweb_prep" ->
+    QuerySpec("q272_fineweb_prep", q272_fineweb_prep, Oracle(
       ("""WITH """ + c4PageCtes + """,
          c4fl AS (SELECT doc_id, page,
              list_filter(string_split(page, chr(10)), l -> len(trim(l)) > 0) AS lines
@@ -8383,11 +8120,11 @@ object SparkEntry {
            cast(sum(ds.n_dup) as bigint) AS n_dup_positions
          FROM keptx k JOIN dstatx ds ON ds.doc_id = k.doc_id
          WHERE ds.n_dup * 5 < ds.n_pos
-         GROUP BY 1, 2"""),
+         GROUP BY 1, 2"""))),
     // q277: q272's CTE families (C4 gate + KN keep-best + keptx) plus
     // q276's strip CTEs restricted to the survivor set, with per-group
     // order-pinned md5-of-md5s of the cleaned documents
-    "q277_fineweb_strip" ->
+    QuerySpec("q277_fineweb_strip", q277_fineweb_strip, Oracle(
       ("""WITH """ + c4PageCtes + """,
          c4fl AS (SELECT doc_id, page,
              list_filter(string_split(page, chr(10)), l -> len(trim(l)) > 0) AS lines
@@ -8441,11 +8178,11 @@ object SparkEntry {
            cast(sum(f.n_kept) as bigint) AS n_kept,
            md5(string_agg(f.cmd5, '' ORDER BY f.doc_id)) AS corpus_md5
          FROM keptx k JOIN sfin f ON f.doc_id = k.doc_id
-         GROUP BY 1, 2"""),
+         GROUP BY 1, 2"""))),
     // q267: suffix ranks from the DEFINITION — dense_rank over the
     // materialized ≤8-token slices (list order = lexicographic,
     // shorter-first, matching the -1 padding of the doubling recurrence)
-    "q267_suffix_ranks" ->
+    QuerySpec("q267_suffix_ranks", q267_suffix_ranks, Oracle(
       """WITH d AS (SELECT doc_id,
              list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS l
            FROM documents),
@@ -8457,35 +8194,35 @@ object SparkEntry {
            FROM p)
          SELECT doc_id, wi, rank,
            (count(*) OVER (PARTITION BY win)) > 1 AS is_dup
-         FROM r""",
+         FROM r""")),
     // q220: train (shared CTEs) + segment every doc with the learned
     // merges in rank order; per-doc subword token/type counts
-    "q220_bpe_segment" -> bpeSegmentOracleSql(nMerges = 8),
-    "q287_bpe_bytes_learn" -> bpeBytesOracleSql(nMerges = 48),
-    "q288_bpe_bytes_segment" -> bpeBytesSegmentOracleSql(nMerges = 8),
-    "q289_quality_calibrated" -> perceptronCalibratedOracleSql(epochs = 4),
+    QuerySpec("q220_bpe_segment", q220_bpe_segment, Oracle(bpeSegmentOracleSql(nMerges = 8))),
+    QuerySpec("q287_bpe_bytes_learn", q287_bpe_bytes_learn, Oracle(bpeBytesOracleSql(nMerges = 48))),
+    QuerySpec("q288_bpe_bytes_segment", q288_bpe_bytes_segment, Oracle(bpeBytesSegmentOracleSql(nMerges = 8))),
+    QuerySpec("q289_quality_calibrated", q289_quality_calibrated, Oracle(perceptronCalibratedOracleSql(epochs = 4))),
     // streaming drain of q284's projection+lookup — stateless, AvailableNow:
     // row-identical to the batch query by construction, oracle shared
-    "q290_stream_image_gate" -> q284OracleSql,
-    "q292_calibration_ece" -> calibrationEceOracleSql(epochs = 4),
+    QuerySpec("q290_stream_image_gate", q290_stream_image_gate, Oracle(q284OracleSql)),
+    QuerySpec("q292_calibration_ece", q292_calibration_ece, Oracle(calibrationEceOracleSql(epochs = 4))),
     // q221: every greedy MMR step unrolled — candidate window, per-step
     // argmax, max-sim update; integer sign·cos²-scaled scores throughout
-    "q221_mmr_rerank" -> mmrOracleSql(c = 16, k = 5),
+    QuerySpec("q221_mmr_rerank", q221_mmr_rerank, Oracle(mmrOracleSql(c = 16, k = 5))),
     // q222: three unrolled integer-mass power-iteration rounds over the
     // symmetrized co-purchase graph
-    "q222_pagerank" -> pagerankOracleSql(iters = 3),
+    QuerySpec("q222_pagerank", q222_pagerank, Oracle(pagerankOracleSql(iters = 3))),
     // q223: closed-form hyperplane buckets + integer re-rank — candidate
     // generation itself oracle-checked (the q212 discipline for ANN)
-    "q223_ann_lsh_det" -> lshDetOracleSql(tables = 4, nbits = 8, k = 5),
+    QuerySpec("q223_ann_lsh_det", q223_ann_lsh_det, Oracle(lshDetOracleSql(tables = 4, nbits = 8, k = 5))),
     // q224: the whole IVF pipeline replayed — k-means train (shared CTEs),
     // cell assign, nprobe probe, exact in-cell re-rank
-    "q224_ann_ivf_det" -> ivfDetOracleSql(nlist = 8, iters = 1, nprobe = 2, k = 5),
+    QuerySpec("q224_ann_ivf_det", q224_ann_ivf_det, Oracle(ivfDetOracleSql(nlist = 8, iters = 1, nprobe = 2, k = 5))),
     // q225: PQ codebook train / encode / ADC tables / Σ-ADC scan, all
     // integer — the whole compressed index replayed
-    "q225_ann_pq_det" -> pqDetOracleSql(m = 4, ksub = 8, iters = 1, k = 5),
+    QuerySpec("q225_ann_pq_det", q225_ann_pq_det, Oracle(pqDetOracleSql(m = 4, ksub = 8, iters = 1, k = 5))),
     // q226: q218's shards/edges/components with the paper's representative
     // rule — farthest-from-centroid (max sqdist, min-id ties) per group
-    "q226_semdedup_far" ->
+    QuerySpec("q226_semdedup_far", q226_semdedup_far, Oracle(
       """WITH RECURSIVE q AS (
            SELECT vec_id, list_transform(embedding,
              x -> cast(round(cast(x as double) * 1024) as bigint)) AS qv
@@ -8521,10 +8258,10 @@ object SparkEntry {
          SELECT centroid_id, cast(count(*) as bigint) AS n_vecs,
            cast(sum(CASE WHEN krn = 1 THEN 1 ELSE 0 END) as bigint) AS n_kept,
            cast(sum(CASE WHEN krn = 1 THEN vec_id END) as bigint) AS sum_kept
-         FROM kp GROUP BY 1""",
+         FROM kp GROUP BY 1""")),
     // q227: integer Gram matrix — the lateral dim cross join mirrors the
     // double posexplode; the integer sum is partition-order-independent
-    "q227_gram_matrix" ->
+    QuerySpec("q227_gram_matrix", q227_gram_matrix, Oracle(
       """WITH qz AS (SELECT list_transform(embedding,
              x -> cast(round(cast(x as double) * 1024) as bigint)) AS qv
            FROM embeddings),
@@ -8533,10 +8270,10 @@ object SparkEntry {
            cast(sum(qz.qv[di.d + 1] * qz.qv[dj.d + 1]) as bigint) AS s
          FROM qz CROSS JOIN dims di CROSS JOIN dims dj
          WHERE dj.d >= di.d
-         GROUP BY 1, 2""",
+         GROUP BY 1, 2""")),
     // q228: covariance numerators n·Σxy − Σx·Σy — all integer, the one
     // float division deferred to the (never-taken) display step
-    "q228_covariance" ->
+    QuerySpec("q228_covariance", q228_covariance, Oracle(
       """WITH qz AS (SELECT list_transform(embedding,
              x -> cast(round(cast(x as double) * 1024) as bigint)) AS qv
            FROM embeddings),
@@ -8553,15 +8290,15 @@ object SparkEntry {
            FROM qz CROSS JOIN dims d
            GROUP BY 1)
          SELECT g.i, g.j, cast(si.n * g.s - si.sx * sj.sx as bigint) AS cov_num
-         FROM gram g JOIN sums si ON si.d = g.i JOIN sums sj ON sj.d = g.j""",
+         FROM gram g JOIN sums si ON si.d = g.i JOIN sums sj ON sj.d = g.j""")),
     // q229: Gram rebuild + all 3 integer power rounds + reprojection —
     // the eigenvector itself is replayed, not just bounded
-    "q229_pca_project" -> pcaOracleSql(iters = 3),
+    QuerySpec("q229_pca_project", q229_pca_project, Oracle(pcaOracleSql(iters = 3))),
     // q242: both power chains + the integer rejection residual replayed
-    "q242_pca2_project" -> pca2OracleSql(iters = 3, shift = 24),
+    QuerySpec("q242_pca2_project", q242_pca2_project, Oracle(pca2OracleSql(iters = 3, shift = 24))),
     // q243: two md5-affine sketches + the min-over-rows inner product,
     // next to the exact join size
-    "q243_joinsize_sketch" -> {
+    QuerySpec("q243_joinsize_sketch", q243_joinsize_sketch, Oracle {
       def cells(tbl: String, key: String) = {
         val h = detHexHashSql(s"cast($key as varchar)", 7)
         s"""SELECT r.row AS row,
@@ -8582,10 +8319,10 @@ object SparkEntry {
          SELECT est.est_join_size, ex.true_join_size,
            est.est_join_size - ex.true_join_size AS overestimate
          FROM est CROSS JOIN ex"""
-    },
+    }),
     // q244: q214's shard assignment + integer Gini n² − Σc² and the
     // (count DESC, label ASC) majority
-    "q244_shard_purity" ->
+    QuerySpec("q244_shard_purity", q244_shard_purity, Oracle(
       """WITH q AS (
            SELECT vec_id, label, list_transform(embedding,
              x -> cast(round(cast(x as double) * 1024) as bigint)) AS qv
@@ -8614,12 +8351,12 @@ object SparkEntry {
          FROM (SELECT centroid_id, cast(sum(c) as bigint) AS n,
                  cast(sum(c) * sum(c) - sum(c * c) as bigint) AS gini_num
                FROM counts GROUP BY 1) g
-         JOIN mj ON mj.centroid_id = g.centroid_id""",
+         JOIN mj ON mj.centroid_id = g.centroid_id""")),
     // q245: H.264 I_PCM decode — per-frame channel sums and the
     // position-weighted red sum from the per-macroblock closed form
     // (mb raster my*2+mx; Σpos over mb = 131072*my + 4096*mx + 63360;
     // 25 fps elementary-stream timing)
-    "q245_h264_frames" ->
+    QuerySpec("q245_h264_frames", q245_h264_frames, Oracle(
       """WITH fr AS (SELECT unnest(range(0, 3)) AS f),
          v AS (
            SELECT d.doc_id, fr.f,
@@ -8635,10 +8372,10 @@ object SparkEntry {
            cast((v0 + v1 + v2 + v3) * 256 as bigint) AS sum_g,
            cast((v0 + v1 + v2 + v3) * 256 as bigint) AS sum_b,
            cast(v0 * 63360 + v1 * 67456 + v2 * 194432 + v3 * 198528 as bigint) AS wsum_r
-         FROM v""",
+         FROM v""")),
     // q246: mixture sampling — per-source rollup of the all-integer
     // md5-threshold membership (h16*avail*sum_w < budget*w*65536)
-    "q246_mixture_sample" ->
+    QuerySpec("q246_mixture_sample", q246_mixture_sample, Oracle(
       """WITH toks AS (
            SELECT doc_id, source,
              cast(len(list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0)) as bigint) AS t
@@ -8655,10 +8392,10 @@ object SparkEntry {
          SELECT source, max(avail) AS avail_tokens,
            cast(count(*) as bigint) AS kept_docs,
            cast(sum(t) as bigint) AS kept_tokens
-         FROM kept GROUP BY 1""",
+         FROM kept GROUP BY 1""")),
     // q247: streaming gate's drained output == the batch closed form —
     // q212's md5-affine banding, keeper = min doc_id per (band, bucket)
-    "q247_stream_neardup_gate" ->
+    QuerySpec("q247_stream_neardup_gate", q247_stream_neardup_gate, Oracle(
       s"""WITH ne AS ($detShingleSetsSql),
        hs AS (
          SELECT doc_id,
@@ -8681,10 +8418,10 @@ object SparkEntry {
            cast(sum(CASE WHEN k.keeper < b.doc_id THEN 1 ELSE 0 END) as bigint) AS n_dup_bands
          FROM bands b JOIN keep k ON b.bnum = k.bnum AND b.bucket = k.bucket
          GROUP BY 1)
-       SELECT doc_id, n_dup_bands, n_dup_bands > 0 AS is_candidate FROM per""",
+       SELECT doc_id, n_dup_bands, n_dup_bands > 0 AS is_candidate FROM per""")),
     // q248: refinement selection == the rank-th smallest; rank is the
     // same IEEE ceil(p*n) the Scala side computes
-    "q248_refine_quantiles" ->
+    QuerySpec("q248_refine_quantiles", q248_refine_quantiles, Oracle(
       """WITH t AS (
            SELECT CAST(floor(l_extendedprice * 100) AS BIGINT) AS v FROM lineitem
            WHERE l_extendedprice IS NOT NULL),
@@ -8695,9 +8432,9 @@ object SparkEntry {
          min(CASE WHEN rn >= ceil(0.5 * n) THEN v END) AS p50_cents,
          min(CASE WHEN rn >= ceil(0.9 * n) THEN v END) AS p90_cents,
          min(CASE WHEN rn >= ceil(0.99 * n) THEN v END) AS p99_cents
-       FROM r""",
+       FROM r""")),
     // q249: per-group rank-th smallest, same IEEE ceil(p*n) ranks
-    "q249_group_quantiles" ->
+    QuerySpec("q249_group_quantiles", q249_group_quantiles, Oracle(
       """WITH t AS (
            SELECT l_returnflag AS g,
              CAST(floor(l_extendedprice * 100) AS BIGINT) AS v
@@ -8712,9 +8449,9 @@ object SparkEntry {
          min(CASE WHEN rn >= ceil(0.25 * n) THEN v END) AS p25_cents,
          min(CASE WHEN rn >= ceil(0.5 * n) THEN v END) AS p50_cents,
          min(CASE WHEN rn >= ceil(0.9 * n) THEN v END) AS p90_cents
-       FROM r GROUP BY g""",
+       FROM r GROUP BY g""")),
     // q250: bounds_i = ceil((i/8)*n)-th smallest; bin = #{bounds < v}
-    "q250_balanced_range_bins" ->
+    QuerySpec("q250_balanced_range_bins", q250_balanced_range_bins, Oracle(
       """WITH t AS (
            SELECT CAST(floor(l_extendedprice * 100) AS BIGINT) AS v FROM lineitem
            WHERE l_extendedprice IS NOT NULL),
@@ -8730,11 +8467,11 @@ object SparkEntry {
            FROM t)
        SELECT bin, count(*) AS n_rows,
          min(v) AS min_cents, max(v) AS max_cents
-       FROM binned GROUP BY bin""",
+       FROM binned GROUP BY bin""")),
     // q251: weighted rank = smallest v whose tie-inclusive cumulative
     // token mass reaches ceil(p*totalTokens); RANGE window frame gives
     // exactly the tie-group-inclusive cumsum
-    "q251_tokenmass_quantiles" ->
+    QuerySpec("q251_tokenmass_quantiles", q251_tokenmass_quantiles, Oracle(
       """WITH toks AS (
            SELECT cast(len(list_filter(string_split_regex(text, '\s+'),
              x -> len(x) > 0)) as bigint) AS v
@@ -8745,38 +8482,38 @@ object SparkEntry {
        SELECT
          min(CASE WHEN cw >= ceil(0.5 * tw) THEN v END) AS p50_len,
          min(CASE WHEN cw >= ceil(0.9 * tw) THEN v END) AS p90_len
-       FROM r""",
+       FROM r""")),
     // q252: reference-side equi-depth bounds (q250's rule), per-bin
     // counts both sides, integer TV term |n_ref*Nc - n_cur*Nr|
-    "q252_dist_drift" -> distDriftOracleSql,
+    QuerySpec("q252_dist_drift", q252_dist_drift, Oracle(distDriftOracleSql)),
     // q253: the STREAMING monitor's bounded drain over the same rows is
     // row-identical to the batch monitor — shared oracle (q51/q60
     // streaming-equals-batch pattern)
-    "q253_stream_drift" -> distDriftOracleSql,
+    QuerySpec("q253_stream_drift", q253_stream_drift, Oracle(distDriftOracleSql)),
     // q254/q255: directed shingle-set containment C(A,B) = |A∩B|/|A| ≥ 0.8
     // — the same oracle text for the O(n²) baseline and the indexed scale
     // path (exact prefix filtering must reproduce the baseline verbatim)
-    "q254_containment_pairs" -> containmentOracleSql,
-    "q255_containment_indexed" -> containmentOracleSql,
-    "q279_containment_gate" -> containmentGateOracleSql,
-    "q280_stream_containment_gate" -> containmentGateOracleSql,
+    QuerySpec("q254_containment_pairs", q254_containment_pairs, benched = false, check = Oracle(containmentOracleSql)),
+    QuerySpec("q255_containment_indexed", q255_containment_indexed, Oracle(containmentOracleSql)),
+    QuerySpec("q279_containment_gate", q279_containment_gate, Oracle(containmentGateOracleSql)),
+    QuerySpec("q280_stream_containment_gate", q280_stream_containment_gate, Oracle(containmentGateOracleSql)),
     // q281: teacher gate (q277's C4 family) + 4 unrolled batch-perceptron
     // epochs in BIGINT + the held-out projection under the final weights
-    "q281_quality_perceptron" -> perceptronOracleSql(epochs = 4),
+    QuerySpec("q281_quality_perceptron", q281_quality_perceptron, Oracle(perceptronOracleSql(epochs = 4))),
     // q283: the streaming drain of q281's scoring projection — stateless,
     // row-identical to batch by construction, so the oracle is q281's
-    "q283_stream_quality_score" -> perceptronOracleSql(epochs = 4),
+    QuerySpec("q283_stream_quality_score", q283_stream_quality_score, Oracle(perceptronOracleSql(epochs = 4))),
     // q257: the batched distributed trainer must reproduce sequential BPE
     // verbatim — q219's 256-round unrolled oracle, reused textually
-    "q257_bpe_distributed" -> bpeOracleSql(nMerges = 256),
+    QuerySpec("q257_bpe_distributed", q257_bpe_distributed, Oracle(bpeOracleSql(nMerges = 256))),
     // q258: all 18 repetition statistics recomputed relationally, then the
     // same integer cross-multiplied thresholds
-    "q258_gopher_repetition" -> gopherRepetitionOracleSql,
+    QuerySpec("q258_gopher_repetition", q258_gopher_repetition, Oracle(gopherRepetitionOracleSql)),
     // q259: the five corpus-prep stages replayed as one SQL chain —
     // gopher_pass predicate, benchmark-gram decontamination, directed
     // containment dedup (drop contained-in-larger / equal-size min-id
     // keeper), the q246 mixture filter, the q113 packing window
-    "q259_corpus_prep" ->
+    QuerySpec("q259_corpus_prep", q259_corpus_prep, Oracle(
       """WITH g0 AS (SELECT doc_id, source, text,
              list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS toks,
              len(regexp_replace(text, '\s', '', 'g')) AS wc,
@@ -8828,15 +8565,15 @@ object SparkEntry {
          SELECT doc_id, source, doc_id % 8 AS shard, t AS n_tok,
            cast(coalesce(sum(t) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id
              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 4096 as bigint) AS bin
-         FROM kept""",
+         FROM kept""")),
     // q260/q261: unigram-LM tokenizer — seeding + 3 unrolled hard-EM
     // rounds with brute-force (all-cut-masks) Viterbi under the Q16
     // fixed-point log score; q261 re-segments under the final counts
     // and reassembles per document in word order
-    "q260_unigram_vocab" ->
+    QuerySpec("q260_unigram_vocab", q260_unigram_vocab, Oracle(
       s"""WITH ${unigramTrainCtes(maxPieceLen = 5, maxVocab = 128, rounds = 3, finalSeg = false)}
-         SELECT piece, cnt FROM vocab3""",
-    "q261_unigram_segment" ->
+         SELECT piece, cnt FROM vocab3""")),
+    QuerySpec("q261_unigram_segment", q261_unigram_segment, Oracle(
       s"""WITH ${unigramTrainCtes(maxPieceLen = 5, maxVocab = 128, rounds = 3, finalSeg = true)},
          wseg AS (SELECT w, array_to_string(pieces, '|') AS ws,
                          len(pieces)::BIGINT AS np FROM best3),
@@ -8851,11 +8588,11 @@ object SparkEntry {
                  GROUP BY d.doc_id)
          SELECT doc.doc_id, coalesce(a.np, 0)::BIGINT AS n_pieces,
                 coalesce(a.seg, '') AS seg
-         FROM documents doc LEFT JOIN agg a USING (doc_id)""",
+         FROM documents doc LEFT JOIN agg a USING (doc_id)""")),
     // q262: piece importance from the brute-force mask table — alt = max
     // score over this word's masks NOT containing the piece; prune rank
     // over multis by (importance ASC, piece ASC), singles always kept
-    "q262_unigram_prune" ->
+    QuerySpec("q262_unigram_prune", q262_unigram_prune, Oracle(
       s"""WITH ${unigramTrainCtes(maxPieceLen = 5, maxVocab = 128, rounds = 3, finalSeg = true)},
          bests AS (SELECT w, freq, score, pieces FROM (
              SELECT w, freq, score, pieces,
@@ -8882,23 +8619,23 @@ object SparkEntry {
                 FROM ranked WHERE multi)
          SELECT r.piece, r.cnt, r.loss,
                 (NOT r.multi) OR p.rk > 48 AS kept
-         FROM ranked r LEFT JOIN pr p ON p.piece = r.piece""",
+         FROM ranked r LEFT JOIN pr p ON p.piece = r.piece""")),
     // q278: soft-EM unigram — seed as q260, then 2 forward-backward
     // rounds replayed by brute-force mask enumeration with exact HUGEINT
     // path weights (Q12 lattice, Q16-floor posteriors, integer M-step)
-    "q278_unigram_softem" ->
+    QuerySpec("q278_unigram_softem", q278_unigram_softem, Oracle(
       s"""WITH ${unigramSoftCtes(maxPieceLen = 5, maxVocab = 128, rounds = 2)}
-         SELECT piece, cnt FROM svocab2""",
+         SELECT piece, cnt FROM svocab2""")),
     // q263: Kneser–Ney restated relationally — the pairs table is the
     // sufficient statistic (c1 = Σ c12, t1/r2/R = row counts over it);
     // with d = 3/4, num/den are the exact integer rational of each
     // P_KN(w2|w1) and the score is the same Q16 log recurrence q260 uses
-    "q263_kneser_ney" ->
+    QuerySpec("q263_kneser_ney", q263_kneser_ney, Oracle(
       s"""WITH $knScoreCtes
-         SELECT doc_id, n_bigrams, nlg2_q16, mean_nlg2_q16 FROM knsc""",
+         SELECT doc_id, n_bigrams, nlg2_q16, mean_nlg2_q16 FROM knsc""")),
     // q271: modified KN — count-of-count discounts D1/D2/D3 as exact
     // clamped rationals on Dden = (n1+2n2)·n2·n3, same Q16 log scoring
-    "q271_modified_kn" ->
+    QuerySpec("q271_modified_kn", q271_modified_kn, Oracle(
       s"""WITH $knBaseCtes,
          ctxm AS (SELECT w1, cast(sum(c12) as bigint) AS c1,
              cast(count(*) FILTER (c12 = 1) as bigint) AS m1,
@@ -8938,10 +8675,10 @@ object SparkEntry {
          SELECT doc_id, cast(count(*) as bigint) AS n_bigrams,
            cast(sum(t) as bigint) AS nlg2_q16,
            cast(sum(t) as bigint) // cast(count(*) as bigint) AS mean_nlg2_q16
-         FROM nl GROUP BY 1""",
+         FROM nl GROUP BY 1""")),
     // q266: the q263 scores bucketed CCNet-style — rank thirds within
     // each language, rank = (mean score, doc_id), all-integer
-    "q266_ccnet_buckets" ->
+    QuerySpec("q266_ccnet_buckets", q266_ccnet_buckets, Oracle(
       s"""WITH $knScoreCtes,
          sl AS (SELECT k.doc_id, doc.lang, k.mean_nlg2_q16,
              row_number() OVER (PARTITION BY doc.lang
@@ -8952,10 +8689,10 @@ object SparkEntry {
            CASE WHEN rn * 3 <= n THEN 'head'
                 WHEN rn * 3 <= 2 * n THEN 'middle'
                 ELSE 'tail' END AS bucket
-         FROM sl""",
+         FROM sl""")),
     // q256: each Gopher rule restated relationally (integer/rational
     // comparisons only), composite = conjunction
-    "q256_gopher_rules" ->
+    QuerySpec("q256_gopher_rules", q256_gopher_rules, Oracle(
       """WITH g AS (
            SELECT doc_id, text,
              list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS ws,
@@ -8982,16 +8719,16 @@ object SparkEntry {
            ok_bullet_lines, ok_ellipsis_lines, ok_alpha_words, ok_stopwords,
            (ok_word_count AND ok_mean_word_len AND ok_symbol_ratio AND ok_bullet_lines
             AND ok_ellipsis_lines AND ok_alpha_words AND ok_stopwords) AS gopher_pass
-         FROM f""",
+         FROM f""")),
     // q230: 3 unrolled peels of the degree-<80 drop over the symmetrized
     // co-purchase edges
-    "q230_kcore" -> kcoreOracleSql(k = 80, rounds = 3),
+    QuerySpec("q230_kcore", q230_kcore, Oracle(kcoreOracleSql(k = 80, rounds = 3))),
     // q231: 2 unrolled synchronous LPA rounds, min-label ties via the
     // (count DESC, label ASC) window
-    "q231_label_prop" -> lpaOracleSql(rounds = 2),
+    QuerySpec("q231_label_prop", q231_label_prop, Oracle(lpaOracleSql(rounds = 2))),
     // q232: q218's shard/edge chain + the q114 md5 split rule — the
     // cross-split near-dup pair set replayed exactly (id-sum digest)
-    "q232_split_leakage" ->
+    QuerySpec("q232_split_leakage", q232_split_leakage, Oracle(
       """WITH q AS (
            SELECT vec_id, list_transform(embedding,
              x -> cast(round(cast(x as double) * 1024) as bigint)) AS qv
@@ -9024,12 +8761,12 @@ object SparkEntry {
            cast(count(*) as bigint) AS n_pairs,
            cast(sum(e.id_a + e.id_b) as bigint) AS sum_ids
          FROM e JOIN sp sa ON sa.vec_id = e.id_a JOIN sp sb ON sb.vec_id = e.id_b
-         GROUP BY 1, 2""",
+         GROUP BY 1, 2""")),
     // q234: the unrolled Hilbert bit walk replayed level by level
-    "q234_hilbert_layout" -> hilbertOracleSql(bits = 10),
+    QuerySpec("q234_hilbert_layout", q234_hilbert_layout, Oracle(hilbertOracleSql(bits = 10))),
     // q235: the whole count-min sketch rebuilt — md5-affine cells, min-row
     // estimates, one-sided overcounts
-    "q235_countmin" -> {
+    QuerySpec("q235_countmin", q235_countmin, Oracle {
       val h = detHexHashSql("cast(user_id as varchar)", 7)
       val perm = (hc: String) =>
         s"((r.row * 2 + 1) * 65537 * $hc + r.row * 40503 + 7) % 268435399 % 64"
@@ -9048,10 +8785,10 @@ object SparkEntry {
                    FROM events GROUP BY 1)
          SELECT e.user_id, e.est, x.n_exact, e.est - x.n_exact AS overcount
          FROM est e JOIN exact x USING (user_id)"""
-    },
+    }),
     // q236: exact lower-median / MAD (the q119 rank rule) and the integer
     // |x − med| > 3·mad flag, replayed per group
-    "q236_mad_outliers" ->
+    QuerySpec("q236_mad_outliers", q236_mad_outliers, Oracle(
       """WITH li AS (SELECT l_returnflag AS returnflag,
              cast(cast(l_extendedprice as decimal(18,2)) * 100 as bigint) AS cents
            FROM lineitem),
@@ -9077,10 +8814,10 @@ object SparkEntry {
            cast(sum(CASE WHEN w.ad > 3 * d.mad THEN 1 ELSE 0 END) as bigint) AS n_outliers,
            cast(coalesce(sum(CASE WHEN w.ad > 3 * d.mad THEN w.cents END), 0) as bigint) AS sum_outlier_cents
          FROM wm w JOIN mad d USING (returnflag)
-         GROUP BY 1""",
+         GROUP BY 1""")),
     // q237: hashed-unigram DSIR — counts, totals and every floor-log2
     // (len(bin(x)) − 1) replayed, so the scores are hash-exact
-    "q237_dsir_scores" -> {
+    QuerySpec("q237_dsir_scores", q237_dsir_scores, Oracle {
       val h = detHexHashSql("w", 7)
       s"""WITH tk AS (
            SELECT doc_id, lang = 'en' AS t, ($h) % 256 AS b
@@ -9098,9 +8835,9 @@ object SparkEntry {
            cast(sum((len(bin(c.tb * tot.rr)) - 1) - (len(bin(c.rb * tot.tt)) - 1)) as bigint) AS score
          FROM tk JOIN counts c USING (b) CROSS JOIN tot
          GROUP BY 1"""
-    },
+    }),
     // q238: per-doc HRW argmax replayed as a (md5 DESC, w DESC) window
-    "q238_rendezvous_shard" ->
+    QuerySpec("q238_rendezvous_shard", q238_rendezvous_shard, Oracle(
       """WITH a AS (
            SELECT doc_id, w,
              row_number() OVER (PARTITION BY doc_id
@@ -9109,12 +8846,12 @@ object SparkEntry {
            FROM documents CROSS JOIN (SELECT unnest(range(0, 8)) AS w))
          SELECT cast(w as bigint) AS owner, cast(count(*) as bigint) AS n_docs,
            cast(sum(doc_id) as bigint) AS sum_ids
-         FROM a WHERE rn = 1 GROUP BY 1""",
+         FROM a WHERE rn = 1 GROUP BY 1""")),
     // q239: 3 unrolled frontier expansions — per-vertex integer hop minima
-    "q239_bfs_layers" -> bfsOracleSql(rounds = 3),
+    QuerySpec("q239_bfs_layers", q239_bfs_layers, Oracle(bfsOracleSql(rounds = 3))),
     // q240: n²·cov / n²·var integer rational per segment — centered days ×
     // price-in-thousands keeps every product in int64
-    "q240_trend_ols" ->
+    QuerySpec("q240_trend_ols", q240_trend_ols, Oracle(
       """WITH t AS (
            SELECT c.c_mktsegment AS segment,
              cast(date_diff('day', DATE '1970-01-01', o.o_orderdate) - 9300 as bigint) AS x,
@@ -9123,10 +8860,10 @@ object SparkEntry {
          SELECT segment, cast(count(*) as bigint) AS n,
            cast(count(*) * sum(x * y) - sum(x) * sum(y) as bigint) AS slope_num,
            cast(count(*) * sum(x * x) - sum(x) * sum(x) as bigint) AS slope_den
-         FROM t GROUP BY 1""",
+         FROM t GROUP BY 1""")),
     // q241: prefix-sum CUSUM per user — max|n·S_i − i·S_n| and the
     // earliest argmax index, explicit ROWS frame
-    "q241_cusum" ->
+    QuerySpec("q241_cusum", q241_cusum, Oracle(
       """WITH t AS (
            SELECT user_id,
              row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS i,
@@ -9143,9 +8880,9 @@ object SparkEntry {
                FROM t)
          SELECT user_id, cast(n as bigint) AS n, cast(t_i as bigint) AS cusum_stat,
            cast(i as bigint) AS cusum_at
-         FROM d WHERE rn = 1""",
+         FROM d WHERE rn = 1""")),
     // q233: per-dim integer mean-shift numerators between label-0 and rest
-    "q233_drift_shift" ->
+    QuerySpec("q233_drift_shift", q233_drift_shift, Oracle(
       """WITH qz AS (SELECT label, list_transform(embedding,
              x -> cast(round(cast(x as double) * 1024) as bigint)) AS qv
            FROM embeddings),
@@ -9158,11 +8895,11 @@ object SparkEntry {
                 - sum(CASE WHEN qz.label = 0 THEN 1 ELSE 0 END)
                   * sum(CASE WHEN qz.label = 0 THEN 0 ELSE qz.qv[d.d + 1] END) as bigint) AS shift_num
          FROM qz CROSS JOIN dims d
-         GROUP BY 1""",
+         GROUP BY 1""")),
     // q218: shard assignment, within-shard integer cosine-threshold edges
     // (dot > 0 ∧ dot²·400 ≥ |a|²·|b|²·81 ⟺ cos ≥ 0.45), recursive-CTE
     // connected components, min-id representative per duplicate group
-    "q218_semdedup" ->
+    QuerySpec("q218_semdedup", q218_semdedup, Oracle(
       """WITH RECURSIVE q AS (
            SELECT vec_id, list_transform(embedding,
              x -> cast(round(cast(x as double) * 1024) as bigint)) AS qv
@@ -9195,10 +8932,10 @@ object SparkEntry {
            cast(sum(CASE WHEN l.lab = a.vec_id THEN 1 ELSE 0 END) as bigint) AS n_kept,
            cast(sum(CASE WHEN l.lab = a.vec_id THEN a.vec_id END) as bigint) AS sum_kept
          FROM a JOIN lab l ON a.vec_id = l.id
-         GROUP BY 1""",
+         GROUP BY 1""")),
     // q214: q210's proven round(x*1024) quantization; exact integer
     // distances; ties to the smaller centroid id
-    "q214_centroid_shard" ->
+    QuerySpec("q214_centroid_shard", q214_centroid_shard, Oracle(
       """WITH q AS (
            SELECT vec_id, list_transform(embedding,
              x -> cast(round(cast(x as double) * 1024) as bigint)) AS qv
@@ -9216,11 +8953,11 @@ object SparkEntry {
          SELECT centroid_id, cast(count(*) as bigint) AS n_vecs,
            cast(sum(sqd) as bigint) AS sum_sqdist,
            min(vec_id) AS min_vec, max(vec_id) AS max_vec
-         FROM a WHERE rn = 1 GROUP BY 1""",
+         FROM a WHERE rn = 1 GROUP BY 1""")),
     // q276: the strip replayed from the DEFINITION on materialized
     // 8-token slices - full windows only, first occurrence by (doc, wi),
     // positional coverage union, order-preserving rebuild, md5 pin
-    "q276_exactsubstr_strip" ->
+    QuerySpec("q276_exactsubstr_strip", q276_exactsubstr_strip, Oracle(
       """WITH d AS (SELECT doc_id,
              list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS l
            FROM documents),
@@ -9243,12 +8980,12 @@ object SparkEntry {
          SELECT d.doc_id, cast(len(d.l) as bigint) AS n_tokens,
            cast(coalesce(o.n_kept, 0) as bigint) AS n_kept,
            md5(coalesce(o.clean_text, '')) AS clean_md5
-         FROM d LEFT JOIN o ON d.doc_id = o.doc_id""",
+         FROM d LEFT JOIN o ON d.doc_id = o.doc_id""")),
     // q282: the cross-corpus strip from the DEFINITION — train (odd)
     // windows whose 8-token slice occurs among the bench (even) side's
     // full windows are removed wholesale (no first-kept), positional
     // coverage union, order-preserving rebuild of the train half only
-    "q282_decontaminate_strip" ->
+    QuerySpec("q282_decontaminate_strip", q282_decontaminate_strip, Oracle(
       """WITH d AS (SELECT doc_id,
              list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS l
            FROM documents),
@@ -9272,14 +9009,14 @@ object SparkEntry {
            cast(coalesce(o.n_kept, 0) as bigint) AS n_kept,
            md5(coalesce(o.clean_text, '')) AS clean_md5
          FROM d LEFT JOIN o ON d.doc_id = o.doc_id
-         WHERE d.doc_id % 2 = 1""",
+         WHERE d.doc_id % 2 = 1""")),
     // q275: the near-dup fixture's dHash restated relationally (base bit =
     // bit r·8+c of k·2654435761, variant v flips (r, (k+r) mod 8) for
     // r < v) and the clusters by construction (class = doc mod 41; within
     // ≤3 Hamming, cross ≥8, threshold 3 → clusters ARE the classes). The
     // engine only matches by decoding three container formats, computing
     // the gray block-mean grid, deriving dHash, and banding correctly.
-    "q275_image_neardup" ->
+    QuerySpec("q275_image_neardup", q275_image_neardup, Oracle(
       """WITH g AS (
            SELECT doc_id, doc_id % 41 AS k, (doc_id // 41) % 4 AS v FROM documents
          ),
@@ -9305,7 +9042,7 @@ object SparkEntry {
            FROM documents
          )
          SELECT h.doc_id, dhash_hi, dhash_lo, cluster_id, cluster_size
-         FROM h JOIN cl ON h.doc_id = cl.doc_id""",
+         FROM h JOIN cl ON h.doc_id = cl.doc_id""")),
 
     // q284: the crop/rescale fixture re-derived relationally — inverse-DCT
     // cells from the closed form, the crop re-grid as positional means,
@@ -9315,7 +9052,7 @@ object SparkEntry {
     // the classes). The engine only matches by decoding two container
     // formats at three raster sizes, block-meaning 32×32, running the
     // integer DCT, and banding correctly.
-    "q284_image_phash_neardup" -> q284OracleSql,
+    QuerySpec("q284_image_phash_neardup", q284_image_phash_neardup, Oracle(q284OracleSql)),
 
     // q285: the clip fixture restated relationally — first-extracted-frame
     // fingerprint from the injective closed form ((k·6+f₀+1)·2654435761,
@@ -9324,7 +9061,7 @@ object SparkEntry {
     // of 6; threshold 4 ⇒ clusters ARE the classes). The engine only
     // matches by decoding GIF AND H.264 rasters, hashing every frame,
     // and counting shared fingerprints over distinct signatures.
-    "q285_video_neardup" ->
+    QuerySpec("q285_video_neardup", q285_video_neardup, Oracle(
       """WITH dv AS (
            SELECT doc_id, doc_id % 41 AS k, (doc_id // 41) % 3 AS v FROM documents
          ),
@@ -9344,7 +9081,7 @@ object SparkEntry {
            cast(fh >> 32 as bigint) AS f0hash_hi,
            cast(fh & 4294967295 as bigint) AS f0hash_lo,
            cl.cluster_id, cl.cluster_size
-         FROM f JOIN cl ON f.doc_id = cl.doc_id""",
+         FROM f JOIN cl ON f.doc_id = cl.doc_id""")),
 
     // q286: the audio fixture restated relationally — band bits from the
     // xor-folded multiplicative hash, fingerprint bits as amp² comparisons
@@ -9352,10 +9089,10 @@ object SparkEntry {
     // signs), format code by variant, clusters by class. The engine only
     // matches by decoding PCM16 AND μ-law WAVs, windowing, running the
     // integer band transform, and comparing real energies.
-    "q286_audio_neardup" -> audioNeardupOracleSql,
+    QuerySpec("q286_audio_neardup", q286_audio_neardup, Oracle(audioNeardupOracleSql)),
     // streaming drain of q286's fingerprint+lookup — stateless,
     // AvailableNow: row-identical to the batch query, oracle shared
-    "q291_stream_audio_gate" -> audioNeardupOracleSql,
+    QuerySpec("q291_stream_audio_gate", q291_stream_audio_gate, Oracle(audioNeardupOracleSql)),
   )
 
   private def audioNeardupOracleSql: String =

@@ -131,7 +131,6 @@ class Runner(
     spark: SparkSession,
     wh: Warehouse,
     retries: Int = 2,                               // idr_load.py:55
-    retryDelayMs: Long = 0,                         // 3 min in the reference; 0 for tests
     onFailure: StageFailure => Unit = _ => (),      // O4 Mattermost-webhook analog
     onMetrics: StageMetrics => Unit = _ => ()) {    // S5 rows/cols report analog
 
@@ -189,7 +188,6 @@ class Runner(
               onFailure(StageFailure(pipeline, st.name, e))
               throw e
             }
-            if (retryDelayMs > 0) Thread.sleep(retryDelayMs)
         }
       }
     } finally sc.setJobDescription(description)

@@ -23,21 +23,36 @@ class EntrySpec extends SparkSpec {
     assert(empties.isEmpty, s"queries with zero rows: $empties")
   }
 
-  test("every oracle key has a matching query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracles without queries: $missing")
+  test("the may-be-empty allowlist only names real queries (no stale entries)") {
+    val stale = mayBeEmptyAtTinySf -- SparkEntry.queries.keySet
+    assert(stale.isEmpty, s"stale allowlist entries: $stale")
   }
 
-  // approximate/sketch/stub operators whose values are engine-specific by
-  // nature; each maps to the oracle-checked exact twin / spec pinning it
-  // (single source of truth in SparkEntry, published by Verify)
-  private val rowsOnlyByDesign = SparkEntry.rowsOnlyByDesign.keySet
+  // the O(n²) correctness baselines and oracle-bridge forms the bench skips
+  private val unbenched = Set("q35_jaccard_pairs", "q41_embed_neardup",
+    "q137_semantic_dedup", "q140_record_linkage", "q153_label_agreement",
+    "q212_minhash_det", "q213_simhash_det", "q254_containment_pairs")
 
-  test("every query has an oracle unless it is rows-only by design") {
-    val unoracled = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- rowsOnlyByDesign
-    assert(unoracled.isEmpty,
-      s"queries missing an oracle (add SQL or justify rows-only): $unoracled")
-    val stale = rowsOnlyByDesign -- SparkEntry.queries.keySet
-    assert(stale.isEmpty, s"rows-only allowlist entries with no query: $stale")
+  test("the catalog declares 292 queries: 287 oracled, 5 rows-only, 284 benched") {
+    val names = SparkEntry.queries.keySet
+    assert(names.size == 292)
+    assert(SparkEntry.oracleSql.size == 287)
+    assert(SparkEntry.rowsOnlyByDesign.keySet == Set("q36_minhash_lsh",
+      "q37_simhash_neardup", "q39_ann_lsh", "q43_ann_ivf", "q199_ann_ivfpq"))
+    assert(SparkEntry.oracleSql.keySet ++ SparkEntry.rowsOnlyByDesign.keySet == names)
+    assert(unbenched.subsetOf(names))
+    assert(SparkEntry.headlineQueries == (names -- unbenched).toSeq.sorted)
+  }
+
+  test("the catalog derivation rejects two entries with one name") {
+    import SparkEntry.{QuerySpec, RowsOnly, Oracle}
+    val build = SparkEntry.queries("q01_scan_project")
+    val specs = Seq(
+      QuerySpec("q_a", build, Oracle("SELECT 1")),
+      QuerySpec("q_b", build, RowsOnly("b")),
+      QuerySpec("q_a", build, RowsOnly("a again")))
+    val e = intercept[IllegalArgumentException](SparkEntry.byName(specs))
+    assert(e.getMessage.contains("q_a") && !e.getMessage.contains("q_b"))
+    assert(SparkEntry.byName(specs.take(2)).keySet == Set("q_a", "q_b"))
   }
 }
