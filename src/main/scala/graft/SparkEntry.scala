@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.ops.RelOps
+import graft.ops.{RelOps, Replay}
 import graft.text.TextOps
 import graft.dedup.Dedup
 import graft.sim.Similarity
@@ -2259,7 +2259,7 @@ object SparkEntry {
     */
   private def pagerankCore(s: SparkSession, dir: String, dangling: Boolean): DataFrame = {
     val li = Tables.lineitem(s, dir); val o = Tables.orders(s, dir)
-    // lazy localCheckpoints: edges is referenced by deg/nodes/both steps
+    // lazy checkpoints: edges is referenced by deg/nodes/both steps
     // (and nodes by every step's left join) — without the cut the
     // li ⋈ orders + distinct subtree re-executes per reference, and the
     // dangling step references the previous rank twice (contrib + sink
@@ -2268,10 +2268,10 @@ object SparkEntry {
       .select((col("o_custkey").cast("long") * 2).as("src"),
         (col("l_suppkey").cast("long") * 2 + 1).as("dst"))
       .distinct()
-      .localCheckpoint(false)
+      .transform(Replay.stable(_))
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(false)
+      .transform(Replay.stable(_))
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val nNodes = nodes.agg(count(lit(1)).as("n_nodes"))
     def step(rank: DataFrame): DataFrame = {
@@ -2292,7 +2292,7 @@ object SparkEntry {
       }
     }
     val r0 = nodes.select(col("node"), lit(1000000L).as("r"))
-    step(step(r0).localCheckpoint(false)).select(
+    step(Replay.loopStable(step(r0))).select(
       when(col("node") % 2 === 0, concat(lit("c"), expr("node div 2")))
         .otherwise(concat(lit("s"), expr("(node - 1) div 2"))).as("node"),
       col("r").as("rank_ppm"))
@@ -4424,26 +4424,25 @@ object SparkEntry {
     * cardinalities at sf0.01: 500 → 234 → 208 → 201 → 12 packed rows,
     * every stage live. */
   private def q259_corpus_prep(s: SparkSession, dir: String): DataFrame =
-    corpusPrepStages(s, dir, checkpointDedupBoundary = true).packed
+    corpusPrepStages(s, dir).packed
 
   /** q259's stages, exposed so PlanSpec can assert the fused shape of the
-    * PRE-boundary fragment (the localCheckpoint at the dedup boundary
-    * hides its upstream from the final physical plan by design). */
+    * PRE-boundary fragment (the checkpoint at the dedup boundary hides its
+    * upstream from the final physical plan by design; PlanSpec plans
+    * them under `spark.graft.replay.mode=none`). */
   private[graft] case class CorpusPrepStages(
       quality: DataFrame, decon: DataFrame, packed: DataFrame)
-  private[graft] def corpusPrepStages(s: SparkSession, dir: String,
-      checkpointDedupBoundary: Boolean): CorpusPrepStages = {
+  private[graft] def corpusPrepStages(s: SparkSession, dir: String): CorpusPrepStages = {
     import org.apache.spark.sql.expressions.Window
     val docs = par(s, Tables.documents(s, dir))
-    val qualityRaw = TextOps.gopherFlags(docs, "text", stopWords = Seq("the", "a"))
-      .filter(col("gopher_pass"))
-      .select("doc_id", "source", "text")
     // quality survivors feed BOTH the gram explode and the decon join —
     // materialize once (same rationale as the dedup boundary below); the
     // conjunction re-evaluates every gopher rule's tokenization per
     // consumer otherwise
-    val quality =
-      if (checkpointDedupBoundary) qualityRaw.localCheckpoint(eager = false) else qualityRaw
+    val quality = Replay.stable(
+      TextOps.gopherFlags(docs, "text", stopWords = Seq("the", "a"))
+        .filter(col("gopher_pass"))
+        .select("doc_id", "source", "text"))
     val benchGrams = docs.filter(col("doc_id") % 10 === 0)
       .select(explode(Dedup.shingleSet(col("text"), 5)).as("gram"))
       .distinct()
@@ -4462,9 +4461,7 @@ object SparkEntry {
     // 100 TB it is the filtered corpus (already a fraction of the input)
     // landing on the shuffle tier once, which a multi-consumer exchange
     // would do anyway.
-    val deconRaw = quality.join(cleanIds, "doc_id")
-    val decon =
-      if (checkpointDedupBoundary) deconRaw.localCheckpoint(eager = false) else deconRaw
+    val decon = Replay.stable(quality.join(cleanIds, "doc_id"))
     val sizes = decon.select(col("doc_id"), size(Dedup.shingleSet(col("text"), 3)).cast("long").as("n"))
     val dropIds = Dedup.containmentPairsIndexed(decon, "doc_id", "text", thresh10 = 8)
       .join(sizes.select(col("doc_id").as("id_b"), col("n").as("n_b")), "id_b")
@@ -4483,7 +4480,7 @@ object SparkEntry {
       .withColumn("toks_before", coalesce(sum(col("n_tok")).over(w), lit(0L)))
       .select(col("doc_id"), col("source"), col("shard"), col("n_tok"),
         expr("toks_before div 4096").as("bin"))
-    CorpusPrepStages(qualityRaw, deconRaw, packed)
+    CorpusPrepStages(quality, decon, packed)
   }
 
   /** The part co-purchase edge list (parts sharing an order), the shared
@@ -4726,7 +4723,7 @@ object SparkEntry {
     * oracle-proven (q268/q263/q266/q267); the chain's oracle re-assembles
     * their CTE families with disjoint names, so the COMPOSITION —
     * filter-order, pool definitions, join keys — is what this query's
-    * hash pins. `kept` is localCheckpointed: it feeds both the survivor
+    * hash pins. `kept` is checkpointed: it feeds both the survivor
     * semi-join and the final join (the replay rule). */
   /** Shared q272/q277 head — the kept-set derivation. The c4 gate and the
     * KN train chain are INDEPENDENT until the `kept` join, and they load
@@ -4751,7 +4748,7 @@ object SparkEntry {
         // holds two columns; the filter runs above the boundary.
         val c4 = TextOps.c4Flags(c4PageFixture(docs), "page")
           .select(col("doc_id"), col("c4_pass"))
-          .localCheckpoint(false)
+          .transform(Replay.stable(_))
         c4.count()
         c4.filter(col("c4_pass")).select("doc_id")
       },
@@ -4773,7 +4770,7 @@ object SparkEntry {
       .withColumn("n", count(lit(1)).over(Window.partitionBy("lang")))
       .filter(col("rn") * 3 <= col("n") * 2)
       .select("doc_id", "lang", "source")
-      .localCheckpoint(false)
+      .transform(Replay.stable(_))
   }
 
   private def q272_fineweb_prep(s: SparkSession, dir: String): DataFrame = {
@@ -4816,10 +4813,10 @@ object SparkEntry {
     // map-back join) — checkpoint HERE so the image decode+hash scan runs
     // once; distinctH is checkpointed too since it feeds three branches.
     val hashes = Multimodal.perceptualHashes(media)
-      .select(col("media_id"), col("dhash")).localCheckpoint(false)
+      .select(col("media_id"), col("dhash")).transform(Replay.stable(_))
     val distinctH = hashes.groupBy("dhash")
       .agg(min("media_id").as("rep"), count(lit(1)).as("cnt"))
-      .localCheckpoint(false)
+      .transform(Replay.stable(_))
     val bands = distinctH.select(col("dhash"), explode(expr(
       "transform(sequence(0, 3), b -> struct(b AS band, shiftrightunsigned(dhash, b*16) & 65535 AS bv))")).as("bb"))
       .select(col("dhash"), col("bb.band").as("band"), col("bb.bv").as("bv"))
@@ -4865,7 +4862,7 @@ object SparkEntry {
     // hashes feeds the distinct-hash groupBy AND the final map-back join:
     // checkpoint so decode+DCT runs once (the q275 advisor lesson)
     val hashes = Multimodal.spectralHashes(media)
-      .select(col("media_id"), col("phash")).localCheckpoint(false)
+      .select(col("media_id"), col("phash")).transform(Replay.stable(_))
     hashes.join(phashClusters(hashes), col("phash") === col("ha"))
       .select(col("media_id").as("doc_id"),
         expr("shiftrightunsigned(phash, 32)").as("phash_hi"),
@@ -4873,13 +4870,17 @@ object SparkEntry {
         col("cluster_id"), col("cluster_size"))
   }
 
-  /** The q284/q290 cluster index: banded Hamming (4×16-bit bands,
-    * threshold 3), one-hop min-rep over the DISTINCT-hash table of
-    * `hashes` (media_id, phash). Returns (ha, cluster_id, cluster_size). */
-  private def phashClusters(hashes: DataFrame): DataFrame = {
+  /** The q284/q286/q290/q291 cluster index: banded Hamming (4×16-bit
+    * bands, threshold 3), one-hop min-rep over the DISTINCT-hash table of
+    * `hashes` (media_id, phash). Returns (ha, cluster_id, cluster_size).
+    * NOT transitive: a hash takes the min rep among itself and its direct
+    * neighbours only, so for a~b~c with a≁c, c takes b's rep, not a's.
+    * Exact for the fixtures, whose near-dup classes are cliques at the
+    * threshold; chains need Clusters.connectedComponents. */
+  private[graft] def phashClusters(hashes: DataFrame): DataFrame = {
     val distinctH = hashes.groupBy("phash")
       .agg(min("media_id").as("rep"), count(lit(1)).as("cnt"))
-      .localCheckpoint(false)
+      .transform(Replay.stable(_))
     val bands = distinctH.select(col("phash"), explode(expr(
       "transform(sequence(0, 3), b -> struct(b AS band, shiftrightunsigned(phash, b*16) & 65535 AS bv))")).as("bb"))
       .select(col("phash"), col("bb.band").as("band"), col("bb.bv").as("bv"))
@@ -4923,8 +4924,8 @@ object SparkEntry {
     import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
     val fixture = imageStreamFixture(s, dir)
     val batchHashes = Multimodal.spectralHashes(s.read.parquet(fixture))
-      .select(col("media_id"), col("phash")).localCheckpoint(false)
-    val clusters = phashClusters(batchHashes).localCheckpoint(false)
+      .select(col("media_id"), col("phash")).transform(Replay.stable(_))
+    val clusters = phashClusters(batchHashes).transform(Replay.stable(_))
     val schema = StructType(Seq(
       StructField("media_id", LongType), StructField("bytes", BinaryType)))
     val name = s"q290_ig_${java.util.UUID.randomUUID().toString.replace("-", "")}"
@@ -4964,12 +4965,12 @@ object SparkEntry {
     import graft.multimodal.Multimodal
     val media = cachedFixture(s, s"clips:$dir",
       Multimodal.syntheticNearDupClips(par(s, Tables.documents(s, dir)), "doc_id"))
-    val fh = Multimodal.videoFrameHashes(media).localCheckpoint(false)
+    val fh = Multimodal.videoFrameHashes(media).transform(Replay.stable(_))
     val sigs = fh.select(col("media_id"), col("fhash")).distinct()
       .groupBy("media_id").agg(sort_array(collect_set(col("fhash"))).as("sig"))
     val distinctSig = sigs.groupBy("sig")
       .agg(min("media_id").as("rep"), count(lit(1)).as("cnt"))
-      .localCheckpoint(false)
+      .transform(Replay.stable(_))
     val sfp = distinctSig.select(col("rep"), explode(col("sig")).as("fhash"))
     val edges = sfp.select(col("rep").as("ra"), col("fhash"))
       .join(sfp.select(col("rep").as("rb"), col("fhash")), "fhash")
@@ -5016,7 +5017,7 @@ object SparkEntry {
     val media = cachedFixture(s, s"audio_nd:$dir",
       Multimodal.syntheticNearDupAudio(par(s, Tables.documents(s, dir)), "doc_id"))
     val fps = Multimodal.audioFingerprints(media)
-      .select(col("media_id"), col("fmt"), col("afp")).localCheckpoint(false)
+      .select(col("media_id"), col("fmt"), col("afp")).transform(Replay.stable(_))
     val clusters = phashClusters(fps.select(col("media_id"), col("afp").as("phash")))
     fps.join(clusters, fps("afp") === clusters("ha"))
       .select(col("media_id").as("doc_id"), col("fmt"),
@@ -5046,9 +5047,9 @@ object SparkEntry {
     import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
     val fixture = audioStreamFixture(s, dir)
     val batch = Multimodal.audioFingerprints(s.read.parquet(fixture))
-      .select(col("media_id"), col("afp")).localCheckpoint(false)
+      .select(col("media_id"), col("afp")).transform(Replay.stable(_))
     val clusters = phashClusters(batch.select(col("media_id"), col("afp").as("phash")))
-      .localCheckpoint(false)
+      .transform(Replay.stable(_))
     val schema = StructType(Seq(
       StructField("media_id", LongType), StructField("bytes", BinaryType)))
     val name = s"q291_ag_${java.util.UUID.randomUUID().toString.replace("-", "")}"
@@ -5281,7 +5282,7 @@ object SparkEntry {
     val trainSet = feats.filter(col("doc_id") % 2 === 0)
       .join(teacher, "doc_id")
       .withColumn("y", when(col("c4_pass"), lit(1L)).otherwise(lit(-1L)))
-      .localCheckpoint(false)
+      .transform(Replay.stable(_))
     val w = graft.sim.Perceptron.train(trainSet, "y", featCols, epochs = 4)
     feats.filter(col("doc_id") % 2 === 1)
       .select(col("doc_id"), graft.sim.Perceptron.dot(featCols, w.toSeq).as("score"))
@@ -5306,7 +5307,7 @@ object SparkEntry {
     val trainSet = feats.filter(col("doc_id") % 2 === 0)
       .join(teacher, "doc_id")
       .withColumn("y", when(col("c4_pass"), lit(1L)).otherwise(lit(-1L)))
-      .localCheckpoint(false)
+      .transform(Replay.stable(_))
     val w = graft.sim.Perceptron.train(trainSet, "y", featCols, epochs = 4)
     val fixture = docsStreamFixture(s, dir, files = 8)
     val schema = StructType(Seq(
@@ -5364,7 +5365,7 @@ object SparkEntry {
     val trainSet = feats.filter(col("doc_id") % 2 === 0)
       .join(teacher, "doc_id")
       .withColumn("y", when(col("c4_pass"), lit(1L)).otherwise(lit(-1L)))
-      .localCheckpoint(true)
+      .transform(Replay.stable(_, eager = true))
       .coalesce(4)
     val w = graft.sim.Perceptron.train(trainSet, "y", featCols, epochs = 4)
     val dotCol = graft.sim.Perceptron.dot(featCols, w.toSeq).cast("long")
@@ -5407,7 +5408,7 @@ object SparkEntry {
     // re-running the page fixture + c4 battery over the corpus a second time
     val teacher = TextOps.c4Flags(c4PageFixture(docs), "page")
       .select(col("doc_id"), col("c4_pass"))
-      .localCheckpoint(false)
+      .transform(Replay.stable(_))
     calibratedScores(s, docs, teacher)
       .join(teacher, "doc_id")
       .groupBy("calib_q16")

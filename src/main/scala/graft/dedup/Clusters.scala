@@ -41,38 +41,21 @@ object Clusters {
     *    join and the min-aggregation, so AQE reuses one exchange layout;
     *  - checkpointing after each round truncates the lineage — without it
     *    round k replays rounds 1..k-1 and the job goes quadratic;
-    *  - DURABILITY: with `checkpointDir` set, rounds checkpoint to RELIABLE
-    *    storage (`Dataset.checkpoint`) — an executor lost mid-iteration
-    *    recomputes its partitions from the checkpoint files, so the job
-    *    survives node loss, which a 1000-executor×hours run must assume.
-    *    Unset (local mode / tests), it falls back to `localCheckpoint`:
-    *    faster (no DFS write), but executor-local blocks die with the
-    *    executor — never run a production CC without a checkpoint dir;
+    *  - DURABILITY: each round cuts lineage through `Replay.loopStable`;
+    *    run production CC under `spark.graft.replay.mode=reliable`;
     *  - the edge set is symmetrized once and cached: it is reused every
     *    round and never grows;
-    *  - convergence is detected with a `limit(1)` existence probe on changed
-    *    labels, not a full count — the probe short-circuits.
+    *  - convergence rides inside the round: a `__changed` flag, read by the
+    *    one aggregate that also materializes the round's checkpoint.
     *
     * @param vertices      one row per vertex (extra columns ignored)
     * @param edges         undirected pair list (extra columns ignored)
-    * @param checkpointDir reliable checkpoint location (HDFS/object store);
-    *                      None = executor-local lineage truncation only
     * @return (`idCol`, cluster_id) — cluster_id = min vertex id reachable
     */
   def connectedComponents(vertices: DataFrame, idCol: String,
                           edges: DataFrame, srcCol: String, dstCol: String,
                           maxIters: Int = 25,
-                          checkpointDir: Option[String] = None,
                           driverCollectMax: Long = 1L << 20): DataFrame = {
-    val sc = vertices.sparkSession.sparkContext
-    // setCheckpointDir stores dir/<random-UUID>, so equality against the
-    // requested root can never hold — compare by prefix or every call would
-    // mint (and abandon) a fresh checkpoint subdirectory (r4 advisor).
-    checkpointDir.foreach { dir =>
-      if (!sc.getCheckpointDir.exists(_.startsWith(dir))) sc.setCheckpointDir(dir)
-    }
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
     // ONE pass emitting both orientations (explode, not union-of-selects —
     // the latter evaluated the caller's pair-producer twice), persisted
     // PARTITIONED BY dst: the per-round neighbor join keys sym on dst, so
@@ -96,10 +79,9 @@ object Clusters {
     // work). The edge producer is still evaluated EXACTLY ONCE — the probe
     // counts the already-cached symmetrized table, which the distributed
     // loop's first round would have materialized anyway. Corpus-scale
-    // graphs (count above the gate, or string ids, or a reliable
-    // checkpoint dir for durability) take the loop unchanged; pass
-    // driverCollectMax = 0 to force it.
-    if (checkpointDir.isEmpty && driverCollectMax > 0 &&
+    // graphs (count above the gate, or string ids) take the loop
+    // unchanged; pass driverCollectMax = 0 to force it.
+    if (driverCollectMax > 0 &&
         isIntegral(vertices.schema(idCol).dataType) &&
         isIntegral(edges.schema(srcCol).dataType) &&
         isIntegral(edges.schema(dstCol).dataType)) {
@@ -119,12 +101,11 @@ object Clusters {
     var labels = vertices.select(col(idCol).as("id"), col(idCol).as("cluster_id"))
     var iter = 0
     var converged = false
-    // local path: the superseded round's locally-checkpointed RDD — freed as
-    // soon as the NEXT round has materialized (r13 advisor: without this the
-    // block manager holds O(rounds × |labels|) generations across up to 25
-    // rounds). The final round's blocks are never unpersisted: the caller
-    // consumes them.
-    var prevLocalRdd: Option[org.apache.spark.rdd.RDD[_]] = None
+    // the superseded round's checkpointed RDD — freed as soon as the NEXT
+    // round has materialized (r13 advisor: without this the block manager
+    // holds O(rounds × |labels|) generations across up to 25 rounds). The
+    // final round's blocks are never unpersisted: the caller consumes them.
+    var prevRdd: Option[org.apache.spark.rdd.RDD[_]] = None
     def checkpointedRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
       df.queryExecution.logical.collect {
         case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
@@ -153,31 +134,22 @@ object Clusters {
         .join(labels.select(col("id"), col("cluster_id").as("old_cid")), "id")
         .select(col("id"), col("new_cid").as("cluster_id"),
           (col("new_cid") =!= col("old_cid")).as("__changed"))
-      if (checkpointDir.isDefined) {
-        // reliable path: full checkpoint job, then a shuffle-free probe
-        // over the checkpointed rows (durability requires the write-out)
-        val next = truncate(roundPlan)
-        converged = next.filter(col("__changed")).limit(1).count() == 0L
-        labels = next.select("id", "cluster_id")
-      } else {
-        // local path (r13): ONE job per round instead of two — a LAZY local
-        // checkpoint truncates the logical plan immediately (each round
-        // references `labels` three times, so without truncation the plan
-        // TREE grows 3^rounds and analysis itself OOMs on chain graphs),
-        // and the convergence AGGREGATE is the materializing action (a
-        // full scan, so every partition checkpoints — a limit-probe would
-        // short-circuit and leave partitions uncomputed).
-        val next = roundPlan.localCheckpoint(false)
-        val anyChanged = next.agg(coalesce(max(col("__changed")), lit(false)))
-          .head().getBoolean(0)
-        // this round is fully materialized (the aggregate scans every
-        // partition) and local checkpoints are self-contained — the
-        // previous round's blocks can never be needed again
-        prevLocalRdd.foreach(_.unpersist(false))
-        prevLocalRdd = checkpointedRdd(next)
-        converged = !anyChanged
-        labels = next.select("id", "cluster_id")
-      }
+      // ONE job per round (r13): the LAZY checkpoint truncates the logical
+      // plan immediately (each round references `labels` three times, so
+      // without truncation the plan TREE grows 3^rounds and analysis itself
+      // OOMs on chain graphs), and the convergence AGGREGATE is the
+      // materializing action (a full scan, so every partition checkpoints —
+      // a limit-probe would short-circuit and leave partitions uncomputed).
+      val next = graft.ops.Replay.loopStable(roundPlan)
+      val anyChanged = next.agg(coalesce(max(col("__changed")), lit(false)))
+        .head().getBoolean(0)
+      // this round is fully materialized (the aggregate scans every
+      // partition) and checkpoints are self-contained — the previous
+      // round's blocks can never be needed again
+      prevRdd.foreach(_.unpersist(false))
+      prevRdd = checkpointedRdd(next)
+      converged = !anyChanged
+      labels = next.select("id", "cluster_id")
       iter += 1
     }
     sym.unpersist()

@@ -166,7 +166,7 @@ object Dedup {
     // five at any scale (guide §1.2 "don't compute things you throw away").
     val sets = docs.select(col(idCol).as("id"), shingleSet(col(textCol), shingleN).as("sh"))
       .withColumn("n", size(col("sh")).cast("long")).filter(col("n") > 0)
-      .transform(graft.ops.Replay.stable)
+      .transform(graft.ops.Replay.stable(_))
     val occ = sets.select(col("id"), col("n"), explode(col("sh")).as("g"))
     val df = occ.groupBy("g").agg(count(lit(1)).as("df"))
     // A-side probe prefix, GENERALIZED pigeonhole (slack t = prefixSlack):
@@ -293,7 +293,7 @@ object Dedup {
       .withColumn("n", size(col("sh")).cast("long"))
       .withColumn("plen",
         (col("n") - floor((col("n") * thresh10 + lit(9)) / 10).cast("long") + 1))
-      .transform(graft.ops.Replay.stable)
+      .transform(graft.ops.Replay.stable(_))
     // `sh` itself stays VALUE-sorted for the O(n+m) merge-scan verifier.
     val prefixes =
       if (!dfOrderedPrefixes)

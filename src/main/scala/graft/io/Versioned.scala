@@ -412,9 +412,9 @@ class Versioned(val spark: SparkSession, val root: String,
     * same contract as any changelog consumer. Single consumer per
     * checkpoint dir (the marker is last-writer-wins by design).
     * Returns the number of versions processed. */
-  def drainDeltas(table: String, checkpointDir: String)
+  def drainDeltas(table: String, progressDir: String)
                  (process: (DataFrame, Long) => Unit): Int = {
-    val dir = new Path(checkpointDir)
+    val dir = new Path(progressDir)
     val marker = new Path(dir, "progress")
     val f = fs(dir)
     f.mkdirs(dir)

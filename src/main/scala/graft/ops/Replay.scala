@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
@@ -15,8 +16,7 @@ import org.apache.spark.storage.StorageLevel
   * real cluster an executor loss or a dynamic-allocation scale-down makes
   * the query FAIL unrecoverably instead of recomputing. The mode is a
   * session conf so a cluster deployment picks its durability posture
-  * without code changes (the `Clusters.connectedComponents` checkpointDir
-  * escape hatch, generalized):
+  * without code changes; this object is the only code that cuts lineage:
   *
   *   - `spark.graft.replay.mode = local` (default): lazy
   *     `localCheckpoint` — lineage truncated, executor-local blocks, no
@@ -32,28 +32,42 @@ import org.apache.spark.storage.StorageLevel
   *     boundaries that call this.
   *   - `none`: no boundary — every consumer recomputes the subtree.
   *
+  * An EAGER boundary (`stable(df, eager = true)`) is a snapshot the caller
+  * relies on: CorpusIngest counts and appends rows that anti-join against
+  * the very tables it appends to. No boundary is no snapshot, and neither
+  * is a persisted plan: Spark re-caches every plan that reads a path it
+  * writes, re-deriving the rows against the grown table. So under
+  * `persist`/`none` an eager boundary stays an eager local checkpoint.
+  *
   * All four modes return the same rows; the choice only moves the
   * recompute/durability/write-cost trade-off. */
 object Replay {
   private[graft] val ModeKey = "spark.graft.replay.mode"
   private[graft] val DirKey = "spark.graft.replay.dir"
 
-  def stable(df: DataFrame): DataFrame = {
+  /** `eager` materializes the boundary now (Spark's own eager flag) —
+    * for callers that snapshot a frame before writing what it reads, or
+    * that narrow it afterwards. */
+  def stable(df: DataFrame, eager: Boolean = false): DataFrame = {
     val s = df.sparkSession
     s.conf.get(ModeKey, "local") match {
-      case "local" => df.localCheckpoint(eager = false)
+      case "persist" if !eager => df.persist(StorageLevel.MEMORY_AND_DISK)
+      case "none" if !eager => df
+      case "local" | "persist" | "none" => df.localCheckpoint(eager)
       case "reliable" =>
         val sc = s.sparkContext
         val dir = s.conf.get(DirKey, "")
         require(dir.nonEmpty || sc.getCheckpointDir.isDefined,
           s"$ModeKey=reliable needs $DirKey (or an already-set SparkContext checkpoint dir)")
-        // setCheckpointDir mints dir/<uuid>; compare by prefix (the
-        // Clusters lesson) so repeated boundaries share one subdirectory
-        if (dir.nonEmpty && !sc.getCheckpointDir.exists(_.startsWith(dir)))
-          sc.setCheckpointDir(dir)
-        df.checkpoint(eager = false)
-      case "persist" => df.persist(StorageLevel.MEMORY_AND_DISK)
-      case "none" => df
+        // setCheckpointDir mints <qualified dir>/<uuid>: compare against
+        // the QUALIFIED root so repeated boundaries share one subdirectory
+        if (dir.nonEmpty) {
+          val root = new Path(dir)
+          val qualified = root.getFileSystem(sc.hadoopConfiguration).makeQualified(root)
+          if (!sc.getCheckpointDir.exists(d => new Path(d).getParent == qualified))
+            sc.setCheckpointDir(dir)
+        }
+        df.checkpoint(eager)
       case other => throw new IllegalArgumentException(
         s"$ModeKey must be one of local|reliable|persist|none, got '$other'")
     }

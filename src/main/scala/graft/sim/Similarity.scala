@@ -305,7 +305,7 @@ object Similarity {
       // assign feeds BOTH pair sides and the caller's labeled join — the
       // lazy checkpoint runs quantize + centroid assignment once, not 3×
       // (r13, guide §1.2; the replay rule)
-      .transform(graft.ops.Replay.stable)
+      .transform(graft.ops.Replay.stable(_))
     val l = assign.select(col("centroid_id"), col("__vid").as("id_a"),
       col("__qv").as("__qa"), col("__nr").as("na"))
     val r = assign.select(col("centroid_id"), col("__vid").as("id_b"),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.dedup.Dedup
 import graft.io.Warehouse
+import graft.ops.Replay
 import graft.text.TextOps
 
 /** The composed training-data ingestion pipeline — the library's operators
@@ -78,7 +79,7 @@ object CorpusIngest {
     val accepted = spark.sparkContext.longAccumulator("corpus_accepted")
     val rejected = spark.sparkContext.longAccumulator("corpus_rejected")
     val fn: (Dataset[Row], Long) => Unit = (batch, _) => {
-      val derived = withDerived(batch).localCheckpoint(true) // one scan, two consumers
+      val derived = Replay.stable(withDerived(batch), eager = true) // one scan, two consumers
       val bad = derived.filter(col("quality") =!= "ok")
         .select(col("doc_id"), col("fp"), col("quality").as("reject_reason"))
       val ok = derived.filter(col("quality") === "ok")
@@ -120,7 +121,8 @@ object CorpusIngest {
           val pairs = Dedup.minhashNearDupPairs(
               kept.select(col("fp"), col("norm_text")), "fp", "norm_text",
               nearDupThresh10, shingleN, bands, rows)
-            .select(col("id_a"), col("id_b")).localCheckpoint(true)
+            .select(col("id_a"), col("id_b"))
+            .transform(Replay.stable(_, eager = true))
           val inPairs = pairs.select(col("id_a").as("fp"))
             .union(pairs.select(col("id_b").as("fp"))).distinct()
           val losers = graft.dedup.Clusters
@@ -130,7 +132,7 @@ object CorpusIngest {
             kept.join(losers, Seq("fp"), "left_semi")
               .select(col("doc_id"), col("fp"), lit("near_dup_in_batch").as("reject_reason")))
         } else (kept, null)
-      val keptMat = finalKept.localCheckpoint(true)
+      val keptMat = Replay.stable(finalKept, eager = true)
       // BANDS BEFORE CORPUS: the corpus append is the idempotence pivot
       // (the fp anti-join filters replays against it). A crash between
       // the two appends therefore replays the batch with the rows still
@@ -158,7 +160,7 @@ object CorpusIngest {
           rejects.join(wh.read(rejectTable).select("doc_id", "fp", "reject_reason"),
             Seq("doc_id", "fp", "reject_reason"), "left_anti")
         else rejects
-      val rejectsMat = rejectsFresh.localCheckpoint(true)
+      val rejectsMat = Replay.stable(rejectsFresh, eager = true)
       wh.append(rejectTable, rejectsMat)
       accepted.add(keptMat.count())
       rejected.add(rejectsMat.count())

@@ -276,13 +276,18 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q259: the corpus-prep chain plans FUSED — quality in the scan stage, broadcast probes, no cartesian") {
-    // assert on the un-checkpointed form: the shipped query checkpoints
-    // the dedup boundary, which (by design) hides the upstream fragment
-    // from the final physical plan
-    val st = SparkEntry.corpusPrepStages(spark, sfDir, checkpointDedupBoundary = false)
-    val pq = st.quality.queryExecution.executedPlan.toString
-    val pd = st.decon.queryExecution.executedPlan.toString
-    val pp = st.packed.queryExecution.executedPlan.toString
+    // assert on the un-checkpointed form (replay mode `none`): the shipped
+    // query checkpoints the dedup boundary, which (by design) hides the
+    // upstream fragment from the final physical plan
+    val key = graft.ops.Replay.ModeKey
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "none")
+    val (pq, pd, pp) = try {
+      val st = SparkEntry.corpusPrepStages(spark, sfDir)
+      (st.quality.queryExecution.executedPlan.toString,
+        st.decon.queryExecution.executedPlan.toString,
+        st.packed.queryExecution.executedPlan.toString)
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     assert(!pp.contains("CartesianProduct") && !pp.contains("BroadcastNestedLoopJoin"),
       "no stage may go quadratic:\n" + pp)
     // benchmark-gram membership is a broadcast join in the decon fragment —

@@ -41,12 +41,22 @@ class Round4Spec extends SparkSpec {
 
   test("connectedComponents with a RELIABLE checkpoint dir converges to the same labels") {
     import spark.implicits._
-    // a path graph (worst case for min-propagation) plus an isolated vertex
+    import graft.ops.Replay
+    // a 13-vertex path graph (worst case for min-propagation)
     val vertices = (0L to 12L).toDF("id")
     val edges = (0L until 12L).map(i => (i, i + 1)).toDF("src", "dst")
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-chk").toString
-    val reliable = Clusters.connectedComponents(vertices, "id", edges, "src", "dst",
-      checkpointDir = Some(dir))
+    val saved = Seq(Replay.ModeKey, Replay.DirKey).map(k => k -> spark.conf.getOption(k))
+    val reliable = try {
+      spark.conf.set(Replay.ModeKey, "reliable")
+      spark.conf.set(Replay.DirKey, dir)
+      // driverCollectMax = 0: the round loop, not the driver union-find
+      Clusters.connectedComponents(vertices, "id", edges, "src", "dst",
+        driverCollectMax = 0L)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
     val local = Clusters.connectedComponents(vertices, "id", edges, "src", "dst")
     assertSameRows(reliable, local, "reliable vs local checkpoint CC")
     assert(reliable.agg(max("cluster_id")).head().getLong(0) == 0L, "one path component")

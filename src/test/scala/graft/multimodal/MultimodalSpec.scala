@@ -141,6 +141,14 @@ class MultimodalSpec extends SparkSpec {
     assert(ham(dh(0, 0), dh(0, 2)) === 15 && ham(ph(0, 0), ph(0, 2)) === 0)
   }
 
+  test("phashClusters is one-hop min-rep, not transitive: a~b~c with a≁c gives c b's rep") {
+    // 0^7 and 7^63 set 3 bits (within threshold), 0^63 sets 6 (outside)
+    val hashes = Seq(1L -> 0L, 2L -> 7L, 3L -> 63L).toDF("media_id", "phash")
+    val got = graft.SparkEntry.phashClusters(hashes)
+      .select("ha", "cluster_id", "cluster_size").as[(Long, Long, Long)].collect().sorted
+    assert(got.toSeq === Seq((0L, 1L, 2L), (7L, 1L, 3L), (63L, 2L, 2L)))
+  }
+
   test("dctSignHash64: DC excluded, flat grid hashes to 0, basis pattern sets exactly its own bit") {
     // flat grid: every AC coefficient is (near) zero-sum → no positive
     // signs → hash 0 (DC bit excluded by construction)

@@ -1,18 +1,24 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 
 /** The materialization-boundary mode switch (r14, from the r13 advisor's
   * durability finding): every mode must return the SAME ROWS from an
-  * operator that routes its multi-consumer boundary through Replay.stable
-  * — only the recompute/durability trade-off may move. Exercised through a
-  * real boundary user (LangModel.trainKneserNey feeding scoreKnQ16, the
-  * four-consumer sufficient statistic). */
+  * operator that routes its multi-consumer boundary through Replay — only
+  * the recompute/durability trade-off may move. Exercised through real
+  * boundary users: LangModel.trainKneserNey feeding scoreKnQ16 (the
+  * four-consumer sufficient statistic), the connectedComponents round loop
+  * (`loopStable`), CorpusIngest's snapshot boundaries, q146's PageRank
+  * (`stable` + `loopStable`) and q292's calibration chain (an eager
+  * boundary). */
 class ReplaySpec extends SparkSpec {
 
-  private def knRows(): Seq[(Long, Long, Long, Long)] = {
+  private def knRows(): Seq[String] = {
     import spark.implicits._
     val docs = Seq(
       (1L, "the cat sat on the mat the cat sat again and again"),
@@ -21,58 +27,124 @@ class ReplaySpec extends SparkSpec {
       (4L, "a completely different sentence with rare words only"))
       .toDF("doc_id", "text")
     val lm = graft.text.LangModel.trainKneserNey(docs, "doc_id", "text", minCount = 2L)
-    graft.text.LangModel.scoreKnQ16(docs, "doc_id", "text", lm)
-      .orderBy("doc_id")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSeq
+    sortedRows(graft.text.LangModel.scoreKnQ16(docs, "doc_id", "text", lm))
   }
 
-  private def withMode[T](mode: Option[String])(body: => T): T = {
-    val saved = spark.conf.getOption(Replay.ModeKey)
-    mode match {
-      case Some(m) => spark.conf.set(Replay.ModeKey, m)
-      case None => spark.conf.unset(Replay.ModeKey)
-    }
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(Replay.ModeKey, v)
-      case None => spark.conf.unset(Replay.ModeKey)
-    }
+  private def ccRows(): Seq[String] = {
+    import spark.implicits._
+    // a 13-vertex path graph, forced through the round loop
+    val vertices = (0L to 12L).toDF("id")
+    val edges = (0L until 12L).map(i => (i, i + 1)).toDF("src", "dst")
+    sortedRows(graft.dedup.Clusters.connectedComponents(vertices, "id", edges, "src", "dst",
+      driverCollectMax = 0L))
   }
+
+  /** Two CorpusIngest drains through the near-dup gate (eager boundaries
+    * that snapshot rows before appending to the tables they anti-join). */
+  private def ingestRows(): Seq[String] = {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_replay_ingest").toString
+    val wh = new graft.io.Warehouse(spark, s"$root/wh")
+    val texts = Seq(
+      "the quick brown fox jumps over the lazy dog while the rain falls softly on the quiet village roofs tonight",
+      "the quick brown fox jumps over the lazy cat while the rain falls softly on the quiet village roofs tonight",
+      "entirely different subject matter describing galaxies planets comets meteors asteroids orbits telescopes and astronomers mapping them")
+    def drain(batch: String, ids: Seq[Int]): (Long, Long) = {
+      val df = ids.map(i => (i.toLong, texts(i), "en", "web", texts(i).length.toLong))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+      df.coalesce(1).write.parquet(s"$root/in/$batch")
+      graft.streaming.CorpusIngest.run(spark, s"$root/in/$batch", df.schema, wh,
+        "corpus", "rejects", s"$root/ck_$batch", nearDupThresh10 = 8)
+    }
+    Seq(drain("b1", Seq(0)), drain("b2", Seq(1, 2))).map(_.toString) ++
+      sortedRows(wh.read("corpus").select("doc_id")) ++
+      sortedRows(wh.read("rejects").select("doc_id", "reject_reason"))
+  }
+
+  private def queryRows(name: String): Seq[String] =
+    sortedRows(graft.SparkEntry.queries(name)(spark, sfDir))
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  private val inputs: Seq[(String, () => Seq[String])] = Seq(
+    "LangModel KN" -> (() => knRows()),
+    "connectedComponents loop" -> (() => ccRows()),
+    "CorpusIngest drains" -> (() => ingestRows()),
+    "q146_pagerank" -> (() => queryRows("q146_pagerank")),
+    "q292_calibration_ece" -> (() => queryRows("q292_calibration_ece")))
+
+  private def withConf[T](key: String, value: Option[String])(body: => T): T = {
+    val saved = spark.conf.getOption(key)
+    value.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try body
+    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private def withMode[T](mode: Option[String])(body: => T): T =
+    withConf(Replay.ModeKey, mode)(body)
+
+  private def withDir[T](dir: String)(body: => T): T =
+    withConf(Replay.DirKey, Some(dir))(body)
 
   test("local (default) / persist / none modes produce identical rows") {
-    val base = withMode(None)(knRows())
-    assert(base.nonEmpty)
-    for (m <- Seq("local", "persist", "none"))
-      assert(withMode(Some(m))(knRows()) === base, s"mode=$m diverged")
+    for ((name, rows) <- inputs) {
+      val base = withMode(None)(rows())
+      assert(base.nonEmpty, name)
+      for (m <- Seq("local", "persist", "none"))
+        assert(withMode(Some(m))(rows()) === base, s"$name: mode=$m diverged")
+    }
   }
 
   test("reliable mode checkpoints to the configured dir and matches") {
-    val base = withMode(None)(knRows())
     val dir = java.nio.file.Files.createTempDirectory("graft_replay_ck").toString
-    val savedDir = spark.conf.getOption(Replay.DirKey)
-    spark.conf.set(Replay.DirKey, dir)
-    try assert(withMode(Some("reliable"))(knRows()) === base)
-    finally savedDir match {
-      case Some(v) => spark.conf.set(Replay.DirKey, v)
-      case None => spark.conf.unset(Replay.DirKey)
+    withDir(dir) {
+      for ((name, rows) <- inputs) {
+        val base = withMode(None)(rows())
+        assert(withMode(Some("reliable"))(rows()) === base, name)
+      }
     }
+  }
+
+  test("reliable mode reuses one checkpoint subdirectory under an unqualified dir") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_replay_one").toString
+    withDir(dir)(withMode(Some("reliable")) {
+      for (i <- 1 to 2) assert(Replay.stable(Seq(i.toLong).toDF("k")).count() === 1L)
+    })
+    val subdirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
+    assert(subdirs.length === 1, subdirs.mkString(", "))
   }
 
   test("reliable mode without a dir fails loudly; unknown modes fail loudly") {
     // run on a FRESH frame so the failure happens at the boundary call
     import spark.implicits._
     val df = Seq((1L, "a")).toDF("k", "v")
-    val savedDir = spark.conf.getOption(Replay.DirKey)
-    spark.conf.unset(Replay.DirKey)
-    try {
+    withConf(Replay.DirKey, None) {
       if (spark.sparkContext.getCheckpointDir.isEmpty)
         assertThrows[IllegalArgumentException](
           withMode(Some("reliable"))(Replay.stable(df)))
       assertThrows[IllegalArgumentException](
         withMode(Some("bogus"))(Replay.stable(df)))
-    } finally savedDir.foreach(spark.conf.set(Replay.DirKey, _))
+    }
+  }
+
+  test("no lineage cut outside Replay: src/main calls no raw localCheckpoint/checkpoint") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repository root: $root")
+    val cut = """localCheckpoint\(|\.checkpoint\(""".r
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.endsWith(java.nio.file.Paths.get("ops", "Replay.scala")))
+      .toSeq
+    val hits = for {
+      f <- files
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if !line.trim.startsWith("*") && !line.trim.startsWith("//")
+      if cut.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(files.nonEmpty)
+    assert(hits.isEmpty, "route these through graft.ops.Replay:\n" + hits.mkString("\n"))
   }
 
   test("loopStable truncates the plan even under persist/none (the q177 lesson)") {
