@@ -355,14 +355,26 @@ object SparkEntry {
     * a fixture; safe across SparkSessions in one JVM (the path outlives the
     * session that wrote it). */
   private val fixtureCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def cachedFixture(s: SparkSession, key: String, build: => DataFrame): DataFrame = {
-    val path = fixtureCache.computeIfAbsent(key, _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft_fixture").toString
+  private def fixturePath(key: String, build: => DataFrame): String =
+    fixtureCache.computeIfAbsent(key, _ => {
+      val p = scratchDir("fixture")
       build.write.mode("overwrite").parquet(p)
       p
     })
-    s.read.parquet(path)
+  private def cachedFixture(s: SparkSession, key: String, build: => DataFrame): DataFrame =
+    s.read.parquet(fixturePath(key, build))
+
+  /** Every scratch directory a query writes (fixtures, per-call warehouses
+    * and versioned tables, stream checkpoints) lives under ONE per-JVM root
+    * in `java.io.tmpdir`, deleted by one shutdown hook — per-call temp dirs
+    * would otherwise outlive the JVM and pile up run after run. */
+  private lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_scratch")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+    root
   }
+  private def scratchDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString
 
   /** Shared (doc_id, text) parquet fixture for the streaming queries,
     * written once per (dir, file count) per JVM. q247 uses files = 1
@@ -371,12 +383,8 @@ object SparkEntry {
     * batching-independent by spec, and a single file would pin the
     * in-stream tokenCount to one input split — the q247 lesson). */
   private def docsStreamFixture(s: SparkSession, dir: String, files: Int): String =
-    fixtureCache.computeIfAbsent(s"docs${files}f:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory(s"graft_docs${files}f").toString
-      Tables.documents(s, dir).select("doc_id", "text")
-        .repartition(files).write.mode("overwrite").parquet(p)
-      p
-    })
+    fixturePath(s"docs${files}f:$dir",
+      Tables.documents(s, dir).select("doc_id", "text").repartition(files))
 
   /** Per-JVM VERSIONED-table fixture: the base table is committed ONCE per
     * (kind, dir) and every evaluation CLONEs it before mutating —
@@ -397,7 +405,7 @@ object SparkEntry {
       statsCol: Option[String] = None)(base: => DataFrame): (graft.io.Versioned, String) = {
     val b = base
     val (root, cachedSchema) = versionedFixtureRoots.computeIfAbsent(s"$kind:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory(s"graft_fx_$kind").toString
+      val p = scratchDir(s"fx_$kind")
       // NOTE (r14): committing the base as 8 files (to parallelize the
       // delete scans / MOR reads) was tried and MEASURED WORSE at sf0.1
       // (q201 +0.35 s, q205 +0.40 s vs a +0.2 drift control): per-file
@@ -782,7 +790,7 @@ object SparkEntry {
   private def q67_bucketed_join(s: SparkSession, dir: String): DataFrame = {
     import graft.io.Warehouse
     val uid = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val wh = new Warehouse(s, java.nio.file.Files.createTempDirectory("graft_bkt").toString)
+    val wh = new Warehouse(s, scratchDir("bkt"))
     val liT = s"li_bkt_$uid"; val oT = s"o_bkt_$uid"
     wh.writeBucketed(liT, Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_quantity")),
       buckets = 8, Seq("l_orderkey"))
@@ -802,7 +810,7 @@ object SparkEntry {
     * read/write pattern a daily 100 TB warehouse needs. */
   private def q68_partition_prune(s: SparkSession, dir: String): DataFrame = {
     import graft.io.Warehouse
-    val wh = new Warehouse(s, java.nio.file.Files.createTempDirectory("graft_part").toString)
+    val wh = new Warehouse(s, scratchDir("part"))
     wh.writePartitioned("orders_by_year",
       Tables.orders(s, dir).withColumn("o_year", year(col("o_orderdate"))), Seq("o_year"))
     s.read.parquet(wh.path("orders_by_year"))
@@ -937,7 +945,7 @@ object SparkEntry {
     * alternative to the reference's whole-table WRITE_TRUNCATE rebuild. */
   private def q77_incremental_merge(s: SparkSession, dir: String): DataFrame = {
     import graft.io.Warehouse
-    val wh = new Warehouse(s, java.nio.file.Files.createTempDirectory("graft_mrg").toString)
+    val wh = new Warehouse(s, scratchDir("mrg"))
     val o = Tables.orders(s, dir)
     val split = lit("1997-01-01").cast("timestamp")
     wh.write("orders_snap", o.withColumn("o_totalprice",
@@ -1281,7 +1289,7 @@ object SparkEntry {
     * round-trip must be lossless (dates ISO, doubles shortest-repr exact).
     */
   private def q98_csv_roundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val tmp = scratchDir("csv")
     Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_orderpriority"), col("o_orderdate"), col("o_totalprice"))
       .write.mode("overwrite").option("header", "true").csv(tmp)
@@ -1300,7 +1308,7 @@ object SparkEntry {
     * format): explicit-schema read back — same losslessness bar as q98.
     */
   private def q99_json_roundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
+    val tmp = scratchDir("jsonl")
     Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_orderpriority"), col("o_orderdate"), col("o_totalprice"))
       .write.mode("overwrite").json(tmp)
@@ -1355,7 +1363,7 @@ object SparkEntry {
     * the same union expressed over the source table.
     */
   private def q102_merge_schema(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_evo").toString
+    val tmp = scratchDir("evo")
     Tables.orders(s, dir).filter(col("o_orderkey") % 2 === 0)
       .select(col("o_orderkey"), col("o_orderpriority"))
       .write.mode("overwrite").parquet(s"$tmp/batch=1")
@@ -1446,7 +1454,7 @@ object SparkEntry {
     * parquet (native) and CSV/JSON-lines (q98/q99); same losslessness bar.
     */
   private def q106_orc_roundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val tmp = scratchDir("orc")
     Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_orderpriority"), col("o_orderdate"), col("o_totalprice"))
       .write.mode("overwrite").orc(tmp)
@@ -1646,7 +1654,7 @@ object SparkEntry {
     * survive the trip exactly.
     */
   private def q117_text_lines(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_txt").toString
+    val tmp = scratchDir("txt")
     Tables.documents(s, dir).select(col("text")).write.mode("overwrite").text(tmp)
     s.read.text(tmp)
       .agg(count(lit(1)).as("n_lines"),
@@ -2313,7 +2321,7 @@ object SparkEntry {
     * hash. Money stays exact DECIMAL cents. */
   private def q165_versioned_timetravel(s: SparkSession, dir: String): DataFrame = {
     import graft.io.Versioned
-    val vt = new Versioned(s, java.nio.file.Files.createTempDirectory("graft_vt").toString)
+    val vt = new Versioned(s, scratchDir("vt"))
     val o = Tables.orders(s, dir)
     val cents = (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long")
     vt.commit("orders_v", o.filter(col("o_orderkey") % 2 === 0))
@@ -2438,7 +2446,7 @@ object SparkEntry {
     * breaks the hash. */
   private def q189_versioned_changes(s: SparkSession, dir: String): DataFrame = {
     import graft.io.Versioned
-    val vt = new Versioned(s, java.nio.file.Files.createTempDirectory("graft_cdc").toString)
+    val vt = new Versioned(s, scratchDir("cdc"))
     val base = Tables.orders(s, dir).select(col("o_orderkey"),
       (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
     vt.commit("orders_cdc", base) // v1
@@ -2461,7 +2469,7 @@ object SparkEntry {
     * counts; this query pins the end-to-end result). */
   private def q191_versioned_point(s: SparkSession, dir: String): DataFrame = {
     import graft.io.Versioned
-    val vt = new Versioned(s, java.nio.file.Files.createTempDirectory("graft_pt").toString)
+    val vt = new Versioned(s, scratchDir("pt"))
     val base = Tables.orders(s, dir).select(col("o_orderkey"),
       (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
       .repartition(8)
@@ -2574,8 +2582,8 @@ object SparkEntry {
   private def q169_stream_versioned(s: SparkSession, dir: String): DataFrame = {
     val raw = Tables.eventsRawSchema(Tables.eventsRawTsType(s, dir))
     val vt = new graft.io.Versioned(
-      s, java.nio.file.Files.createTempDirectory("graft_vsink").toString)
-    val chk = java.nio.file.Files.createTempDirectory("graft_vsink_chk").toString
+      s, scratchDir("vsink"))
+    val chk = scratchDir("vsink_chk")
     val glob = s"$dir/events.parq*"
     val appId = "q169_ingest"
     graft.streaming.VersionedSink.appendStream(
@@ -2841,7 +2849,7 @@ object SparkEntry {
     * file or a merge bug that drops/duplicates a row breaks the hash. */
   private def q175_versioned_merge(s: SparkSession, dir: String): DataFrame = {
     val vt = new graft.io.Versioned(
-      s, java.nio.file.Files.createTempDirectory("graft_vm").toString)
+      s, scratchDir("vm"))
     val o = Tables.orders(s, dir).select(col("o_orderkey").as("key"),
       (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
     vt.commit("orders_m", o.repartitionByRange(8, col("key")), statsCol = Some("key"))
@@ -2864,7 +2872,7 @@ object SparkEntry {
     * the delta, never re-read history. */
   private def q176_versioned_delta(s: SparkSession, dir: String): DataFrame = {
     val vt = new graft.io.Versioned(
-      s, java.nio.file.Files.createTempDirectory("graft_vd").toString)
+      s, scratchDir("vd"))
     val o = Tables.orders(s, dir).select(col("o_orderkey").as("key"),
       (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
     vt.commit("orders_d", o.filter(col("key") % 3 === 0))
@@ -3134,7 +3142,7 @@ object SparkEntry {
     * producer poisoning a load and a quarantine table you re-process later.
     */
   private def q157_corrupt_quarantine(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_quarantine").toString
+    val tmp = scratchDir("quarantine")
     Tables.orders(s, dir)
       .select(col("o_orderkey").as("k"),
         (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
@@ -3398,7 +3406,7 @@ object SparkEntry {
     */
   private def q200_zorder_box(s: SparkSession, dir: String): DataFrame = {
     val vt = new graft.io.Versioned(
-      s, java.nio.file.Files.createTempDirectory("graft_zo").toString)
+      s, scratchDir("zo"))
     val li = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"), col("l_quantity"))
     vt.commitZOrdered("li_z", li, Seq("l_partkey", "l_suppkey"), numFiles = 16)
@@ -3485,8 +3493,8 @@ object SparkEntry {
     * relationally, so a wrong rollup algebra breaks the hash. */
   private def q202_mv_rewrite(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.MvRewriteRule
-    val baseDir = java.nio.file.Files.createTempDirectory("graft_mvq_base").toString
-    val mvDir = java.nio.file.Files.createTempDirectory("graft_mvq_mv").toString
+    val baseDir = scratchDir("mvq_base")
+    val mvDir = scratchDir("mvq_mv")
     Tables.lineitem(s, dir)
       .select(col("l_quantity").cast("long").as("qty"),
         col("l_returnflag").as("flag"), col("l_linestatus").as("status"))
@@ -3526,8 +3534,8 @@ object SparkEntry {
   private def q205_mv_incremental_rewrite(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.MvRewriteRule
     import graft.ops.Incremental
-    val mvDir1 = java.nio.file.Files.createTempDirectory("graft_mvi_v1").toString
-    val mvDir2 = java.nio.file.Files.createTempDirectory("graft_mvi_v2").toString
+    val mvDir1 = scratchDir("mvi_v1")
+    val mvDir2 = scratchDir("mvi_v2")
     val cents = (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long")
     val base = Tables.orders(s, dir)
       .select(col("o_orderkey").as("k"), col("o_orderpriority").as("grp"), cents.as("v"))
@@ -3586,7 +3594,7 @@ object SparkEntry {
     * absolute paths, breaks the hash. */
   private def q206_restore_clone(s: SparkSession, dir: String): DataFrame = {
     val vt = new graft.io.Versioned(
-      s, java.nio.file.Files.createTempDirectory("graft_rc").toString)
+      s, scratchDir("rc"))
     val base = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"), col("l_linestatus"))
     vt.commit("src", base)
@@ -3883,7 +3891,7 @@ object SparkEntry {
     */
   private def q194_incremental_view(s: SparkSession, dir: String): DataFrame = {
     import graft.io.Versioned
-    val vt = new Versioned(s, java.nio.file.Files.createTempDirectory("graft_ivm").toString)
+    val vt = new Versioned(s, scratchDir("ivm"))
     val base = Tables.orders(s, dir).select(col("o_orderkey").as("k"),
       pmod(col("o_orderkey"), lit(7L)).as("grp"),
       (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
@@ -4899,17 +4907,6 @@ object SparkEntry {
       .agg(min("nrep").as("cluster_id"), sum("ncnt").as("cluster_size"))
   }
 
-  /** Parquet (media_id, bytes) stream fixture for the image gate — the
-    * crop/rescale payloads written once per (dir) per JVM, 8 files. */
-  private def imageStreamFixture(s: SparkSession, dir: String): String =
-    fixtureCache.computeIfAbsent(s"cropimg:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft_cropimg").toString
-      graft.multimodal.Multimodal
-        .syntheticCropRescaleImages(par(s, Tables.documents(s, dir)), "doc_id")
-        .select("media_id", "bytes").repartition(8).write.mode("overwrite").parquet(p)
-      p
-    })
-
   /** STREAMING IMAGE NEAR-DUP GATE (r11 verdict #8 — the q280/q283
     * train-offline/serve-online pattern on q284): the distinct-hash
     * cluster index is built batch-side from the same payload fixture,
@@ -4922,7 +4919,10 @@ object SparkEntry {
   private def q290_stream_image_gate(s: SparkSession, dir: String): DataFrame = {
     import graft.multimodal.Multimodal
     import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
-    val fixture = imageStreamFixture(s, dir)
+    // the crop/rescale payloads, written once per (dir) per JVM, 8 files
+    val fixture = fixturePath(s"cropimg:$dir", Multimodal
+      .syntheticCropRescaleImages(par(s, Tables.documents(s, dir)), "doc_id")
+      .select("media_id", "bytes").repartition(8))
     val batchHashes = Multimodal.spectralHashes(s.read.parquet(fixture))
       .select(col("media_id"), col("phash")).transform(Replay.stable(_))
     val clusters = phashClusters(batchHashes).transform(Replay.stable(_))
@@ -5026,16 +5026,6 @@ object SparkEntry {
         col("cluster_id"), col("cluster_size"))
   }
 
-  /** Parquet (media_id, bytes) stream fixture for the audio gate. */
-  private def audioStreamFixture(s: SparkSession, dir: String): String =
-    fixtureCache.computeIfAbsent(s"audiond:$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft_audiond").toString
-      graft.multimodal.Multimodal
-        .syntheticNearDupAudio(par(s, Tables.documents(s, dir)), "doc_id")
-        .select("media_id", "bytes").repartition(8).write.mode("overwrite").parquet(p)
-      p
-    })
-
   /** STREAMING AUDIO NEAR-DUP GATE — q286 as the q290 pattern: the
     * fingerprint cluster index builds batch-side, a STREAM of raw WAV
     * payloads is decoded+fingerprinted by the SAME typed-mapPartitions
@@ -5045,7 +5035,9 @@ object SparkEntry {
   private def q291_stream_audio_gate(s: SparkSession, dir: String): DataFrame = {
     import graft.multimodal.Multimodal
     import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
-    val fixture = audioStreamFixture(s, dir)
+    val fixture = fixturePath(s"audiond:$dir", Multimodal
+      .syntheticNearDupAudio(par(s, Tables.documents(s, dir)), "doc_id")
+      .select("media_id", "bytes").repartition(8))
     val batch = Multimodal.audioFingerprints(s.read.parquet(fixture))
       .select(col("media_id"), col("afp")).transform(Replay.stable(_))
     val clusters = phashClusters(batch.select(col("media_id"), col("afp").as("phash")))

@@ -43,8 +43,8 @@ object Clusters {
     *    round k replays rounds 1..k-1 and the job goes quadratic;
     *  - DURABILITY: each round cuts lineage through `Replay.loopStable`;
     *    run production CC under `spark.graft.replay.mode=reliable`;
-    *  - the edge set is symmetrized once and cached: it is reused every
-    *    round and never grows;
+    *  - the edge set is symmetrized once behind a `Replay.stable`
+    *    boundary: it is reused every round and never grows;
     *  - convergence rides inside the round: a `__changed` flag, read by the
     *    one aggregate that also materializes the round's checkpoint.
     *
@@ -57,7 +57,7 @@ object Clusters {
                           maxIters: Int = 25,
                           driverCollectMax: Long = 1L << 20): DataFrame = {
     // ONE pass emitting both orientations (explode, not union-of-selects —
-    // the latter evaluated the caller's pair-producer twice), persisted
+    // the latter evaluated the caller's pair-producer twice), materialized
     // PARTITIONED BY dst: the per-round neighbor join keys sym on dst, so
     // the edge side's exchange is paid once here, not once per round
     // (r13, guide §2.4; the Graphs.pagerankInt layout).
@@ -68,7 +68,7 @@ object Clusters {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
       .repartition(col("dst"))
-      .cache()
+      .transform(graft.ops.Replay.stable(_))
     // DRIVER UNION-FIND FAST PATH (r14; the q257 trainInMemory precedent —
     // an adaptive algorithm choice, like broadcast-vs-shuffle join
     // selection, with identical output): when the symmetrized edge table
@@ -77,21 +77,21 @@ object Clusters {
     // per-round job train (a chain-graph CC at sf0.1 was ~8 rounds × join
     // + agg + checkpoint ≈ dozens of jobs for milliseconds of actual
     // work). The edge producer is still evaluated EXACTLY ONCE — the probe
-    // counts the already-cached symmetrized table, which the distributed
-    // loop's first round would have materialized anyway. Corpus-scale
+    // counts the symmetrized boundary, which the distributed loop's first
+    // round would have materialized anyway. Corpus-scale
     // graphs (count above the gate, or string ids) take the loop
     // unchanged; pass driverCollectMax = 0 to force it.
     if (driverCollectMax > 0 &&
         isIntegral(vertices.schema(idCol).dataType) &&
         isIntegral(edges.schema(srcCol).dataType) &&
         isIntegral(edges.schema(dstCol).dataType)) {
-      val m = sym.count() // materializes the cache the loop needs anyway
+      val m = sym.count() // materializes the boundary the loop needs anyway
       if (m <= driverCollectMax) {
         val vRows = vertices.select(col(idCol).cast("long").as("id"))
           .limit(driverCollectMax.toInt + 1).collect()
         if (vRows.length <= driverCollectMax && vRows.forall(!_.isNullAt(0))) {
           val eRows = sym.select(col("src").cast("long"), col("dst").cast("long")).collect()
-          sym.unpersist()
+          graft.ops.Replay.release(sym)
           return driverUnionFind(vertices.sparkSession, idCol,
             vertices.schema(idCol).dataType, vRows.map(_.getLong(0)),
             eRows)
@@ -101,15 +101,11 @@ object Clusters {
     var labels = vertices.select(col(idCol).as("id"), col(idCol).as("cluster_id"))
     var iter = 0
     var converged = false
-    // the superseded round's checkpointed RDD — freed as soon as the NEXT
-    // round has materialized (r13 advisor: without this the block manager
-    // holds O(rounds × |labels|) generations across up to 25 rounds). The
-    // final round's blocks are never unpersisted: the caller consumes them.
-    var prevRdd: Option[org.apache.spark.rdd.RDD[_]] = None
-    def checkpointedRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.logical.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.headOption
+    // the superseded round's boundary — released as soon as the NEXT round
+    // has materialized (r13 advisor: without this the block manager holds
+    // O(rounds × |labels|) generations across up to 25 rounds). The final
+    // round is never released: the caller consumes it.
+    var prev: Option[DataFrame] = None
     while (iter < maxIters && !converged) {
       val viaNeighbors = sym.join(labels, sym("dst") === labels("id"))
         .select(col("src").as("id"), col("cluster_id"))
@@ -146,13 +142,13 @@ object Clusters {
       // this round is fully materialized (the aggregate scans every
       // partition) and checkpoints are self-contained — the previous
       // round's blocks can never be needed again
-      prevRdd.foreach(_.unpersist(false))
-      prevRdd = checkpointedRdd(next)
+      prev.foreach(graft.ops.Replay.release)
+      prev = Some(next)
       converged = !anyChanged
       labels = next.select("id", "cluster_id")
       iter += 1
     }
-    sym.unpersist()
+    graft.ops.Replay.release(sym)
     // operational breadcrumb: iteration count IS the diameter bound — a
     // jump here after a corpus change explains a wall-clock regression
     // before any profiler does (each round = 1 join + 1 agg + 1 checkpoint).

@@ -232,21 +232,20 @@ object SuffixRanks {
     // DF orderBy sorts by UTF8String BYTE order, the binary collation an
     // external engine's varchar sort gives; zipWithIndex then follows the
     // total sort order deterministically.
-    // cache: both the size probe (the combine bound) and the join consume
-    // this RDD — uncached, the distinct+sort+zipWithIndex lineage would
-    // execute twice
-    val vocab = toks.select("__tok").distinct().orderBy("__tok").rdd
-      .map(_.getString(0)).zipWithIndex()
-      .map { case (t, i) => Row(t, i + 1L) }
-      .cache()
-    // one pass measures BOTH gate inputs: row count and total token bytes
-    // (the same job the plain count() was)
-    val (vocabSize, vocabBytes) = vocab
-      .map(r => (1L, r.getString(0).getBytes("UTF-8").length.toLong))
-      .fold((0L, 0L)) { case ((n1, b1), (n2, b2)) => (n1 + n2, b1 + b2) }
-    val vocabRanks = spark.createDataFrame(vocab,
+    // one boundary: both the size probe (the combine bound) and the join
+    // consume this table — without it the distinct+sort+zipWithIndex
+    // lineage would execute twice
+    val vocab = spark.createDataFrame(
+      toks.select("__tok").distinct().orderBy("__tok").rdd
+        .map(_.getString(0)).zipWithIndex()
+        .map { case (t, i) => Row(t, i + 1L) },
       StructType(Seq(StructField("__tok", StringType, nullable = false),
         StructField("__r", LongType, nullable = false))))
+      .transform(graft.ops.Replay.stable(_))
+    // one aggregate measures BOTH gate inputs: row count and total token
+    // bytes (the same job the plain count() was)
+    val sizes = vocab.agg(count(lit(1)), coalesce(sum(octet_length(col("__tok"))), lit(0L))).head()
+    val (vocabSize, vocabBytes) = (sizes.getLong(0), sizes.getLong(1))
     // r13 (guide §3.1): the rank table is RDD-backed — no size statistics —
     // so the planner defaulted this join to sort-merge, exchanging + sorting
     // the WHOLE per-position token table against a vocabulary-sized side.
@@ -257,7 +256,7 @@ object SuffixRanks {
     // ~3-4× hash-relation framing) is the ceiling; bigger vocabs keep the
     // shuffle join, which was always safe.
     val vr = if (vocabSize <= (1L << 20) && vocabBytes <= (64L << 20))
-      broadcast(vocabRanks) else vocabRanks
+      broadcast(vocab) else vocab
     var ranked = toks.join(vr, "__tok")
       .select(col("__doc"), col("__wi"), col("__r"))
     var bound = vocabSize

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Replay
+
 /** Distributed graph primitives over edge DataFrames. Connected components
   * (the other iterative workload) lives in dedup.Clusters; this object
   * holds triangle counting and the integer-mass PageRank.
@@ -32,19 +34,15 @@ object Graphs {
     * @return one row: n_vertices, n_edges, n_triangles
     */
   def triangleCount(edges: DataFrame, src: String = "src", dst: String = "dst"): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     // canon and oriented are each consumed by SEVERAL downstream joins;
-    // without persistence Spark recomputes the full edge-derivation subtree
-    // per consumer (measured 2× on the bench). MEMORY_AND_DISK keeps the
-    // O(m) edge list off the recompute path; entries age out via LRU. At
-    // cluster scale replicated persist or a reliable checkpoint is the same
-    // one-line seam.
+    // without a boundary Spark recomputes the full edge-derivation subtree
+    // per consumer (measured 2× on the bench)
     val canon = edges
       .select(least(col(src), col(dst)).cast("long").as("a"),
         greatest(col(src), col(dst)).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(Replay.stable(_))
 
     val deg = canon.select(col("a").as("v"))
       .unionAll(canon.select(col("b").as("v")))
@@ -60,7 +58,7 @@ object Graphs {
       when(ordA < ordB, col("a")).otherwise(col("b")).as("u"),
       when(ordA < ordB, col("b")).otherwise(col("a")).as("w"),
       when(ordA < ordB, ordB).otherwise(ordA).as("w_ord"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(Replay.stable(_))
 
     // EDGE-ITERATOR form: for each oriented edge (u, w), the triangles whose
     // order-minimal vertex is u and middle vertex is w are exactly
@@ -106,10 +104,11 @@ object Graphs {
     * mass need a redistribution term this operator deliberately omits.
     *
     * Scale shape per iteration: one equi-join of the rank vector with the
-    * cached edge list on the vertex key + one aggregation keyed the same
+    * edge list on the vertex key + one aggregation keyed the same
     * way — the classic message-passing round, the same exchange layout
-    * every round (AQE reuses it). The edge list and degrees are persisted
-    * once (consumed by every round; the triangleCount precedent). The
+    * every round (AQE reuses it). The edge list and degrees sit behind one
+    * `Replay.stable` boundary each (consumed by every round; the
+    * triangleCount precedent). The
     * iteration chain is linear — each mₜ feeds only mₜ₊₁ — so the plan
     * tower executes each round exactly once, no checkpointing needed at
     * these depths (checkpoint every ~10 rounds at 100 TB).
@@ -119,18 +118,17 @@ object Graphs {
   def pagerankInt(edges0: DataFrame, src: String = "src", dst: String = "dst",
                   iters: Int = 3, total: Long = 1000000000000L): DataFrame = {
     require(iters >= 0 && iters <= 50, s"pagerankInt: iters=$iters")
-    import org.apache.spark.storage.StorageLevel
     def fdiv(a: Column, b: Column): Column = call_function("div", a, b)
     // symmetrize in ONE pass over canon (explode, not unionAll-of-selects —
     // the latter evaluated the whole upstream edge derivation twice; r13),
-    // and persist PARTITIONED BY u: every round's message join and the
+    // and materialize PARTITIONED BY u: every round's message join and the
     // degree aggregate are keyed on u, so the exchange of the (big) edge
     // list is paid once here instead of once per round (guide §2.4).
     val edges = symmetrize(edges0, src, dst)
       .repartition(col("u"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(Replay.stable(_))
     val deg = edges.groupBy(col("u")).agg(count(lit(1)).as("d"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(Replay.stable(_))
     val verts = deg.select(col("u").as("node"))
     val nn = verts.agg(count(lit(1)).as("n"))
     val seed = fdiv(lit(total), col("n"))
@@ -161,7 +159,7 @@ object Graphs {
     // ONE pass emitting both orientations (r13, guide §1.2 "don't compute
     // things twice"): the old unionAll(select, select) evaluated `canon` —
     // and therefore the caller's whole edge-derivation subtree (q231: a
-    // lineitem self-join) — TWICE before the first persist could help.
+    // lineitem self-join) — TWICE before the first boundary could help.
     // explode duplicates each row after computing it once; row order is
     // irrelevant to every consumer (joins/aggregates).
     canon.select(explode(array(
@@ -183,7 +181,7 @@ object Graphs {
     * All-integer: membership is a degree threshold, no scores — so the
     * surviving set and its induced degrees are engine-exact.
     *
-    * Scale shape per round: two semi-joins of the persisted edge list
+    * Scale shape per round: two semi-joins of the current edge list
     * against the current alive set (vertex-keyed, the same exchange
     * layout every round) + one count aggregate. Nothing O(V) is ever
     * broadcast or collected.
@@ -195,23 +193,12 @@ object Graphs {
                 src: String = "src", dst: String = "dst"): DataFrame = {
     require(k >= 1, s"kcorePeel: k=$k")
     require(rounds >= 1 && rounds <= 16, s"kcorePeel: rounds=$rounds")
-    import org.apache.spark.storage.StorageLevel
     // Peeling is MONOTONE: once a vertex is dropped, every edge touching it
     // is gone for good — so each round filters the PREVIOUS round's edge
     // list, not the full graph. Rounds get strictly cheaper as the graph
-    // shrinks (the full list is touched exactly once); each stage persists
-    // because two joins + the next round consume it.
-    //
-    // CACHE LIFETIME (r7 advisor, adjudicated in r8): up to rounds+1 edge
-    // generations stay persisted until the session's LRU evicts them —
-    // DELIBERATE. The alternative (materialize each round with a count and
-    // unpersist the superseded frame) bounds the footprint at 2 generations
-    // but measured 1.4 s → 6.7 s at sf0.1 (the per-round jobs break the
-    // single fused DAG). rounds ≤ 16 by contract and generations SHRINK
-    // monotonically, so the pinned total is bounded by ~2× the first
-    // generation; MEMORY_AND_DISK degrades to disk, never OOM. Callers
-    // running many kcore calls in one session can spark.catalog.clearCache.
-    var edges = symmetrize(edges0, src, dst).persist(StorageLevel.MEMORY_AND_DISK)
+    // shrinks (the full list is touched exactly once); each generation is
+    // a loop boundary because two joins + the next round consume it.
+    var edges = Replay.loopStable(symmetrize(edges0, src, dst))
     var alive = edges.groupBy(col("u")).agg(count(lit(1)).as("core_deg"))
       .select(col("u").as("node"), col("core_deg"))
     for (_ <- 1 to rounds) {
@@ -219,7 +206,7 @@ object Graphs {
       edges = edges
         .join(keep.select(col("node").as("u")), "u")
         .join(keep.select(col("node").as("v")), "v")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(Replay.loopStable)
       alive = edges.groupBy(col("u")).agg(count(lit(1)).as("core_deg"))
         .select(col("u").as("node"), col("core_deg"))
     }
@@ -237,15 +224,14 @@ object Graphs {
     *
     * Scale shape per round: one edge-join shipping the current frontier's
     * distances + one min-aggregate keyed by vertex — the PageRank
-    * exchange layout on the persisted edge list.
+    * exchange layout on the materialized edge list.
     *
     * Output: (node, dist) for every vertex within `rounds` hops of a seed.
     */
   def bfsLayers(edges0: DataFrame, seeds: DataFrame, seedCol: String, rounds: Int,
                 src: String = "src", dst: String = "dst"): DataFrame = {
     require(rounds >= 0 && rounds <= 16, s"bfsLayers: rounds=$rounds")
-    import org.apache.spark.storage.StorageLevel
-    val edges = symmetrize(edges0, src, dst).persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = Replay.stable(symmetrize(edges0, src, dst))
     // FRONTIER expansion, not whole-set relaxation: a BFS distance is final
     // the round it is first assigned (hop minimality), so each round joins
     // the edge list against only the vertices reached LAST round and
@@ -254,16 +240,9 @@ object Graphs {
     // the difference between 6 s and 2 s at bench scale, and between
     // feasible and quadratic on a 100 TB similarity graph where the
     // reached set saturates after two hops.
-    // CACHE LIFETIME (r7 advisor, adjudicated in r8): each round's frontier
-    // stays persisted until LRU eviction — DELIBERATE. Materializing every
-    // round to unpersist the predecessor measured 0.5 s → 3.9 s at sf0.1
-    // (the per-round count jobs break the fused DAG); frontiers SHRINK as
-    // the reachable set saturates, rounds ≤ 16 by contract, and
-    // MEMORY_AND_DISK never OOMs. Long-lived sessions reclaim via LRU or
-    // spark.catalog.clearCache — same adjudication as kcorePeel above.
     var dist = seeds.select(col(seedCol).cast("long").as("node")).distinct()
       .select(col("node"), lit(0L).as("dist"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(Replay.stable(_))
     var frontier = dist
     for (r <- 1 to rounds) {
       val next = edges
@@ -271,7 +250,7 @@ object Graphs {
         .select(col("v").as("node")).distinct()
         .join(dist.select(col("node")), Seq("node"), "left_anti")
         .select(col("node"), lit(r.toLong).as("dist"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(Replay.loopStable)
       dist = dist.unionByName(next)
       frontier = next
     }
@@ -291,19 +270,18 @@ object Graphs {
     *
     * Scale shape per round: one edge-join to ship neighbor labels + two
     * vertex-keyed aggregations (count, argmax) — the PageRank exchange
-    * layout, reused every round on the persisted edge list.
+    * layout, reused every round on the materialized edge list.
     *
     * Output: (node, label) after `rounds` rounds.
     */
   def labelPropagate(edges0: DataFrame, rounds: Int,
                      src: String = "src", dst: String = "dst"): DataFrame = {
     require(rounds >= 1 && rounds <= 16, s"labelPropagate: rounds=$rounds")
-    import org.apache.spark.storage.StorageLevel
-    // persist partitioned by u — the per-round neighbor join's key — so the
+    // materialize partitioned by u — the per-round neighbor join's key — so the
     // edge side never re-exchanges (guide §2.4; the pagerankInt layout)
     val edges = symmetrize(edges0, src, dst)
       .repartition(col("u"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(Replay.stable(_))
     var labels = edges.select(col("u").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     for (_ <- 1 to rounds) {

@@ -184,14 +184,11 @@ object LinAlg {
     val resid = array((0 until dim).map(d => call_function("div",
       element_at(col("__qv"), d + 1) * lit(nv) - lit(v1(d)) * col("__d1"),
       lit(1L << shift))): _*)
-    // persisted: the residual frame feeds the second Gram job AND the
-    // final projection — uncached, each consumer replays the scan plus
-    // the 64-term rejection arithmetic (measured ~3× the wall at sf0.1).
-    // It stays pinned for the RETURNED frame's lifetime (the projection
-    // reads it lazily); long-lived sessions reclaim it via LRU eviction —
-    // the deliberate trade for not forcing materialization here.
+    // one boundary: the residual frame feeds the second Gram job AND the
+    // final projection — without it, each consumer replays the scan plus
+    // the 64-term rejection arithmetic (measured ~3× the wall at sf0.1)
     val qr = q.withColumn("__d1", dot1).withColumn("__rv", resid)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.ops.Replay.stable(_))
     val (_, v2) = powerVec(gramOfQv(qr.select(col("__rv").as("__qv"))).collect(), iters)
     val proj2 = (0 until dim).map(d => element_at(col("__rv"), d + 1) * lit(v2(d))).reduce(_ + _)
     qr.select(col(idCol), col("__d1").as("proj1"), proj2.as("proj2"))

@@ -651,10 +651,9 @@ object Similarity {
     * |Q|×|C| scored with the codegen kernel — swap in [[lshBucketTopK]] /
     * [[ivfTopK]] as the candidate producer at 100 TB; the re-rank itself
     * only ever touches |Q|·c rows). The k selection steps build a plan
-    * tower over the candidate set, so the operator persists the |Q|·c
-    * candidate rows (MEMORY_AND_DISK) — without that, every one of the k
-    * output branches replays the |Q|×|C| scoring pass. The cache lives
-    * until the session evicts it (the returned plan references it).
+    * tower over the candidate set, so the |Q|·c candidate rows sit behind
+    * one `Replay.stable` boundary — without it, every one of the k output
+    * branches replays the |Q|×|C| scoring pass.
     *
     * Output: (query_id, rank 1..k, doc_id, mmr_score).
     */
@@ -680,15 +679,15 @@ object Similarity {
       .withColumn("dot", dotOf(col("cv"), col("nc"), col("qv"), col("nq")))
       .withColumn("rel", rel(col("dot"), col("nc"), col("nq")))
     val wRel = Window.partitionBy("qid").orderBy(col("rel").desc, col("cid").asc)
-    // PERSISTED: |Q|·c rows. Every selection step's output branch replays
-    // the chain back to the candidates — uncached, each of the k branches
+    // BOUNDARY: |Q|·c rows. Every selection step's output branch replays
+    // the chain back to the candidates — without it, each of the k branches
     // re-runs the |Q|×|C| scoring pass (measured ~5.6 s → ~3.5 s
     // steady-state at sf0.1)
     var remaining = scored
       .withColumn("rn", row_number().over(wRel)).filter(col("rn") <= c)
       .select(col("qid"), col("cid"), col("cv"), col("nc"), col("rel"))
       .withColumn("maxsim", lit(0L))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.ops.Replay.stable(_))
     val wMmr = Window.partitionBy("qid")
       .orderBy((col("rel") - col("maxsim")).desc, col("cid").asc)
     val steps = (1 to k).map { s =>
@@ -703,7 +702,7 @@ object Similarity {
       // each replay their step's chain, so without a lineage cut the
       // window/join subtree re-executes ~2^k times (measured 9.5 s → 2.1 s
       // at sf0.1, k = 5). The checkpointed frame is |Q|·c rows — the same
-      // bounded envelope the persist above already holds.
+      // bounded envelope as the boundary above.
       remaining = remaining
         .join(sel.select(col("qid"), col("sel_id"), col("sel_cv"), col("sel_nc")), "qid")
         .filter(col("cid") =!= col("sel_id"))

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Replay
 import graft.sim.Similarity
 
 /** MEASURES the banded-similarity production-regime claim (r4 VERDICT #3):
@@ -98,7 +99,7 @@ object NearDupScale {
     val vecs = spark.read.parquet(dir)
 
     val truth = plantedPairs(vecs).filter(col("cos_sim") >= Thresh)
-      .select("id_a", "id_b").cache()
+      .select("id_a", "id_b").transform(Replay.stable(_))
     val truthCount = truth.count()
 
     // warmup (codegen/classload), untimed, on a slice
@@ -125,7 +126,7 @@ object NearDupScale {
     val bruteNote =
       if (check) {
         val brute = Similarity.cosineNearDupPairs(vecs, "vec_id", "embedding", Thresh)
-          .select("id_a", "id_b").cache()
+          .select("id_a", "id_b").transform(Replay.stable(_))
         val bruteCount = brute.count()
         val outsidePlanted = brute.join(truth, Seq("id_a", "id_b"), "left_anti").count()
         s""","brute_pairs":$bruteCount,"brute_outside_planted":$outsidePlanted"""

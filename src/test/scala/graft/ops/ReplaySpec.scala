@@ -13,9 +13,9 @@ import graft.SparkSpec
   * the recompute/durability trade-off may move. Exercised through real
   * boundary users: LangModel.trainKneserNey feeding scoreKnQ16 (the
   * four-consumer sufficient statistic), the connectedComponents round loop
-  * (`loopStable`), CorpusIngest's snapshot boundaries, q146's PageRank
-  * (`stable` + `loopStable`) and q292's calibration chain (an eager
-  * boundary). */
+  * (`loopStable`), CorpusIngest's snapshot boundaries, the k-core and BFS
+  * round loops (`stable` + `loopStable`), q146's PageRank (`stable` +
+  * `loopStable`) and q292's calibration chain (an eager boundary). */
 class ReplaySpec extends SparkSpec {
 
   private def knRows(): Seq[String] = {
@@ -61,6 +61,18 @@ class ReplaySpec extends SparkSpec {
       sortedRows(wh.read("rejects").select("doc_id", "reject_reason"))
   }
 
+  /** A 4-clique {1,2,3,4} with the path tail 4-5-6. */
+  private lazy val graph = {
+    import spark.implicits._
+    Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L), (4L, 5L), (5L, 6L))
+      .toDF("src", "dst")
+  }
+
+  private def bfsRows(): Seq[String] = {
+    import spark.implicits._
+    sortedRows(graft.graph.Graphs.bfsLayers(graph, Seq(6L).toDF("s"), "s", rounds = 3))
+  }
+
   private def queryRows(name: String): Seq[String] =
     sortedRows(graft.SparkEntry.queries(name)(spark, sfDir))
 
@@ -71,6 +83,8 @@ class ReplaySpec extends SparkSpec {
     "LangModel KN" -> (() => knRows()),
     "connectedComponents loop" -> (() => ccRows()),
     "CorpusIngest drains" -> (() => ingestRows()),
+    "kcorePeel" -> (() => sortedRows(graft.graph.Graphs.kcorePeel(graph, k = 3, rounds = 3))),
+    "bfsLayers" -> (() => bfsRows()),
     "q146_pagerank" -> (() => queryRows("q146_pagerank")),
     "q292_calibration_ece" -> (() => queryRows("q292_calibration_ece")))
 
@@ -132,7 +146,7 @@ class ReplaySpec extends SparkSpec {
   test("no lineage cut outside Replay: src/main calls no raw localCheckpoint/checkpoint") {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"run from the repository root: $root")
-    val cut = """localCheckpoint\(|\.checkpoint\(""".r
+    val cut = """localCheckpoint\(|\.checkpoint\(|\.persist\(|\.cache\(\)""".r
     val files = java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .filterNot(_.endsWith(java.nio.file.Paths.get("ops", "Replay.scala")))
@@ -157,6 +171,49 @@ class ReplaySpec extends SparkSpec {
         case _: org.apache.spark.sql.execution.LogicalRDD => ()
       }.isDefined, s"mode=$m must still checkpoint inside loops")
       assert(out.collect().map(_.getLong(0)).toSeq === Seq(3L))
+    }
+  }
+
+  test("a boundary read by two actions evaluates its subtree once under local and reliable") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_replay_evals").toString
+    withDir(dir) {
+      for (m <- Seq("local", "reliable")) withMode(Some(m)) {
+        val evals = spark.sparkContext.longAccumulator(s"replay_evals_$m")
+        val tick = udf { (x: Long) => evals.add(1L); x }.asNondeterministic()
+        val b = Replay.stable(spark.range(1000).select(tick(col("id")).as("id")))
+        assert(b.count() === 1000L)
+        assert(b.agg(sum("id")).head().getLong(0) === 499500L)
+        assert(evals.value === 1000L, s"mode=$m")
+      }
+    }
+  }
+
+  test("no converted operator leaves a frame in the session cache for its next build") {
+    import spark.implicits._
+    import graft.graph.Graphs
+    val vecs = (1L to 12L).map(i => (i, Seq(i.toFloat, (i % 5).toFloat, (i % 3).toFloat - 1f)))
+      .toDF("vec_id", "embedding")
+    val docs = Seq((1L, "b a b a"), (2L, "a b a c")).toDF("doc_id", "text")
+    val builds: Seq[(String, () => DataFrame)] = Seq(
+      "triangleCount" -> (() => Graphs.triangleCount(graph)),
+      "pagerankInt" -> (() => Graphs.pagerankInt(graph)),
+      "kcorePeel" -> (() => Graphs.kcorePeel(graph, k = 3, rounds = 3)),
+      "bfsLayers" -> (() => Graphs.bfsLayers(graph, Seq(6L).toDF("s"), "s", rounds = 3)),
+      "labelPropagate" -> (() => Graphs.labelPropagate(graph, rounds = 2)),
+      "connectedComponents" -> (() => graft.dedup.Clusters.connectedComponents(
+        (1L to 6L).toDF("id"), "id", graph, "src", "dst", driverCollectMax = 0L)),
+      "mmrRerankQuantized" -> (() => graft.sim.Similarity.mmrRerankQuantized(
+        vecs.filter(col("vec_id") <= 3L), vecs, "vec_id", "embedding", "vec_id", "embedding", c = 4, k = 2)),
+      "pca2ProjectQuantized" -> (() =>
+        graft.sim.LinAlg.pca2ProjectQuantized(vecs, "vec_id", "embedding", iters = 2)),
+      "suffixRanks" -> (() => graft.dedup.SuffixRanks.suffixRanks(docs, "doc_id", "text", depth = 2)))
+    spark.catalog.clearCache()
+    for ((name, build) <- builds) withMode(None) {
+      assert(build().collect().nonEmpty, name)
+      val pinned = build().queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }
+      assert(pinned.isEmpty, s"$name: the second build reads ${pinned.size} cached frame(s)")
     }
   }
 }
