@@ -139,6 +139,10 @@ class Versioned(val spark: SparkSession, val root: String,
 
   def exists(table: String): Boolean = latestVersion(table).isDefined
 
+  /** The one error for an operation on a table that has no version. */
+  private def missing(table: String): Nothing =
+    throw new java.util.NoSuchElementException(s"versioned table $table does not exist")
+
   private def readManifest(table: String, v: Long): Seq[String] = {
     val p = manifestPath(table, v)
     val in = metaFs(p).open(p)
@@ -150,6 +154,7 @@ class Versioned(val spark: SparkSession, val root: String,
   private val BasePrefix = "#base "
   private val CommitPrefix = "#commit "
   private val DvPrefix = "#dv "
+  private val MaxAttempts = 10 // lost publish races before transact aborts
 
   /** One manifest data entry: a file plus its skipping stats — zero or
     * more (column, min, max) triples (`rel|c1|lo1|hi1|c2|lo2|hi2|…`; the
@@ -465,8 +470,7 @@ class Versioned(val spark: SparkSession, val root: String,
     * range layouts only ever prune their one sort dimension. */
   def readPrunedBox(table: String, preds: Seq[(String, Long, Long)]): DataFrame = {
     require(preds.nonEmpty, "readPrunedBox: at least one predicate")
-    val v = latestVersion(table).getOrElse(
-      throw new java.util.NoSuchElementException(s"versioned table $table does not exist"))
+    val v = latestVersion(table).getOrElse(missing(table))
     // resolve ONCE: files, dvs, and the empty-case schema all derive from
     // the same snapshot (the old per-helper resolves re-read up to
     // checkpointInterval manifests per query — 2-3x the metadata IO)
@@ -514,8 +518,7 @@ class Versioned(val spark: SparkSession, val root: String,
     * `read(table).filter(col === value)` exactly; the row predicate is
     * re-applied regardless. */
   def readPoint(table: String, statsCol: String, value: Long): DataFrame = {
-    val v = latestVersion(table).getOrElse(
-      throw new java.util.NoSuchElementException(s"versioned table $table does not exist"))
+    val v = latestVersion(table).getOrElse(missing(table))
     val files = pointFiles(table, v, statsCol, value)
     val df =
       if (files.isEmpty) readVersion(table, v).limit(0) // schema-only
@@ -555,8 +558,7 @@ class Versioned(val spark: SparkSession, val root: String,
   /** Read the latest snapshot — pinned at call time: commits that land after
     * the manifest is chosen do not affect this DataFrame's files. */
   def read(table: String, mergeSchema: Boolean = false): DataFrame = {
-    val v = latestVersion(table).getOrElse(
-      throw new java.util.NoSuchElementException(s"versioned table $table does not exist"))
+    val v = latestVersion(table).getOrElse(missing(table))
     readVersion(table, v, mergeSchema)
   }
 
@@ -615,12 +617,7 @@ class Versioned(val spark: SparkSession, val root: String,
       val hit = dvCache.get(key)
       if (hit != null) return hit
     }
-    val total = dvs.map { rel =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(dataDir(table), rel), conf))
-      try r.getRecordCount finally r.close()
-    }.sum
+    val total = footerRows(table, dvs)
     val positions =
       if (total > dvPredicateMax) None
       else if (total <= dvDirectCollectMax) {
@@ -724,6 +721,27 @@ class Versioned(val spark: SparkSession, val root: String,
     }
   }
 
+  /** Rows in a table's data or sidecar files, from their parquet footers
+    * (metadata only, no data page read). */
+  private def footerRows(table: String, rels: Seq[String]): Long = rels.map { rel =>
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(dataDir(table), rel), conf))
+    try r.getRecordCount finally r.close()
+  }.sum
+
+  /** Each row of `scan` (a read of `snap`'s files, projected to `keep`)
+    * tagged with its (`__dv_file`, `__dv_pos`) address, minus the rows
+    * `snap`'s deletion vectors already delete. */
+  private def liveRows(table: String, snap: Snap, scan: DataFrame,
+                       keep: org.apache.spark.sql.Column*): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val tagged = scan.select(keep ++ Seq(relOfPath(col("_metadata.file_path")).as("__dv_file"),
+      col("_metadata.row_index").as("__dv_pos")): _*)
+    if (snap.dvs.isEmpty) tagged
+    else tagged.join(spark.read.parquet(snap.dvs.map(abs(table, _)): _*),
+      Seq("__dv_file", "__dv_pos"), "left_anti")
+  }
+
   /** Stage a deletion-vector sidecar (rows: `__dv_file` string,
     * `__dv_pos` long) under a fresh commit dir; returns its manifest
     * `#dv` lines. */
@@ -743,52 +761,31 @@ class Versioned(val spark: SparkSession, val root: String,
     * publishes nothing — delete converges). Returns the committed version,
     * or None when nothing matched.
     *
-    * OCC like [[mergeByKey]]: the positions are computed against a pinned
-    * base; losing the publish race recomputes against the winner. Physical
-    * reclamation is [[purgeDeletes]]; time travel to pre-delete versions
-    * keeps working (the sidecar is version-addressed like any file). */
-  def deleteWhere(table: String, pred: org.apache.spark.sql.Column,
-                  maxAttempts: Int = 10): Option[Long] = {
-    import org.apache.spark.sql.functions.col
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(table).getOrElse(
-        throw new java.util.NoSuchElementException(s"versioned table $table does not exist"))
+    * OCC through [[transact]]: a lost race recomputes the positions and
+    * restages the sidecar against the winner. Physical reclamation is
+    * [[purgeDeletes]]; time travel to pre-delete versions keeps working
+    * (the sidecar is version-addressed like any file). */
+  def deleteWhere(table: String, pred: org.apache.spark.sql.Column): Option[Long] =
+    transact[Option[Long]](table, "delete from") { pinned =>
+      val base = pinned.getOrElse(missing(table))
       val snap = resolve(table, base)
-      if (snap.entries.isEmpty) return None
-      // predicate first (pushdown + pruning), THEN subtract existing
-      // vectors — only candidate rows pay the anti-join
-      val candidates = spark.read
-        .parquet(snap.entries.map(e => abs(table, e.rel)): _*)
-        .filter(pred)
-        .select(relOfPath(col("_metadata.file_path")).as("__dv_file"),
-          col("_metadata.row_index").as("__dv_pos"))
-      val doomed =
-        if (snap.dvs.isEmpty) candidates
-        else candidates.join(spark.read.parquet(snap.dvs.map(abs(table, _)): _*),
-          Seq("__dv_file", "__dv_pos"), "left_anti")
-      val fresh = stageDv(table, doomed)
-      // the count rides the footers of the files just written — no second scan
-      val nDoomed = fresh.map(_.stripPrefix(DvPrefix)).map { rel =>
-        val p = new Path(dataDir(table), rel)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-        try r.getRecordCount finally r.close()
-      }.sum
-      if (nDoomed == 0L) {
-        fresh.map(_.stripPrefix(DvPrefix)).foreach(rel =>
-          fs(dataDir(table)).delete(new Path(dataDir(table), rel), false))
-        return None
+      if (snap.entries.isEmpty) Left(None)
+      else {
+        // predicate first (pushdown + pruning), THEN subtract existing
+        // vectors — only candidate rows pay the anti-join
+        val fresh = stageDv(table, liveRows(table, snap,
+          spark.read.parquet(snap.entries.map(e => abs(table, e.rel)): _*).filter(pred)))
+        val rels = fresh.map(_.stripPrefix(DvPrefix))
+        // the count rides the footers of the files just written — no second scan
+        if (footerRows(table, rels) == 0L) {
+          rels.foreach(rel => fs(dataDir(table)).delete(new Path(dataDir(table), rel), false))
+          Left(None)
+        }
+        // appendManifestLines: O(1) delta normally, full materialization at
+        // checkpoint versions — delete-heavy histories keep bounded chains
+        else Right((appendManifestLines(table, Some(base), fresh, Map.empty), Some(base + 1L)))
       }
-      // appendManifestLines: O(1) delta normally, full materialization at
-      // checkpoint versions — delete-heavy histories keep bounded chains
-      if (publish(table, base + 1L, appendManifestLines(table, Some(base), fresh, Map.empty)))
-        return Some(base + 1L)
-      attempt += 1 // lost a race: recompute against the winner's snapshot
     }
-    throw new java.io.IOException(
-      s"versioned delete from $table lost $maxAttempts races — aborting")
-  }
 
   /** MERGE-ON-READ UPDATE: rewrite the rows matching `pred` with the `set`
     * expressions (each may reference the row's old values) as ONE atomic
@@ -801,68 +798,56 @@ class Versioned(val spark: SparkSession, val root: String,
     * The matched set is computed ONCE (one scan, predicate pushed down,
     * existing vectors subtracted) and staged; the sidecar and the new data
     * files are then derived from that staging read, so the deleted
-    * positions and the appended rows can never disagree. OCC like
-    * [[deleteWhere]]: a lost race recomputes against the winner. */
+    * positions and the appended rows can never disagree. OCC through
+    * [[transact]]: a lost race recomputes and restages against the winner. */
   def updateWhere(table: String, pred: org.apache.spark.sql.Column,
                   set: Map[String, org.apache.spark.sql.Column],
-                  statsCol: Option[String] = None,
-                  maxAttempts: Int = 10): Option[Long] = {
+                  statsCol: Option[String] = None): Option[Long] = {
     import org.apache.spark.sql.functions.col
     require(set.nonEmpty, "updateWhere: empty SET clause")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(table).getOrElse(
-        throw new java.util.NoSuchElementException(s"versioned table $table does not exist"))
+    transact[Option[Long]](table, "update of") { pinned =>
+      val base = pinned.getOrElse(missing(table))
       val snap = resolve(table, base)
-      if (snap.entries.isEmpty) return None
-      // mergeSchema, like mergeByKey/compact: the first file is the OLDEST —
-      // taking its columns (or one sampled footer) would silently drop
-      // schema-evolved columns from the rewritten rows, nulling them out
-      val full = spark.read.option("mergeSchema", "true")
-        .parquet(snap.entries.map(e => abs(table, e.rel)): _*)
-      val dataCols = full.columns.toSeq
-      set.keys.foreach(k => require(dataCols.contains(k),
-        s"updateWhere: SET column '$k' is not in the table schema"))
-      val matchedRaw = full
-        .filter(pred)
-        .select(col("*"),
-          relOfPath(col("_metadata.file_path")).as("__dv_file"),
-          col("_metadata.row_index").as("__dv_pos"))
-      val matched =
-        if (snap.dvs.isEmpty) matchedRaw
-        else matchedRaw.join(spark.read.parquet(snap.dvs.map(abs(table, _)): _*),
-          Seq("__dv_file", "__dv_pos"), "left_anti")
-      // one scan lands (old position + updated values) together in a
-      // staging dir; sidecar and data files derive from THAT, not from a
-      // second scan that might not see the same rows
-      val stagingId = newCommitId("u") + ".staging"
-      val stagingDir = new Path(dataDir(table), stagingId)
-      val updated = set.foldLeft(matched) { case (df, (c, e)) => df.withColumn(c, e) }
-      // a SET expression must not retype its column — the appended files
-      // would diverge from the snapshot's schema and poison later reads
-      dataCols.foreach { c =>
-        val (was, is) = (matched.schema(c).dataType, updated.schema(c).dataType)
-        require(was == is,
-          s"updateWhere: SET retypes column '$c' from $was to $is — cast the expression back")
+      if (snap.entries.isEmpty) Left(None)
+      else {
+        // mergeSchema, like mergeByKey/compact: the first file is the OLDEST —
+        // taking its columns (or one sampled footer) would silently drop
+        // schema-evolved columns from the rewritten rows, nulling them out
+        val full = spark.read.option("mergeSchema", "true")
+          .parquet(snap.entries.map(e => abs(table, e.rel)): _*)
+        val dataCols = full.columns.toSeq
+        set.keys.foreach(k => require(dataCols.contains(k),
+          s"updateWhere: SET column '$k' is not in the table schema"))
+        val matched = liveRows(table, snap, full.filter(pred), col("*"))
+        // one scan lands (old position + updated values) together in a
+        // staging dir; sidecar and data files derive from THAT, not from a
+        // second scan that might not see the same rows
+        val stagingId = newCommitId("u") + ".staging"
+        val stagingDir = new Path(dataDir(table), stagingId)
+        val updated = set.foldLeft(matched) { case (df, (c, e)) => df.withColumn(c, e) }
+        // a SET expression must not retype its column — the appended files
+        // would diverge from the snapshot's schema and poison later reads
+        dataCols.foreach { c =>
+          val (was, is) = (matched.schema(c).dataType, updated.schema(c).dataType)
+          require(was == is,
+            s"updateWhere: SET retypes column '$c' from $was to $is — cast the expression back")
+        }
+        updated.select((Seq("__dv_file", "__dv_pos") ++ dataCols).map(col): _*)
+          .write.parquet(stagingDir.toString)
+        val staged = spark.read.parquet(stagingDir.toString)
+        val nMatched = staged.count()
+        if (nMatched == 0L) {
+          fs(stagingDir).delete(stagingDir, true)
+          Left(None)
+        } else {
+          val dvFresh = stageDv(table, staged.select("__dv_file", "__dv_pos"))
+          val dataFresh = stage(table, staged.select(dataCols.map(col): _*), statsCol.toSeq)
+          fs(stagingDir).delete(stagingDir, true)
+          Right((appendManifestLines(table, Some(base), dataFresh ++ dvFresh, Map.empty),
+            Some(base + 1L)))
+        }
       }
-      updated.select((Seq("__dv_file", "__dv_pos") ++ dataCols).map(col): _*)
-        .write.parquet(stagingDir.toString)
-      val staged = spark.read.parquet(stagingDir.toString)
-      val nMatched = staged.count()
-      if (nMatched == 0L) {
-        fs(stagingDir).delete(stagingDir, true)
-        return None
-      }
-      val dvFresh = stageDv(table, staged.select("__dv_file", "__dv_pos"))
-      val dataFresh = stage(table, staged.select(dataCols.map(col): _*), statsCol.toSeq)
-      fs(stagingDir).delete(stagingDir, true)
-      if (publish(table, base + 1L,
-          appendManifestLines(table, Some(base), dataFresh ++ dvFresh, Map.empty)))
-        return Some(base + 1L)
-      attempt += 1
     }
-    throw new java.io.IOException(
-      s"versioned update of $table lost $maxAttempts races — aborting")
   }
 
   /** PURGE (the REORG PURGE maintenance op): physically apply the deletion
@@ -871,32 +856,25 @@ class Versioned(val spark: SparkSession, val root: String,
     * `#dv` lines. Returns (version, filesRewritten), or None when the table
     * has no deletion vectors. After a purge + [[vacuum]], the sidecars and
     * the pre-image files are reclaimed. */
-  def purgeDeletes(table: String, statsCol: Option[String] = None,
-                   maxAttempts: Int = 10): Option[(Long, Int)] = {
-    import org.apache.spark.sql.functions.col
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(table).getOrElse(
-        throw new java.util.NoSuchElementException(s"versioned table $table does not exist"))
+  def purgeDeletes(table: String, statsCol: Option[String] = None): Option[(Long, Int)] =
+    transact[Option[(Long, Int)]](table, "purge of") { pinned =>
+      val base = pinned.getOrElse(missing(table))
       val snap = resolve(table, base)
-      if (snap.dvs.isEmpty) return None
-      val dirty = spark.read.parquet(snap.dvs.map(abs(table, _)): _*)
-        .select("__dv_file").distinct().collect().map(_.getString(0)).toSet
-      val (affected, untouched) = snap.entries.partition(e => dirty.contains(relKey(e.rel)))
-      val fresh =
-        if (affected.isEmpty) Nil // vectors dangle on already-rewritten files
-        else stage(table,
-          readWithDvs(table, affected.map(e => abs(table, e.rel)), snap.dvs,
-            mergeSchema = true),
-          statsCol.toSeq)
-      val markers = snap.txns.toSeq.sortBy(_._1).map { case (a, b) => s"$TxnPrefix$a $b" }
-      if (publish(table, base + 1L, untouched.map(_.line) ++ fresh ++ markers))
-        return Some((base + 1L, affected.size))
-      attempt += 1
+      if (snap.dvs.isEmpty) Left(None)
+      else {
+        val dirty = spark.read.parquet(snap.dvs.map(abs(table, _)): _*)
+          .select("__dv_file").distinct().collect().map(_.getString(0)).toSet
+        val (affected, untouched) = snap.entries.partition(e => dirty.contains(relKey(e.rel)))
+        val fresh =
+          if (affected.isEmpty) Nil // vectors dangle on already-rewritten files
+          else stage(table,
+            readWithDvs(table, affected.map(e => abs(table, e.rel)), snap.dvs,
+              mergeSchema = true),
+            statsCol.toSeq)
+        Right((untouched.map(_.line) ++ fresh ++ txnMarkers(snap.txns),
+          Some((base + 1L, affected.size))))
+      }
     }
-    throw new java.io.IOException(
-      s"versioned purge of $table lost $maxAttempts races — aborting")
-  }
 
   /** Stage `df` under a fresh immutable commit dir; returns the MANIFEST
     * LINES (relative paths, plus min/max skipping stats on `statsCol` when
@@ -1021,23 +999,41 @@ class Versioned(val spark: SparkSession, val root: String,
         lastErr)
     }
 
+  /** THE optimistic-concurrency loop of every commit but [[cloneTable]]'s
+    * create-only publish: pin the latest version (None: no table yet) and
+    * run `step` on it. The step finishes without publishing (`Left(result)`:
+    * a no-op, a raced replay, an append that already landed) or returns the
+    * next manifest and its result (`Right((lines, result))`). A lost
+    * [[publish]] re-pins the winner and runs `step` again; after
+    * `MaxAttempts` losses the operation aborts with an IOException. */
+  private def transact[A](table: String, what: String)
+                         (step: Option[Long] => Either[A, (Seq[String], A)]): A = {
+    var lost = 0
+    while (lost < MaxAttempts) {
+      val base = latestVersion(table)
+      step(base) match {
+        case Left(done) => return done
+        case Right((lines, won)) => if (publish(table, base.getOrElse(0L) + 1L, lines)) return won
+      }
+      lost += 1
+    }
+    throw new java.io.IOException(s"versioned $what $table lost $lost races — aborting")
+  }
+
+  /** The `#txn` marker lines of a watermark map, in appId order. */
+  private def txnMarkers(txns: Map[String, Long]): Seq[String] =
+    txns.toSeq.sortBy(_._1).map { case (a, b) => s"$TxnPrefix$a $b" }
+
   /** OVERWRITE commit: the new snapshot is exactly `df`. Returns the
-    * committed version. Optimistic concurrency: on a lost race the commit
-    * retries at the next version — an overwrite does not depend on the
-    * losing snapshot, so retrying is always semantically safe. Overwrites
-    * write a FULL manifest (a truncate-rebuild is a new table generation:
-    * txn watermarks reset, delta chains restart). */
-  def commit(table: String, df: DataFrame, maxAttempts: Int = 10,
+    * committed version. OCC through [[transact]], re-publishing the files
+    * staged once — an overwrite does not depend on the losing snapshot, so
+    * retrying is always semantically safe. Overwrites write a FULL manifest
+    * (a truncate-rebuild is a new table generation: txn watermarks reset,
+    * delta chains restart). */
+  def commit(table: String, df: DataFrame,
              statsCol: Option[String] = None, statsCols: Seq[String] = Nil): Long = {
     val files = stage(table, df, statsCol.toSeq ++ statsCols)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val next = latestVersion(table).getOrElse(0L) + 1L
-      if (publish(table, next, files)) return next
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"versioned commit of $table lost $maxAttempts races — aborting")
+    transact[Long](table, "commit of")(base => Right((files, base.getOrElse(0L) + 1L)))
   }
 
   /** Z-ORDER CLUSTERED overwrite commit (the Delta/Iceberg
@@ -1054,7 +1050,7 @@ class Versioned(val spark: SparkSession, val root: String,
     * `numFiles` sizes the layout: at 100 TB pick data-size/128 MB.
     */
   def commitZOrdered(table: String, df: DataFrame, zCols: Seq[String],
-                     numFiles: Int, bits: Int = 8, maxAttempts: Int = 10): Long = {
+                     numFiles: Int, bits: Int = 8): Long = {
     require(zCols.nonEmpty, "commitZOrdered: at least one z-order column")
     require(numFiles >= 1, s"commitZOrdered: numFiles=$numFiles")
     import org.apache.spark.sql.functions.{col, min, max}
@@ -1069,7 +1065,7 @@ class Versioned(val spark: SparkSession, val root: String,
       .repartitionByRange(numFiles, org.apache.spark.sql.functions.col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
-    commit(table, arranged, maxAttempts, statsCols = zCols)
+    commit(table, arranged, statsCols = zCols)
   }
 
   /** Manifest lines for an append of `fresh` on top of `base`: a DELTA
@@ -1079,53 +1075,41 @@ class Versioned(val spark: SparkSession, val root: String,
   private def appendManifestLines(table: String, base: Option[Long], fresh: Seq[String],
                                   txnUpdate: Map[String, Long]): Seq[String] = {
     val next = base.getOrElse(0L) + 1L
-    def markers(m: Map[String, Long]): Seq[String] =
-      m.toSeq.sortBy(_._1).map { case (a, b) => s"$TxnPrefix$a $b" }
     base match {
       case Some(b) if next % checkpointInterval != 0L =>
-        s"$BasePrefix$b" +: (fresh ++ markers(txnUpdate))
+        s"$BasePrefix$b" +: (fresh ++ txnMarkers(txnUpdate))
       case _ => // first version, or checkpoint: materialize the full snapshot
         val snap = base.map(resolve(table, _)).getOrElse(Snap(Nil, Map.empty, Nil))
         snap.entries.map(_.line) ++ fresh ++ snap.dvs.map(DvPrefix + _) ++
-          markers(snap.txns ++ txnUpdate)
+          txnMarkers(snap.txns ++ txnUpdate)
     }
   }
 
   /** APPEND commit: new snapshot = previous snapshot's files + `df`'s files.
-    * O(delta) manifest lines — history is referenced, never rewritten. On a
-    * lost race the manifest is REBUILT against the winner's version, so no
-    * concurrent append is dropped (the failure mode a directory-swap append
-    * cannot exclude). */
-  def commitAppend(table: String, df: DataFrame, maxAttempts: Int = 10,
-                   statsCol: Option[String] = None): Long =
-    appendCommit(table, stage(table, df, statsCol.toSeq), maxAttempts)
+    * O(delta) manifest lines — history is referenced, never rewritten. `df`
+    * is staged once; a lost [[transact]] race REBUILDS only the manifest
+    * against the winner's version, so no concurrent append is dropped (the
+    * failure mode a directory-swap append cannot exclude). */
+  def commitAppend(table: String, df: DataFrame, statsCol: Option[String] = None): Long =
+    appendCommit(table, stage(table, df, statsCol.toSeq))
 
   /** The metadata half of [[commitAppend]] (staged lines → committed
     * version). Package-visible: the spec drives hundreds of metadata-only
     * appends through it to pin the bounded-listing/bounded-chain contract
     * without paying hundreds of parquet write jobs. */
-  private[io] def appendCommit(table: String, fresh: Seq[String],
-                               maxAttempts: Int = 10): Long = {
+  private[io] def appendCommit(table: String, fresh: Seq[String]): Long = {
     val freshRels = fresh.filterNot(_.startsWith("#")).map(parseEntry(_).rel).toSet
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(table)
+    transact[Long](table, "append to") { base =>
       // already-landed check: after a CONSERVATIVE publish loss (our rename
       // actually won but read-back could not prove it) the retry would
       // re-append the same files on top of a base that already carries them
       // — duplicated rows. Our staged rels are globally unique, so presence
       // in the base snapshot means OUR commit stands: return it.
-      base.foreach { b =>
-        if (freshRels.nonEmpty &&
-            freshRels.subsetOf(resolve(table, b).entries.map(_.rel).toSet)) return b
-      }
-      val next = base.getOrElse(0L) + 1L
-      if (publish(table, next, appendManifestLines(table, base, fresh, Map.empty)))
-        return next
-      attempt += 1
+      val landed = base.filter(b => freshRels.nonEmpty &&
+        freshRels.subsetOf(resolve(table, b).entries.map(_.rel).toSet))
+      landed.toLeft((appendManifestLines(table, base, fresh, Map.empty),
+        base.getOrElse(0L) + 1L))
     }
-    throw new java.io.IOException(
-      s"versioned append to $table lost $maxAttempts races — aborting")
   }
 
   /** IDEMPOTENT append — the exactly-once streaming-sink primitive (the
@@ -1137,29 +1121,23 @@ class Versioned(val spark: SparkSession, val root: String,
     * with the SAME batchId — the watermark absorbs the replay, turning
     * at-least-once delivery into exactly-once table contents.
     *
-    * The watermark check re-runs against the CURRENT latest manifest inside
-    * the optimistic-retry loop, so even two racing replays of one batch
-    * cannot both land (the loser's rebuild sees the winner's marker).
-    * Batches must arrive in nondecreasing batchId order per appId (the
-    * Structured Streaming contract). Overwrite [[commit]] resets markers —
-    * a truncate-rebuild is a new table generation, document accordingly.
+    * `df` is staged once; the watermark check re-runs against the CURRENT
+    * latest manifest on every [[transact]] attempt, so even two racing
+    * replays of one batch cannot both land (the loser's rebuild sees the
+    * winner's marker). Batches must arrive in nondecreasing batchId order
+    * per appId (the Structured Streaming contract). Overwrite [[commit]]
+    * resets markers (a truncate-rebuild is a new table generation).
     */
   def commitAppendTxn(table: String, df: DataFrame, appId: String, batchId: Long,
-                      maxAttempts: Int = 10, statsCol: Option[String] = None): Option[Long] = {
+                      statsCol: Option[String] = None): Option[Long] = {
     if (lastTxn(table, appId).exists(_ >= batchId)) return None
     val fresh = stage(table, df, statsCol.toSeq)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(table)
+    transact[Option[Long]](table, "txn-append to") { base =>
       if (base.exists(v => resolve(table, v).txns.get(appId).exists(_ >= batchId)))
-        return None // raced replay: the winner already carries this batch
-      val next = base.getOrElse(0L) + 1L
-      if (publish(table, next, appendManifestLines(table, base, fresh, Map(appId -> batchId))))
-        return Some(next)
-      attempt += 1
+        Left(None) // raced replay: the winner already carries this batch
+      else Right((appendManifestLines(table, base, fresh, Map(appId -> batchId)),
+        Some(base.getOrElse(0L) + 1L)))
     }
-    throw new java.io.IOException(
-      s"versioned txn-append to $table lost $maxAttempts races — aborting")
   }
 
   /** MERGE (upsert-by-key) with FILE-LEVEL PRUNING: the new snapshot is
@@ -1183,13 +1161,12 @@ class Versioned(val spark: SparkSession, val root: String,
     *
     * `updates` must carry one row per key (the CDC row-image convention —
     * collapse upstream with [[graft.ops.Cdc.applyChangelog]] if needed).
-    * OCC: the merge is computed against a pinned base version; losing the
-    * publish race RE-RUNS the whole merge against the winner's snapshot
-    * (a write-write conflict must re-read, not blind-retry). Txn watermarks
-    * carry forward. Returns the committed version.
+    * OCC through [[transact]]: losing the publish race RE-RUNS and restages
+    * the whole merge against the winner's snapshot (a write-write conflict
+    * must re-read, not blind-retry). Txn watermarks carry forward. Returns
+    * the committed version.
     */
-  def mergeByKey(table: String, updates: DataFrame, keyCol: String,
-                 maxAttempts: Int = 10): Long = {
+  def mergeByKey(table: String, updates: DataFrame, keyCol: String): Long = {
     import org.apache.spark.sql.functions.{col, count, lit, min => fmin, max => fmax}
     import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType}
     val keyType = updates.schema(keyCol).dataType
@@ -1201,16 +1178,13 @@ class Versioned(val spark: SparkSession, val root: String,
       count(lit(1)), count(col(keyCol)),
       fmin(col(keyCol)).cast("long"), fmax(col(keyCol)).cast("long")).head()
     if (bounds.getLong(0) == 0L) // genuinely empty updates: current version stands
-      return latestVersion(table).getOrElse(
-        throw new java.util.NoSuchElementException(s"versioned table $table does not exist"))
+      return latestVersion(table).getOrElse(missing(table))
     require(bounds.getLong(1) == bounds.getLong(0),
       s"mergeByKey: ${bounds.getLong(0) - bounds.getLong(1)} update row(s) carry a " +
       s"null '$keyCol' — an upsert key must be non-null")
     val (uLo, uHi) = (bounds.getLong(2), bounds.getLong(3))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(table).getOrElse(
-        throw new java.util.NoSuchElementException(s"versioned table $table does not exist"))
+    transact[Long](table, "merge into") { pinned =>
+      val base = pinned.getOrElse(missing(table))
       val snap = resolve(table, base)
       val (affected, untouched) = snap.entries.partition { e =>
         e.statsFor(keyCol) match {
@@ -1229,32 +1203,11 @@ class Versioned(val spark: SparkSession, val root: String,
           .join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
           .unionByName(updates, allowMissingColumns = true)
       val fresh = stage(table, survivors, Seq(keyCol))
-      val markers = snap.txns.toSeq.sortBy(_._1).map { case (a, b) => s"$TxnPrefix$a $b" }
       val dvCarry = if (untouched.isEmpty) Nil else snap.dvs.map(DvPrefix + _)
-      if (publish(table, base + 1L, untouched.map(_.line) ++ fresh ++ dvCarry ++ markers))
-        return base + 1L
-      attempt += 1 // lost a race: recompute against the winner's snapshot
+      Right((untouched.map(_.line) ++ fresh ++ dvCarry ++ txnMarkers(snap.txns), base + 1L))
     }
-    throw new java.io.IOException(
-      s"versioned merge into $table lost $maxAttempts races — aborting")
   }
 
-  /** COMPACTION (the OPTIMIZE operation): bin-pack every data file smaller
-    * than `smallBytes` into rewritten files of ~`targetBytes`, leaving
-    * large files untouched — the answer to the small-file problem a
-    * streaming `commitAppendTxn` sink accumulates (each micro-batch lands
-    * O(partitions) files; a day of 1-minute batches is 10⁴–10⁵ files whose
-    * per-file open/footer cost comes to dominate reads long before data
-    * volume does). Content is IDENTICAL by construction (small files are
-    * read and rewritten, nothing else changes), so readers see the same
-    * rows; pinned readers of older versions are untouched (their files
-    * remain until [[vacuum]]); txn watermarks and untouched files' stats
-    * carry forward; rewritten files get fresh footer stats when `statsCol`
-    * is set. OCC like append: a lost race rebuilds against the winner
-    * (compaction commutes with appends — the re-run simply re-partitions
-    * the small-file set that now exists). Returns (version, filesBefore,
-    * filesAfter), or None when fewer than 2 small files exist.
-    */
   /** RESTORE (the public Delta `RESTORE TABLE … TO VERSION` idea): publish
     * a NEW version whose data content — file entries, their skipping stats,
     * and deletion-vector sidecars — is exactly `toVersion`'s snapshot.
@@ -1271,21 +1224,14 @@ class Versioned(val spark: SparkSession, val root: String,
     * the latest version, publishes nothing). Restored-to versions must not
     * have been [[vacuum]]ed (reads would fail; vacuum keeps what its
     * `keepLast` retains). */
-  def restore(table: String, toVersion: Long, maxAttempts: Int = 10): Long = {
+  def restore(table: String, toVersion: Long): Long = {
     val snap = resolve(table, toVersion) // throws if the manifest is gone
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = latestVersion(table).getOrElse(
-        throw new java.util.NoSuchElementException(s"versioned table $table does not exist"))
-      if (cur == toVersion) return cur
-      val markers = resolve(table, cur).txns.toSeq.sortBy(_._1)
-        .map { case (a, b) => s"$TxnPrefix$a $b" }
-      val lines = snap.entries.map(_.line) ++ snap.dvs.map(DvPrefix + _) ++ markers
-      if (publish(table, cur + 1L, lines)) return cur + 1L
-      attempt += 1
+    transact[Long](table, "restore of") { pinned =>
+      val cur = pinned.getOrElse(missing(table))
+      if (cur == toVersion) Left(cur)
+      else Right((snap.entries.map(_.line) ++ snap.dvs.map(DvPrefix + _) ++
+        txnMarkers(resolve(table, cur).txns), cur + 1L))
     }
-    throw new java.io.IOException(
-      s"versioned restore of $table lost $maxAttempts races — aborting")
   }
 
   /** SHALLOW CLONE (the public Delta `CREATE TABLE … SHALLOW CLONE` idea):
@@ -1310,8 +1256,7 @@ class Versioned(val spark: SparkSession, val root: String,
                  version: Option[Long] = None): Long = {
     require(!exists(dstTable),
       s"cloneTable: target $dstTable already exists — clone creates, never overwrites")
-    val v = version.getOrElse(latestVersion(srcTable).getOrElse(
-      throw new java.util.NoSuchElementException(s"versioned table $srcTable does not exist")))
+    val v = version.getOrElse(latestVersion(srcTable).getOrElse(missing(srcTable)))
     val snap = resolve(srcTable, v)
     val lines = snap.entries.map(e => e.copy(rel = abs(srcTable, e.rel)).line) ++
       snap.dvs.map(d => DvPrefix + abs(srcTable, d))
@@ -1321,39 +1266,49 @@ class Versioned(val spark: SparkSession, val root: String,
     1L
   }
 
+  /** COMPACTION (the OPTIMIZE operation): bin-pack every data file smaller
+    * than `smallBytes` into rewritten files of ~`targetBytes`, leaving
+    * large files untouched — the answer to the small-file problem a
+    * streaming `commitAppendTxn` sink accumulates (each micro-batch lands
+    * O(partitions) files; a day of 1-minute batches is 10⁴–10⁵ files whose
+    * per-file open/footer cost comes to dominate reads long before data
+    * volume does). Content is IDENTICAL by construction (small files are
+    * read and rewritten, nothing else changes), so readers see the same
+    * rows; pinned readers of older versions are untouched (their files
+    * remain until [[vacuum]]); txn watermarks and untouched files' stats
+    * carry forward; rewritten files get fresh footer stats when `statsCol`
+    * is set. OCC through [[transact]]: a lost race restages against the
+    * winner (compaction commutes with appends — the re-run simply
+    * re-partitions the small-file set that now exists). Returns (version,
+    * filesBefore, filesAfter), or None when fewer than 2 small files exist.
+    */
   def compact(table: String, smallBytes: Long = 32L << 20,
               targetBytes: Long = 128L << 20,
-              statsCol: Option[String] = None,
-              maxAttempts: Int = 10): Option[(Long, Int, Int)] = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(table).getOrElse(
-        throw new java.util.NoSuchElementException(s"versioned table $table does not exist"))
+              statsCol: Option[String] = None): Option[(Long, Int, Int)] =
+    transact[Option[(Long, Int, Int)]](table, "compaction of") { pinned =>
+      val base = pinned.getOrElse(missing(table))
       val snap = resolve(table, base)
       val f = fs(dataDir(table))
       val sized = snap.entries.map(e => e -> f.getFileStatus(new Path(abs(table, e.rel))).getLen)
       val (small, big) = sized.partition(_._2 < smallBytes)
-      if (small.size < 2) return None // nothing worth packing
-      val totalSmall = small.map(_._2).sum
-      val nOut = math.max(1, math.ceil(totalSmall.toDouble / targetBytes).toInt)
-      // mergeSchema: a schema-evolved table's small files may carry columns
-      // the oldest one lacks — a first-file-schema read would silently DROP
-      // them from the rewrite (data loss); the union schema never can.
-      // Deletion vectors are applied to the files being packed (no
-      // resurrection) and carried forward for the untouched big files.
-      val packed = readWithDvs(table, small.map(e => abs(table, e._1.rel)),
-          snap.dvs, mergeSchema = true)
-        .repartition(nOut)
-      val fresh = stage(table, packed, statsCol.toSeq)
-      val markers = snap.txns.toSeq.sortBy(_._1).map { case (a, b) => s"$TxnPrefix$a $b" }
-      val dvCarry = if (big.isEmpty) Nil else snap.dvs.map(DvPrefix + _)
-      if (publish(table, base + 1L, big.map(_._1.line) ++ fresh ++ dvCarry ++ markers))
-        return Some((base + 1L, snap.entries.size, big.size + fresh.size))
-      attempt += 1
+      if (small.size < 2) Left(None) // nothing worth packing
+      else {
+        val totalSmall = small.map(_._2).sum
+        val nOut = math.max(1, math.ceil(totalSmall.toDouble / targetBytes).toInt)
+        // mergeSchema: a schema-evolved table's small files may carry columns
+        // the oldest one lacks — a first-file-schema read would silently DROP
+        // them from the rewrite (data loss); the union schema never can.
+        // Deletion vectors are applied to the files being packed (no
+        // resurrection) and carried forward for the untouched big files.
+        val packed = readWithDvs(table, small.map(e => abs(table, e._1.rel)),
+            snap.dvs, mergeSchema = true)
+          .repartition(nOut)
+        val fresh = stage(table, packed, statsCol.toSeq)
+        val dvCarry = if (big.isEmpty) Nil else snap.dvs.map(DvPrefix + _)
+        Right((big.map(_._1.line) ++ fresh ++ dvCarry ++ txnMarkers(snap.txns),
+          Some((base + 1L, snap.entries.size, big.size + fresh.size))))
+      }
     }
-    throw new java.io.IOException(
-      s"versioned compaction of $table lost $maxAttempts races — aborting")
-  }
 
   /** DESCRIBE HISTORY: one row per retained version — file/byte growth,
     * txn watermarks, and VACUUM HONESTY: `n_files_vacuumed` counts this

@@ -169,7 +169,7 @@ class RefineSelectSpec extends SparkSpec {
       s"bin sizes $counts vs ideal $ideal"))
 
     // the write-side contract: partitionBy(bin) → k balanced directories
-    val out = java.nio.file.Files.createTempDirectory("graft_bins").toString
+    val out = SparkSpec.scratchDir("graft_bins")
     df.withColumn("bin", RefineSelect.binOf(col("x"), bounds))
       .write.mode("overwrite").partitionBy("bin").parquet(out)
     val dirs = new java.io.File(out).listFiles().filter(_.getName.startsWith("bin="))
@@ -250,7 +250,7 @@ class RefineSelectSpec extends SparkSpec {
     val df = rows.toDF("doc_id", "text")
     // stream side written as FOUR files: the drained complete-mode
     // snapshot must be file-layout-independent
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift_stream").toString
+    val dir = SparkSpec.scratchDir("graft_drift_stream")
     df.repartition(4).write.mode("overwrite").parquet(dir)
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))

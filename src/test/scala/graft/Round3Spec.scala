@@ -69,7 +69,7 @@ class Round3Spec extends SparkSpec {
 
   test("streaming dropDuplicatesWithinWatermark removes in-horizon duplicates") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdd").toString
+    val dir = SparkSpec.scratchDir("graft_sdd")
     val ts0 = 1700000000000000L // µs
     Seq(
       (1L, ts0 + 1000000L, 10L, "click", 1.0, "{}"),
@@ -110,7 +110,7 @@ class Round3Spec extends SparkSpec {
 
   test("q77: merge-healed snapshot is row-identical to the source") {
     import graft.io.Warehouse
-    val wh = new Warehouse(spark, java.nio.file.Files.createTempDirectory("graft_m3").toString)
+    val wh = new Warehouse(spark, SparkSpec.scratchDir("graft_m3"))
     val o = Tables.orders(spark, sfDir)
     val split = lit("1997-01-01").cast("timestamp")
     wh.write("snap", o.withColumn("o_totalprice",

@@ -45,7 +45,7 @@ class Round4Spec extends SparkSpec {
     // a 13-vertex path graph (worst case for min-propagation)
     val vertices = (0L to 12L).toDF("id")
     val edges = (0L until 12L).map(i => (i, i + 1)).toDF("src", "dst")
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-chk").toString
+    val dir = SparkSpec.scratchDir("graft-cc-chk")
     val saved = Seq(Replay.ModeKey, Replay.DirKey).map(k => k -> spark.conf.getOption(k))
     val reliable = try {
       spark.conf.set(Replay.ModeKey, "reliable")

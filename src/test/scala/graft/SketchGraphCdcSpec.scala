@@ -169,7 +169,7 @@ class SketchGraphCdcSpec extends SparkSpec {
   test("commitAppendTxn: replays are no-ops, watermark survives later appends") {
     import spark.implicits._
     val vt = new Versioned(spark,
-      java.nio.file.Files.createTempDirectory("graft-txn").toString)
+      SparkSpec.scratchDir("graft-txn"))
     val batch = Seq(1L, 2L, 3L).toDF("x")
 
     assert(vt.commitAppendTxn("t", batch, "app", 0L).contains(1L))

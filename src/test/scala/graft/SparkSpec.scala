@@ -21,4 +21,17 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** One per-JVM root under `java.io.tmpdir` for every suite's scratch
+    * dirs, deleted by one shutdown hook, so a test run leaves nothing
+    * behind in the temp dir. */
+  private lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_test_scratch")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+    root
+  }
+
+  /** A fresh empty directory under the per-JVM scratch root. */
+  def scratchDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString
 }

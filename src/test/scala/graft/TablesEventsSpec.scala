@@ -25,7 +25,7 @@ class TablesEventsSpec extends SparkSpec {
     (5L, baseUs + 7L * 86400L * 1000000L, 13L, "view", 4.25, "{}"))
 
   private def writeNanosFixture(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("events_nanos").toString
+    val dir = SparkSpec.scratchDir("events_nanos")
     rowsUs.toDF("event_id", "ts_us", "user_id", "event_type", "value", "props")
       .select(col("event_id"), (col("ts_us") * 1000L).as("ts"), col("user_id"),
         col("event_type"), col("value"), col("props"))
@@ -34,7 +34,7 @@ class TablesEventsSpec extends SparkSpec {
   }
 
   private def writeMicrosFixture(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("events_micros").toString
+    val dir = SparkSpec.scratchDir("events_micros")
     rowsUs.toDF("event_id", "ts_us", "user_id", "event_type", "value", "props")
       .select(col("event_id"),
         expr("cast(timestamp_micros(ts_us) as timestamp_ntz)").as("ts"),
@@ -46,7 +46,7 @@ class TablesEventsSpec extends SparkSpec {
   private def writeInstantFixture(): String = {
     // the third physical shape a regen could ship: isAdjustedToUTC=true
     // (plain TIMESTAMP) — loads as TimestampType and takes the cast branch
-    val dir = java.nio.file.Files.createTempDirectory("events_instant").toString
+    val dir = SparkSpec.scratchDir("events_instant")
     rowsUs.toDF("event_id", "ts_us", "user_id", "event_type", "value", "props")
       .select(col("event_id"), timestamp_micros(col("ts_us")).as("ts"),
         col("user_id"), col("event_type"), col("value"), col("props"))
@@ -145,7 +145,7 @@ class TablesEventsSpec extends SparkSpec {
       assert(Tables.rowCount(spark, sfDir, t) === Tables.load(spark, sfDir, t).count(),
         s"footer count mismatch for $t")
     // a multi-file DIRECTORY sums per-file footers (the lake layout)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_frc").toString
+    val tmp = SparkSpec.scratchDir("graft_frc")
     Tables.load(spark, sfDir, "documents").repartition(3)
       .write.mode("overwrite").parquet(tmp)
     assert(Tables.footerRowCount(spark, tmp) ===
@@ -154,7 +154,7 @@ class TablesEventsSpec extends SparkSpec {
 
   test("footerRowCount: hive-partitioned (nested) layout counts fully; rewrite invalidates the cache") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_frc_part").toString
+    val tmp = SparkSpec.scratchDir("graft_frc_part")
     (1 to 100).map(i => (i.toLong, s"p${i % 4}")).toDF("id", "part")
       .write.mode("overwrite").partitionBy("part").parquet(tmp)
     // data files live under part=*/ subdirectories — a flat listing sees zero

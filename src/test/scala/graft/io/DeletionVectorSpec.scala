@@ -11,7 +11,7 @@ class DeletionVectorSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft-dv").toString
+    SparkSpec.scratchDir("graft-dv")
 
   private def keys(vt: Versioned, t: String): Set[Long] =
     vt.read(t).select("k").as[Long].collect().toSet

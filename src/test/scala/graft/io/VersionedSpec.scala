@@ -8,7 +8,7 @@ class VersionedSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft-versioned").toString
+    SparkSpec.scratchDir("graft-versioned")
 
   test("commit/read round-trip; overwrite advances the version") {
     val vt = new Versioned(spark, tmpRoot())
@@ -511,5 +511,115 @@ class VersionedSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       graft.SparkEntry.clonedVersionedFixture(spark, sfDir, kind)(drifted))
     assert(e.getMessage.contains(kind) && e.getMessage.contains("distinct kind"))
+  }
+
+  /** The nine operations that commit through Versioned's one OCC loop, on
+    * table t with `k`: `setup` builds t, `run` performs the op and returns
+    * its committed version, `keys` is t's exact key set afterwards on top
+    * of a racer's row 100 (the overwrite ops drop it by design), `what`
+    * names the op in its give-up error, and `check` asserts the op's own
+    * effect on its committed version. */
+  private case class OccOp(name: String, what: String, setup: Versioned => Unit,
+      run: Versioned => Long, keys: Set[Long], check: (Versioned, Long) => Unit = (_, _) => ())
+
+  private def occOps: Seq[OccOp] = {
+    def base(vt: Versioned): Unit = vt.commit("t", Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"))
+    def baseAnd4(vt: Versioned): Unit = { base(vt); vt.commitAppend("t", Seq((4L, "d")).toDF("k", "v")) }
+    def vOf(vt: Versioned, v: Long, k: Long): Seq[String] =
+      vt.readVersion("t", v).filter(col("k") === k).select("v").as[String].collect().toSeq
+    Seq(
+      OccOp("deleteWhere", "delete from", base,
+        _.deleteWhere("t", col("k") === 2L).get, Set(1L, 3L, 100L)),
+      OccOp("updateWhere", "update of", base,
+        _.updateWhere("t", col("k") === 2L, Map("v" -> lit("B"))).get, Set(1L, 2L, 3L, 100L),
+        (vt, v) => assert(vOf(vt, v, 2L) === Seq("B"))),
+      OccOp("purgeDeletes", "purge of", vt => { base(vt); vt.deleteWhere("t", col("k") === 3L) },
+        _.purgeDeletes("t").get._1, Set(1L, 2L, 100L),
+        (vt, v) => assert(vt.resolve("t", v).dvs.isEmpty, "purge drops every vector")),
+      OccOp("mergeByKey", "merge into", base,
+        _.mergeByKey("t", Seq((2L, "m"), (7L, "n")).toDF("k", "v"), "k"), Set(1L, 2L, 3L, 7L, 100L),
+        (vt, v) => assert(vOf(vt, v, 2L) === Seq("m") && vOf(vt, v, 7L) === Seq("n"))),
+      OccOp("compact", "compaction of", baseAnd4,
+        _.compact("t").get._1, Set(1L, 2L, 3L, 4L, 100L),
+        (vt, v) => assert(vt.snapshotFiles("t", v).size === 1, "every small file packed")),
+      OccOp("restore", "restore of", baseAnd4, _.restore("t", 1L), Set(1L, 2L, 3L)),
+      OccOp("commitAppendTxn", "txn-append to", base,
+        _.commitAppendTxn("t", Seq((5L, "e")).toDF("k", "v"), "app", 0L).get,
+        Set(1L, 2L, 3L, 5L, 100L),
+        (vt, _) => assert(vt.lastTxn("t", "app") === Some(0L))),
+      OccOp("commit", "commit of", base, _.commit("t", Seq((9L, "z")).toDF("k", "v")), Set(9L)),
+      OccOp("commitAppend", "append to", base,
+        _.commitAppend("t", Seq((6L, "f")).toDF("k", "v")), Set(1L, 2L, 3L, 6L, 100L)))
+  }
+
+  test("every commit op loses one race to a racer, rebuilds on the winner, and keeps its row") {
+    for (op <- occOps) {
+      val vt = new LosingVersioned(spark, tmpRoot())
+      op.setup(vt)
+      var racerV = -1L
+      vt.racer = Some(() => racerV = vt.commitAppend("t", Seq((100L, "racer")).toDF("k", "v")))
+      vt.publishCalls = 0
+      val v = op.run(vt)
+      assert(vt.racer.isEmpty && vt.publishCalls === 3, s"${op.name}: one loss, the racer, one win")
+      assert(v === racerV + 1L, s"${op.name} commits on top of the racer")
+      assert(vt.readVersion("t", racerV).filter(col("k") === 100L).count() === 1L,
+        s"${op.name}: the racer's commit stands")
+      assert(vt.read("t").select("k").as[Long].collect().toSet === op.keys, op.name)
+      op.check(vt, v)
+    }
+  }
+
+  test("every commit op gives up after exactly 10 lost publishes, naming itself") {
+    for (op <- occOps) {
+      val vt = new LosingVersioned(spark, tmpRoot())
+      op.setup(vt)
+      vt.alwaysLose = true
+      vt.publishCalls = 0
+      val e = intercept[java.io.IOException](op.run(vt))
+      assert(e.getMessage === s"versioned ${op.what} t lost 10 races — aborting", op.name)
+      assert(vt.publishCalls === 10, op.name)
+    }
+  }
+
+  test("one commit loop: Versioned publishes only from transact and cloneTable; no maxAttempts") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repository root: $root")
+    val file = root.resolve("graft/io/Versioned.scala")
+    val member = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r.unanchored
+    val call = """(?<![\w.])(?<!def )publish\(""".r
+    val literal = """"(?:[^"\\]|\\.)*"""".r
+    val lines = java.nio.file.Files.readAllLines(file).asScala.toSeq
+    // the class member each line sits in (members are declared at two-space indent)
+    val owner = lines.scanLeft("")((cur, l) => l match { case member(n) => n; case _ => cur }).tail
+    val publishes = for {
+      ((line, in), i) <- lines.zip(owner).zipWithIndex
+      if !line.trim.startsWith("*") && !Set("transact", "cloneTable").contains(in)
+      if call.findFirstIn(literal.replaceAllIn(line, "\"\"").replaceAll("//.*$", "")).isDefined
+    } yield s"$file:${i + 1}: ${line.trim}"
+    val knobs = for {
+      f <- java.nio.file.Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("maxAttempts")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(publishes.isEmpty,
+      "publish outside transact/cloneTable — commit through transact:\n" + publishes.mkString("\n"))
+    assert(knobs.isEmpty, "maxAttempts in src/main — the retry bound is one constant:\n" +
+      knobs.mkString("\n"))
+  }
+}
+
+/** A [[Versioned]] whose publish loses on demand: a set `racer` runs once,
+  * just before the next publish, so a competing commit lands first;
+  * `alwaysLose` makes every publish report a loss. */
+private class LosingVersioned(spark: org.apache.spark.sql.SparkSession, root: String)
+    extends Versioned(spark, root) {
+  var racer: Option[() => Unit] = None
+  var alwaysLose = false
+  var publishCalls = 0
+  override private[io] def publish(table: String, v: Long, lines: Seq[String]): Boolean = {
+    publishCalls += 1
+    racer.foreach { r => racer = None; r() }
+    !alwaysLose && super.publish(table, v, lines)
   }
 }

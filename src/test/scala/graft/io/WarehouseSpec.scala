@@ -38,7 +38,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("read after write uses the written schema, without an inference job") {
-    val wh = new Warehouse(spark, java.nio.file.Files.createTempDirectory("graft_whs_").toString)
+    val wh = new Warehouse(spark, SparkSpec.scratchDir("graft_whs_"))
     wh.write("t", Seq((1L, "a", Option(2.5)), (2L, "b", None)).toDF("k", "v", "x"))
     val inferred = spark.read.parquet(wh.path("t")).schema
     var schema = inferred

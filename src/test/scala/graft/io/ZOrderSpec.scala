@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 class ZOrderSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpRoot = java.nio.file.Files.createTempDirectory("graft_zo").toString
+  private def tmpRoot = SparkSpec.scratchDir("graft_zo")
 
   test("interleaveBits: exact Morton values on known bit patterns") {
     // x=0b11, y=0b01, 2 bits: z bits are (y1 x1 y0 x0) = (0 1 1 1) = 7

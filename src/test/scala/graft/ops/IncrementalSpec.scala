@@ -33,7 +33,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("changesWithImages feed refreshes a view to the recomputed truth") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivm_spec").toString
+    val dir = SparkSpec.scratchDir("graft_ivm_spec")
     val vt = new graft.io.Versioned(spark, dir)
     val v1 = Seq((1L, 10L, 5L), (2L, 10L, 6L), (3L, 20L, 7L), (4L, 20L, 8L))
       .toDF("k", "grp", "cents")
@@ -56,7 +56,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("changesWithImages emits both images with correct null arms") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cwi_spec").toString
+    val dir = SparkSpec.scratchDir("graft_cwi_spec")
     val vt = new graft.io.Versioned(spark, dir)
     vt.commit("t", Seq((1L, 10L), (2L, 20L)).toDF("k", "v"))
     vt.commit("t", Seq((2L, 21L), (3L, 30L)).toDF("k", "v"))

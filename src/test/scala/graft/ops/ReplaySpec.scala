@@ -43,7 +43,7 @@ class ReplaySpec extends SparkSpec {
     * that snapshot rows before appending to the tables they anti-join). */
   private def ingestRows(): Seq[String] = {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_replay_ingest").toString
+    val root = SparkSpec.scratchDir("graft_replay_ingest")
     val wh = new graft.io.Warehouse(spark, s"$root/wh")
     val texts = Seq(
       "the quick brown fox jumps over the lazy dog while the rain falls softly on the quiet village roofs tonight",
@@ -111,7 +111,7 @@ class ReplaySpec extends SparkSpec {
   }
 
   test("reliable mode checkpoints to the configured dir and matches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_replay_ck").toString
+    val dir = SparkSpec.scratchDir("graft_replay_ck")
     withDir(dir) {
       for ((name, rows) <- inputs) {
         val base = withMode(None)(rows())
@@ -122,7 +122,7 @@ class ReplaySpec extends SparkSpec {
 
   test("reliable mode reuses one checkpoint subdirectory under an unqualified dir") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_replay_one").toString
+    val dir = SparkSpec.scratchDir("graft_replay_one")
     withDir(dir)(withMode(Some("reliable")) {
       for (i <- 1 to 2) assert(Replay.stable(Seq(i.toLong).toDF("k")).count() === 1L)
     })
@@ -175,7 +175,7 @@ class ReplaySpec extends SparkSpec {
   }
 
   test("a boundary read by two actions evaluates its subtree once under local and reliable") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_replay_evals").toString
+    val dir = SparkSpec.scratchDir("graft_replay_evals")
     withDir(dir) {
       for (m <- Seq("local", "reliable")) withMode(Some(m)) {
         val evals = spark.sparkContext.longAccumulator(s"replay_evals_$m")

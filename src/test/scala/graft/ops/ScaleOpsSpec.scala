@@ -76,7 +76,7 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("partitioned write: dynamic overwrite touches only the written partitions; reads prune") {
-    val root = java.nio.file.Files.createTempDirectory("graft_part_").toString
+    val root = SparkSpec.scratchDir("graft_part_")
     val wh = new Warehouse(spark, root)
     val v1 = Seq(("2024-06-01", 1L, "a"), ("2024-06-02", 2L, "b"))
       .toDF("day", "id", "v")
@@ -95,7 +95,7 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("Warehouse.write survives a crash between swap renames (old snapshot recoverable)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_swap_").toString
+    val root = SparkSpec.scratchDir("graft_swap_")
     val wh = new Warehouse(spark, root)
     wh.write("t", Seq((1L, "v1")).toDF("id", "v"))
     // self-overwrite (S8): the new snapshot is computed FROM the table itself
@@ -116,7 +116,7 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("Warehouse.merge upserts: updates replace, unmatched survive, new keys insert") {
-    val root = java.nio.file.Files.createTempDirectory("graft_merge_").toString
+    val root = SparkSpec.scratchDir("graft_merge_")
     val wh = new Warehouse(spark, root)
     wh.merge("t", Seq((1L, "a"), (2L, "b")).toDF("k", "v"), Seq("k")) // creates
     wh.merge("t", Seq((2L, "b2"), (3L, "c")).toDF("k", "v"), Seq("k"))
@@ -125,7 +125,7 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("compact: rewrites many small files into the target count, values untouched") {
-    val root = java.nio.file.Files.createTempDirectory("graft_cmp_").toString
+    val root = SparkSpec.scratchDir("graft_cmp_")
     val wh = new Warehouse(spark, root)
     val o = spark.read.parquet(s"$sfDir/orders.parquet")
     // simulate incremental-append fragmentation: many tiny files
@@ -140,7 +140,7 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("writeSorted: shards cover disjoint ascending ranges, each internally sorted") {
-    val root = java.nio.file.Files.createTempDirectory("graft_srt_").toString
+    val root = SparkSpec.scratchDir("graft_srt_")
     val wh = new Warehouse(spark, root)
     val o = spark.read.parquet(s"$sfDir/orders.parquet")
     wh.writeSorted("orders_sorted", o, Seq("o_orderkey"), files = 4)
@@ -162,7 +162,7 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("bucketed tables join without a shuffle exchange") {
-    val root = java.nio.file.Files.createTempDirectory("graft_bkt_").toString
+    val root = SparkSpec.scratchDir("graft_bkt_")
     val wh = new Warehouse(spark, root)
     val o = spark.read.parquet(s"$sfDir/orders.parquet")
     val c = spark.read.parquet(s"$sfDir/customer.parquet")

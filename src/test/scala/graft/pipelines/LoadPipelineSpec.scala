@@ -13,7 +13,7 @@ class LoadPipelineSpec extends SparkSpec {
   import spark.implicits._
 
   test("load pipeline: stringify path round-trips types, dedups, renormalizes None") {
-    val lake = java.nio.file.Files.createTempDirectory("graft_lake_").toString
+    val lake = SparkSpec.scratchDir("graft_lake_")
     // typed MMD extract files (two files -> bag union), with a duplicate row
     // and a null that pandas' astype(str) would have turned into "None"
     Seq((1L, Option(65.5), Option("2024-05-25")), (2L, None, None))
@@ -28,7 +28,7 @@ class LoadPipelineSpec extends SparkSpec {
     Seq(("1", "H1")).toDF("SiteCode", "CccNumber").write.parquet(s"$lake/hts")
     Seq(("1", "F1")).toDF("MFL_code", "Facilty_Name").write.parquet(s"$lake/covid")
 
-    val wh = new Warehouse(spark, java.nio.file.Files.createTempDirectory("graft_wh2_").toString)
+    val wh = new Warehouse(spark, SparkSpec.scratchDir("graft_wh2_"))
     val load = LoadPipeline.pipeline(Map(
       "mmd" -> s"$lake/mmd/*", "vls" -> s"$lake/vls",
       "hts" -> s"$lake/hts", "covid" -> s"$lake/covid"))
@@ -46,7 +46,7 @@ class LoadPipelineSpec extends SparkSpec {
   }
 
   test("runAllParallel executes independent pipelines concurrently after their dep") {
-    val wh = new Warehouse(spark, java.nio.file.Files.createTempDirectory("graft_wh3_").toString)
+    val wh = new Warehouse(spark, SparkSpec.scratchDir("graft_wh3_"))
     val order = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
     // under dataflow a stage waits for the writers of the tables it reads
     def stage(pipe: String, reads: String*) = Stage(s"s_$pipe", s"t_$pipe", (s, w) => {

@@ -34,7 +34,7 @@ class PipelineGoldenSpec extends SparkSpec {
 
   /** A fresh warehouse holding the dims and the four staging tables. */
   private def staged(): Warehouse = {
-    val root = java.nio.file.Files.createTempDirectory("graft_wh_").toString
+    val root = SparkSpec.scratchDir("graft_wh_")
     val w = new Warehouse(spark, root)
 
     w.write("MFL_Codes", mk(Schemas.mflCodes, Seq(
@@ -208,7 +208,7 @@ class PipelineGoldenSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val metrics = scala.collection.mutable.ArrayBuffer[StageMetrics]()
     val whm = new graft.io.Warehouse(spark,
-      java.nio.file.Files.createTempDirectory("graft_whm_").toString)
+      SparkSpec.scratchDir("graft_whm_"))
     val r = new Runner(spark, whm, onMetrics = metrics += _)
     val st = Stage("load_customers", "cust", (s, _) =>
         graft.Tables.customer(s, sfDir).select(col("c_custkey"), col("c_name"), col("c_mktsegment")),

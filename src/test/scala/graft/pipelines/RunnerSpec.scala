@@ -17,7 +17,7 @@ class RunnerSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpWarehouse() =
-    new Warehouse(spark, java.nio.file.Files.createTempDirectory("graft_runner_").toString)
+    new Warehouse(spark, SparkSpec.scratchDir("graft_runner_"))
 
   /** The benchmark's DAG: the lake load plus both dims, then the chains. */
   private val referencePlan = {

@@ -10,8 +10,8 @@ import graft.SparkSpec
 class MvRewriteSpec extends SparkSpec {
   import spark.implicits._
 
-  private val baseDir = java.nio.file.Files.createTempDirectory("graft-mv-base").toString
-  private val mvDir = java.nio.file.Files.createTempDirectory("graft-mv-data").toString
+  private val baseDir = SparkSpec.scratchDir("graft-mv-base")
+  private val mvDir = SparkSpec.scratchDir("graft-mv-data")
 
   // deterministic base: 3 flags × 2 statuses × values with nulls
   (1 to 600).map { i =>
@@ -74,8 +74,8 @@ class MvRewriteSpec extends SparkSpec {
 
   test("all-null groups roll up null sums and zero counts exactly") {
     // a base where one whole MV group has only null qty
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-mv-b2").toString
-    val mv2 = java.nio.file.Files.createTempDirectory("graft-mv-d2").toString
+    val dir2 = SparkSpec.scratchDir("graft-mv-b2")
+    val mv2 = SparkSpec.scratchDir("graft-mv-d2")
     Seq(("a", Some(1L)), ("a", Some(2L)), ("b", Option.empty[Long]))
       .toDF("g", "x").write.mode("overwrite").parquet(dir2)
     val b2 = spark.read.parquet(dir2)

@@ -14,7 +14,7 @@ class CorpusIngestSpec extends SparkSpec {
     StructField("n_chars", LongType)))
 
   test("composed ingestion: quality gate + dedup + quarantine, idempotent across drains") {
-    val root = java.nio.file.Files.createTempDirectory("corpus_ingest").toString
+    val root = SparkSpec.scratchDir("corpus_ingest")
     val wh = new Warehouse(spark, s"$root/wh")
     val ck1 = s"$root/ck1"
 
@@ -53,7 +53,7 @@ class CorpusIngestSpec extends SparkSpec {
 
   test("near-dup gate: a paraphrased re-delivery is quarantined, a fresh doc passes") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("corpus_neardup").toString
+    val root = SparkSpec.scratchDir("corpus_neardup")
     val wh = new Warehouse(spark, s"$root/wh")
     def writeDocs(dir: String, docs: Seq[(Long, String)]): Unit =
       docs.map { case (id, t) => (id, t, "en", "web", t.length.toLong) }
@@ -91,7 +91,7 @@ class CorpusIngestSpec extends SparkSpec {
 
   test("in-batch near-dups: two paraphrases arriving TOGETHER — one accepted, one quarantined") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("corpus_inbatch").toString
+    val root = SparkSpec.scratchDir("corpus_inbatch")
     val wh = new Warehouse(spark, s"$root/wh")
     def writeDocs(dir: String, docs: Seq[(Long, String)]): Unit =
       docs.map { case (id, t) => (id, t, "en", "web", t.length.toLong) }
@@ -129,7 +129,7 @@ class CorpusIngestSpec extends SparkSpec {
 
   test("quarantine: a NEW doc sharing fp+reason with an earlier reject still lands; replays don't") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("corpus_rejkey").toString
+    val root = SparkSpec.scratchDir("corpus_rejkey")
     val wh = new Warehouse(spark, s"$root/wh")
     def writeDocs(dir: String, docs: Seq[(Long, String)]): Unit =
       docs.map { case (id, t) => (id, t, "en", "web", t.length.toLong) }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class EventIngestSpec extends SparkSpec {
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString
+    SparkSpec.scratchDir(name)
 
   private def writeEvents(dir: String, lines: Seq[String], file: String = "e1.json"): Unit =
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, file),

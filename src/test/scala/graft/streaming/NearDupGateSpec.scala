@@ -17,8 +17,8 @@ class NearDupGateSpec extends SparkSpec {
       .write.mode("append").parquet(dir) // append = new file per batch
 
   test("two drains: batch 2 gated against batch 1's index; smaller id takes the bucket") {
-    val in = java.nio.file.Files.createTempDirectory("gate_in_").toString
-    val cp = java.nio.file.Files.createTempDirectory("gate_cp_").toString
+    val in = SparkSpec.scratchDir("gate_in_")
+    val cp = SparkSpec.scratchDir("gate_cp_")
     val textA = "the quick brown fox jumps over the lazy dog again and again"
     val textB = "a completely different document about spark shuffles and joins"
     writeDocs(in, "b1", Seq(10L -> textA, 11L -> textB))
@@ -43,7 +43,7 @@ class NearDupGateSpec extends SparkSpec {
   }
 
   test("order-free within a batch: keeper is the min id regardless of arrival") {
-    val in = java.nio.file.Files.createTempDirectory("gate_of_").toString
+    val in = SparkSpec.scratchDir("gate_of_")
     val text = "one two three four five six seven eight nine ten eleven twelve"
     // ids deliberately written descending — min-keeper must still win
     writeDocs(in, "b1", Seq(99L -> text, 50L -> text, 7L -> text))

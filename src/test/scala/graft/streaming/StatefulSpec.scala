@@ -29,7 +29,7 @@ class StatefulSpec extends SparkSpec {
     // watermark = 100s − 10s delay = 90s. This pins Spark's non-strict
     // (deadline <= watermark) expiry, which the q156 oracle mirrors with `<=`.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("timer_edge").toString
+    val dir = SparkSpec.scratchDir("timer_edge")
     Seq(
       (1L, 100_000_000L), // user 1: defines max event time = 100s
       (7L, 80_000_000L), (7L, 85_000_000L) // user 7: one session, ends 85s
@@ -56,7 +56,7 @@ class StatefulSpec extends SparkSpec {
     // session — session_start must become 95s, the math.min rule the
     // batch sessionizer applies (without it the start stays 100s)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("timer_late").toString
+    val dir = SparkSpec.scratchDir("timer_late")
     def writeFile(sub: String, rows: Seq[(Long, Long)], mtime: Long): Unit = {
       val p = s"$dir/$sub"
       rows.toDF("user_id", "ts_us")
